@@ -6,21 +6,40 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * driver program, no process/network hops; SURVEY §3.1).
   *
   * The reference's 5-step shell pipeline (createdb → DDL → pandas load →
-  * transform → views) collapses to: read 2 CSVs → build 6 lazy DataFrames →
-  * register temp views. Stage boundaries exist only at shuffles; Catalyst
-  * plans each downstream action end-to-end (views inline into the
-  * LogicalPlan exactly like Postgres view rewriting, §3.2).
+  * transform → views) collapses to: parse 2 CSVs into staging → land the
+  * 6 star tables once → register temp views. The tables land like the
+  * reference's INSERT…SELECT; the three KPI views stay unmaterialized and
+  * Catalyst plans each downstream action over the landed tables
+  * (views inline into the LogicalPlan like Postgres view rewriting, §3.2).
   */
 object Pipeline {
 
   val DefaultRawDir = "/root/reference/data/raw"
 
-  /** Build the star schema and register all warehouse + view temp views.
-    * Views are registered as builder results — like the reference's
-    * non-materialized views they re-derive per query; callers wanting
-    * reuse across many queries can .cache() the Star frames. */
+  /** Build the star once (reference: 02_load_csv.py → 03_transform.sql).
+    * Each raw CSV is parsed once into a staging frame, the four dims
+    * derive from staging, the two facts from the landed dims. Every table
+    * lands with an eager localCheckpoint (GC-scoped blocks, freed once the
+    * Star is unreachable), so the surfaces over it stop re-parsing the
+    * CSVs and re-deriving the dims per query. Every call re-reads the
+    * files — nothing is reused across calls. */
+  def build(spark: SparkSession, rawDir: String = DefaultRawDir): Warehouse.Star = {
+    val tx = Ingest.transactions(spark, rawDir).localCheckpoint()
+    val spend = Ingest.spend(spark, rawDir).localCheckpoint()
+    val dd = Warehouse.dimDate(tx).localCheckpoint()
+    val dp = Warehouse.dimProducts(tx).localCheckpoint()
+    val dcamp = Warehouse.dimCampaigns(tx).localCheckpoint()
+    Warehouse.Star(dd, Warehouse.dimCustomers(tx).localCheckpoint(), dp, dcamp,
+      Warehouse.factSales(tx, dd, dp, dcamp).localCheckpoint(),
+      Warehouse.factSpend(spend, dd, dcamp).localCheckpoint())
+  }
+
+  /** Build the star and register all warehouse + view temp views. The
+    * views are registered as builder results — like the reference's
+    * non-materialized views they re-derive per query, over the landed
+    * tables. */
   def run(spark: SparkSession, rawDir: String = DefaultRawDir): Warehouse.Star = {
-    val star = Warehouse.fromRawDir(spark, rawDir)
+    val star = build(spark, rawDir)
     star.registerTempViews()
     KpiViews.channelDaily(star).createOrReplaceTempView("mv_channel_daily")
     KpiViews.kpiChannel(star).createOrReplaceTempView("mv_kpi_channel")

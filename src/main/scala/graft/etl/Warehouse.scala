@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.StringType
   */
 object Warehouse {
 
-  /** All six warehouse tables, built lazily from the two raw frames. */
+  /** All six warehouse tables (landed once per run by `Pipeline.build`). */
   final case class Star(
       dimDate: DataFrame, dimCustomers: DataFrame, dimProducts: DataFrame,
       dimCampaigns: DataFrame, factSales: DataFrame, factSpend: DataFrame) {
@@ -168,19 +168,4 @@ object Warehouse {
           .when(month(col("date")).between(6, 9), "Rainy")
           .otherwise("Cool"))
   }
-
-  /** Full transform: raw frames → star schema. */
-  def build(tx: DataFrame, spend: DataFrame): Star = {
-    val dd = dimDate(tx)
-    val dc = dimCustomers(tx)
-    val dp = dimProducts(tx)
-    val dcamp = dimCampaigns(tx)
-    Star(dd, dc, dp, dcamp,
-      factSales(tx, dd, dp, dcamp),
-      factSpend(spend, dd, dcamp))
-  }
-
-  /** End-to-end: raw CSV dir → star schema (Pipeline entry). */
-  def fromRawDir(spark: SparkSession, rawDir: String): Star =
-    build(Ingest.transactions(spark, rawDir), Ingest.spend(spark, rawDir))
 }

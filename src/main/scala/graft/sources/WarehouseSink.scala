@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.etl.Warehouse
+import graft.etl.{Pipeline, Warehouse}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +68,7 @@ object WarehouseSink {
     val out = s"${sys.props("java.io.tmpdir")}/graft_warehouse/" +
       spark.sparkContext.applicationId
     StaleOutputs.sweep("graft_warehouse", spark.sparkContext.applicationId)
-    write(Warehouse.fromRawDir(spark, graft.etl.Pipeline.DefaultRawDir), out)
+    write(Pipeline.build(spark), out)
     val star = read(spark, out)
     star.factSales
       .join(broadcast(star.dimProducts.select("product_id", "item_name", "category")),

@@ -23,7 +23,6 @@ class GoldenPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     star = Pipeline.run(spark)
-    star.dimDate.cache(); star.factSales.cache(); star.factSpend.cache()
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -28,6 +28,9 @@ OPENS="$OPENS --add-opens java.base/sun.nio.ch=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.nio.cs=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.security.action=ALL-UNNAMED"
 OPENS="$OPENS --add-opens java.base/sun.util.calendar=ALL-UNNAMED"
-exec java $OPENS -Xmx"${SPARK_DRIVER_MEM:-32g}" \
+# Driver heap: SPARK_DRIVER_MEM when set, else half of MemTotal clamped to
+# 2-8 GiB, as build.sbt and perfbench/run.py size it.
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+exec java $OPENS -Xmx"$MEM" \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" "$@"
