@@ -343,33 +343,39 @@ object SparkEntry {
       ((s: SparkSession, d: String) => graft.ops.Multimodal.mediaSqSearch(s, d)),
     // S2 sink round trip — ref_-prefixed (reads the fixed-size reference
     // CSVs, ignores sfDir) so the bench suite stays sf-parameterized
-    "ref_warehouse_roundtrip" ->
-      ((s: SparkSession, _: String) => graft.sources.WarehouseSink.roundTrip(s)),
+    "ref_warehouse_roundtrip" -> ((s: SparkSession, _: String) =>
+      graft.sources.WarehouseSink.roundTrip(s, Pipeline.rawDir(s))),
   ) ++ refCatalog
 
+  /** Built-star catalogs memoized PER (session, raw dir) (same discipline
+    * as Dedup.shingleCache): a catalog's DataFrames are bound to the
+    * session that built them, so a process that stops its session and
+    * starts a new one must get a fresh catalog, not dead plans; and a
+    * catalog built over one raw dir is never served for another. Stopped
+    * sessions' entries are purged on every access. */
+  private val refCatalogCache = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), Map[String, () => DataFrame]]
+
+  private def catalogFor(spark: SparkSession): Map[String, () => DataFrame] = {
+    refCatalogCache.keys.filter(_._1.sparkContext.isStopped)
+      .foreach(refCatalogCache.remove)
+    val raw = Pipeline.rawDir(spark)
+    refCatalogCache.getOrElseUpdate((spark, raw),
+      Pipeline.queryCatalog(Pipeline.run(spark, raw), raw))
+  }
+
   /** The full reference-parity surface (marketing star schema → KPI views →
-    * Q0–Q9) run on the reference's own CSVs; sfDir is ignored. Each surface
-    * is hash-verified against a self-contained DuckDB oracle that rebuilds
-    * the star schema from the same raw CSVs ([[graft.etl.RefOracles]]);
-    * golden value assertions additionally live in GoldenPipelineSpec.
+    * Q0–Q9) run on the reference's raw CSVs; sfDir is ignored. The raw dir
+    * is the session's [[graft.etl.Pipeline.rawDir]]: the conf
+    * `spark.graft.refRawDir` when set (tests point it at a generated §A
+    * corpus), else the reference checkout. Each surface is hash-verified
+    * against a self-contained DuckDB oracle that rebuilds the star schema
+    * from the reference's raw CSVs ([[graft.etl.RefOracles]]); golden
+    * value assertions additionally live in GoldenPipelineSpec.
     * q6_spend_waste ships as its `_active` variant: the reference's literal
     * thresholds legitimately select 0 rows (SURVEY §0.2-7, would trip the
     * driver's rows>0 check), so the driver entry uses fan-out-scaled
     * thresholds that exercise the identical plan shape. */
-  /** Built-star catalogs memoized PER SESSION (same discipline as
-    * Dedup.shingleCache): a catalog's DataFrames are bound to the session
-    * that built them, so a process that stops its session and starts a new
-    * one must get a fresh catalog, not dead plans. Stopped sessions' entries
-    * are purged on every access. */
-  private val refCatalogCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, Map[String, () => DataFrame]]
-
-  private def catalogFor(spark: SparkSession): Map[String, () => DataFrame] = {
-    refCatalogCache.keys.filter(_.sparkContext.isStopped)
-      .foreach(refCatalogCache.remove)
-    refCatalogCache.getOrElseUpdate(spark, Pipeline.queryCatalog(Pipeline.run(spark)))
-  }
-
   private def refCatalog: Map[String, (SparkSession, String) => DataFrame] = {
     val names = Seq("mv_channel_daily", "mv_channel_daily_incr",
       "mv_kpi_channel", "mv_kpi_campaign", "promo_enrichment",

@@ -11,10 +11,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * reference's INSERT…SELECT; the three KPI views stay unmaterialized and
   * Catalyst plans each downstream action over the landed tables
   * (views inline into the LogicalPlan like Postgres view rewriting, §3.2).
+  *
+  * The raw dir defaults to the reference checkout ([[DefaultRawDir]]). The
+  * registered `ref_*` surfaces, which ignore their sfDir, read it from the
+  * session conf [[RawDirConf]] instead ([[rawDir]]); SparkConf also picks
+  * the key up as the JVM property `-Dspark.graft.refRawDir`.
   */
 object Pipeline {
 
   val DefaultRawDir = "/root/reference/data/raw"
+
+  /** Session conf key naming the raw dir the `ref_*` surfaces read. */
+  val RawDirConf = "spark.graft.refRawDir"
+
+  /** The session's raw dir: [[RawDirConf]] when set, else [[DefaultRawDir]]. */
+  def rawDir(spark: SparkSession): String =
+    spark.conf.getOption(RawDirConf).getOrElse(DefaultRawDir)
 
   /** Build the star once (reference: 02_load_csv.py → 03_transform.sql).
     * Each raw CSV is parsed once into a staging frame, the four dims

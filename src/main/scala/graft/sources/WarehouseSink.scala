@@ -63,12 +63,14 @@ object WarehouseSink {
     * deterministic column round-trips.
     *
     * Output path carries the applicationId (same concurrency contract as
-    * JsonlCorpus.roundTrip). sfDir is ignored, like every ref_* surface. */
-  def roundTrip(spark: SparkSession): DataFrame = {
+    * JsonlCorpus.roundTrip). sfDir is ignored, like every ref_* surface;
+    * the registered entry passes the session's [[Pipeline.rawDir]]. */
+  def roundTrip(spark: SparkSession,
+                rawDir: String = Pipeline.DefaultRawDir): DataFrame = {
     val out = s"${sys.props("java.io.tmpdir")}/graft_warehouse/" +
       spark.sparkContext.applicationId
     StaleOutputs.sweep("graft_warehouse", spark.sparkContext.applicationId)
-    write(Pipeline.build(spark), out)
+    write(Pipeline.build(spark, rawDir), out)
     val star = read(spark, out)
     star.factSales
       .join(broadcast(star.dimProducts.select("product_id", "item_name", "category")),

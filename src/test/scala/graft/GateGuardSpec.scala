@@ -1,5 +1,6 @@
 package graft
 
+import graft.etl.{Pipeline, RefFixture}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,6 +28,7 @@ class GateGuardSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Pipeline.RawDirConf, RefFixture.rawDir)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }

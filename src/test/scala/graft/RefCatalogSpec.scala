@@ -1,5 +1,6 @@
 package graft
 
+import graft.etl.{Pipeline, RefFixture}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * built catalog — not dead plans from the stopped one. This spec is the
   * regression guard: the same ref query runs under two SEQUENTIAL sessions
   * (the first stopped before the second starts) and both must succeed with
-  * identical results. */
+  * identical results. Both sessions read the generated §A corpus
+  * ([[graft.etl.RefFixture]]) through the `spark.graft.refRawDir` session
+  * conf, so the spec needs no reference checkout. */
 class RefCatalogSpec extends AnyFunSuite {
 
   private def newSession(): SparkSession = {
@@ -18,6 +21,7 @@ class RefCatalogSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(Pipeline.RawDirConf, RefFixture.rawDir)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.etl.{AnalyticsQueries, Pipeline, Warehouse}
+import graft.etl.{AnalyticsQueries, Pipeline, RefFixture, Warehouse}
 import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -21,7 +21,7 @@ class WarehouseSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     outDir = Files.createTempDirectory("graft_wh").toString
-    WarehouseSink.write(Pipeline.run(spark), outDir)
+    WarehouseSink.write(Pipeline.run(spark, RefFixture.rawDir), outDir)
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -39,7 +39,7 @@ class WarehouseSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("queries over the persisted star match the in-memory pipeline") {
     val back = WarehouseSink.read(spark, outDir)
     val persisted = AnalyticsQueries.q1BestSellers(back).collect().map(_.toString).toSeq
-    val inMemory = AnalyticsQueries.q1BestSellers(Pipeline.run(spark)).collect().map(_.toString).toSeq
+    val inMemory = AnalyticsQueries.q1BestSellers(Pipeline.run(spark, RefFixture.rawDir)).collect().map(_.toString).toSeq
     assert(persisted === inMemory)
   }
 
