@@ -5,13 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** The three KPI views (reference: etl_script/04_views.sql).
   *
-  * Structure preserved from the reference: pre-aggregate BOTH facts to the
-  * (date_id, campaign_id) grain FIRST, then FULL OUTER merge + COALESCE
-  * zeros (04_views.sql:17-46). The pre-agg is load-bearing for correctness
-  * (without it the merge double-counts — SURVEY §7.5-2) and for scale (the
-  * shuffled rows are date×campaign grains, not raw facts; both sides then
-  * share hash partitioning on the same key, so the full-outer join
-  * colocates without an extra exchange).
+  * The reference pre-aggregates both facts to the (date_id, campaign_id)
+  * grain, FULL OUTER merges them with COALESCE zeros, then rolls the merge
+  * up (04_views.sql:17-46). Here each view is one aggregate over the two
+  * facts union-all'd at row grain, each side's missing measures typed
+  * NULLs that COALESCE turns into the reference's zeros. The union has no
+  * join, so there is no fan-out for a pre-aggregate to guard against
+  * (SURVEY §7.5-2), and the view's own grouping is its only exchange.
+  * `orders` is `count(sale_id)`: sale_id is unique per sales row
+  * (StarBuildSpec pins it over a multi-partition CSV) and NULL on spend
+  * rows, so it equals the reference's COUNT(DISTINCT sale_id).
   *
   * KPI formulas (04_views.sql:114-142): aov revenue/orders, ctr
   * clicks/impressions, roas revenue/spend, profit_roas (revenue-cost)/spend,
@@ -33,49 +36,46 @@ object KpiViews {
   // the DuckDB oracle's — match bitwise regardless of partitioning. See
   // queries/Relational.scala q05 for the original derivation.
   private val dec = "decimal(18,6)"
-  private def spendExact: Column = sum(col("spend").cast(dec)).cast("double")
 
-  /** fs_agg ⟗ sp_agg at (date_id, campaign_id) grain with COALESCE zeros
-    * (04_views.sql:17-46) — shared by all three views. */
-  def merged(star: Warehouse.Star): DataFrame = {
-    val fsAgg = star.factSales
-      .groupBy("date_id", "campaign_id")
-      .agg(
-        sum("revenue").as("revenue"),
-        sum("cost").as("cost"),
-        countDistinct("sale_id").as("orders"))
-    val spAgg = star.factSpend
-      .groupBy("date_id", "campaign_id")
-      .agg(
-        sum("spend").as("spend"),
-        sum("clicks").as("clicks"),
-        sum("impressions").as("impressions"))
-    fsAgg.join(spAgg, Seq("date_id", "campaign_id"), "full_outer")
-      .select(
-        col("date_id"), col("campaign_id"),
-        coalesce(col("revenue"), lit(0.0)).as("revenue"),
-        coalesce(col("cost"), lit(0.0)).as("cost"),
-        coalesce(col("orders"), lit(0L)).as("orders"),
-        coalesce(col("spend"), lit(0.0)).as("spend"),
-        coalesce(col("clicks"), lit(0L)).as("clicks"),
-        coalesce(col("impressions"), lit(0L)).as("impressions"))
+  /** Both facts at row grain, union-all'd; each side's missing measures
+    * are typed NULLs. */
+  private def facts(star: Warehouse.Star): DataFrame = {
+    def none(t: String): Column = lit(null).cast(t)
+    star.factSales.select(col("date_id"), col("campaign_id"), col("sale_id"),
+        col("revenue"), col("cost"),
+        none("double").as("spend"), none("long").as("clicks"), none("long").as("impressions"))
+      .unionByName(star.factSpend.select(col("date_id"), col("campaign_id"),
+        none("long").as("sale_id"), none("double").as("revenue"), none("double").as("cost"),
+        col("spend"), col("clicks"), col("impressions")))
   }
+
+  /** [[facts]] left-joined to their campaign's `campaignCols`. */
+  private def factsByCampaign(star: Warehouse.Star, campaignCols: String*): DataFrame =
+    facts(star).join(broadcast(star.dimCampaigns.select("campaign_id", campaignCols: _*)),
+      Seq("campaign_id"), "left")
+
+  // the zero-filled sums every view reports
+  private val revenue = coalesce(sum("revenue"), lit(0.0))
+  private val cost = coalesce(sum("cost"), lit(0.0))
+  private val spendDec = coalesce(sum(col("spend").cast(dec)), lit(0).cast(dec))
+  private val clicks = coalesce(sum("clicks"), lit(0L))
+  private val impressions = coalesce(sum("impressions"), lit(0L))
+  private val orders = count("sale_id")
+  private val ctr = round(clicks.cast("double") / nullifZero(impressions), 6)
 
   /** mv_channel_daily (04_views.sql:16-64): date × channel daily rollup. */
   def channelDaily(star: Warehouse.Star): DataFrame =
-    merged(star)
-      .join(broadcast(star.dimCampaigns.select("campaign_id", "channel")),
-        Seq("campaign_id"), "left")
+    factsByCampaign(star, "channel")
       .join(broadcast(star.dimDate.select("date_id", "date")), Seq("date_id"))
       .groupBy("date", "channel")
       .agg(
-        sum("revenue").as("revenue"),
-        sum("cost").as("cost"),
-        round(sum(col("spend").cast(dec)), 2).cast("double").as("spend"),
-        sum("clicks").as("clicks"),
-        sum("impressions").as("impressions"),
-        round(sum("clicks").cast("double") / nullifZero(sum("impressions")), 6).as("ctr"),
-        sum("orders").as("orders"))
+        revenue.as("revenue"),
+        cost.as("cost"),
+        round(spendDec, 2).cast("double").as("spend"),
+        clicks.as("clicks"),
+        impressions.as("impressions"),
+        ctr.as("ctr"),
+        orders.as("orders"))
       .orderBy("date", "channel")
 
   /** Partition-incremental refresh of [[channelDaily]] — the 100 TB
@@ -105,34 +105,34 @@ object KpiViews {
       .orderBy("date", "channel")
   }
 
-  private def kpiCols: Seq[Column] = Seq(
-    sum(col("revenue")).as("revenue"),
-    sum(col("cost")).as("cost"),
-    round(sum(col("spend").cast(dec)), 2).cast("double").as("spend"),
-    sum(col("revenue") - col("cost")).as("gross_profit"),
-    sum(col("clicks")).as("clicks"),
-    sum(col("impressions")).as("impressions"),
-    sum(col("orders")).as("orders"),
-    round(sum(col("revenue")) / nullifZero(sum(col("orders"))), 4).as("aov"),
-    round(sum(col("clicks")).cast("double") / nullifZero(sum(col("impressions"))), 6).as("ctr"),
-    round(sum(col("revenue")) / nullifZero(spendExact), 4).as("roas"),
-    round((sum(col("revenue")) - sum(col("cost"))) / nullifZero(spendExact), 4).as("profit_roas"),
-    round((sum(col("revenue")) - spendExact) / nullifZero(spendExact), 4).as("roi"),
-    round((sum(col("revenue")) - sum(col("cost")) - spendExact) / nullifZero(spendExact), 4).as("profit_roi"))
+  private def kpiCols: Seq[Column] = {
+    val spend = spendDec.cast("double")
+    Seq(
+      revenue.as("revenue"),
+      cost.as("cost"),
+      round(spendDec, 2).cast("double").as("spend"),
+      coalesce(sum(col("revenue") - col("cost")), lit(0.0)).as("gross_profit"),
+      clicks.as("clicks"),
+      impressions.as("impressions"),
+      orders.as("orders"),
+      round(revenue / nullifZero(orders), 4).as("aov"),
+      ctr.as("ctr"),
+      round(revenue / nullifZero(spend), 4).as("roas"),
+      round((revenue - cost) / nullifZero(spend), 4).as("profit_roas"),
+      round((revenue - spend) / nullifZero(spend), 4).as("roi"),
+      round((revenue - cost - spend) / nullifZero(spend), 4).as("profit_roi"))
+  }
 
   /** mv_kpi_channel (04_views.sql:70-147). */
   def kpiChannel(star: Warehouse.Star): DataFrame =
-    merged(star)
-      .join(broadcast(star.dimCampaigns.select("campaign_id", "channel")),
-        Seq("campaign_id"), "left")
+    factsByCampaign(star, "channel")
       .groupBy("channel")
       .agg(kpiCols.head, kpiCols.tail: _*)
       .orderBy("channel")
 
   /** mv_kpi_campaign (04_views.sql:153-232). */
   def kpiCampaign(star: Warehouse.Star): DataFrame =
-    merged(star)
-      .join(broadcast(star.dimCampaigns), Seq("campaign_id"), "left")
+    factsByCampaign(star, "campaign_name", "channel")
       .groupBy("campaign_id", "campaign_name", "channel")
       .agg(kpiCols.head, kpiCols.tail: _*)
       .orderBy("campaign_id")

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
   * SURVEY §2.1) re-expressed as partitioned Parquet — the lakehouse form.
   *
   * Layout decisions for 100 TB:
-  *  - Facts are partitioned by calendar date (derived `dt` column): a
-  *    nightly incremental load writes only the new date directory, and any
+  *  - Facts are partitioned by calendar date (derived `dt` column): any
   *    date-ranged query prunes to the matching partitions (visible as
   *    PartitionFilters in the scan — tested by WarehouseSinkSpec).
+  *    [[write]] overwrites each table whole.
   *  - Dimensions are single unpartitioned tables (dimension-sized by
   *    definition; partitioning them would just make small files).
   *  - `maxRecordsPerFile` caps file size so a skewed load day cannot

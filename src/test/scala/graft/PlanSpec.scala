@@ -569,14 +569,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
        "no exchange beyond fan-out + presentation sort") {
     val p = plan("m11_audio_meta")
     // one documents scan; Exchange budget = the final orderBy's range
-    // partitioning + mediaTable's ADAPTIVE input fan-out (guide §2.5:
-    // the single-file test corpus plans one split, so the decode kernel
-    // would otherwise run on one task — a RoundRobin repartition that
-    // disappears on a well-split production input). Any OTHER exchange
-    // would mean payload bytes moved keyed over the network.
+    // partitioning (mediaTable is a narrow mapPartitions over the scan,
+    // with no fan-out). Any OTHER exchange would mean payload bytes moved
+    // over the network.
     val scans = fileScans("m11_audio_meta").count(_.contains("documents"))
     assert(scans === 1, s"expected one documents scan, got $scans")
-    assert("Exchange".r.findAllIn(p).size <= 2, p.take(2000))
+    assert("Exchange".r.findAllIn(p).size <= 1, p.take(2000))
     assert(!p.contains("Exchange hashpartitioning"), p.take(2000))
   }
 
@@ -584,7 +582,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = plan("m13_audio_energy")
     val scans = fileScans("m13_audio_energy").count(_.contains("documents"))
     assert(scans === 1, s"expected one documents scan, got $scans")
-    assert("Exchange".r.findAllIn(p).size <= 2, p.take(2000))
+    assert("Exchange".r.findAllIn(p).size <= 1, p.take(2000))
     assert(!p.contains("Exchange hashpartitioning"), p.take(2000))
   }
 

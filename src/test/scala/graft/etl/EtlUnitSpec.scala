@@ -78,7 +78,8 @@ class EtlUnitSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("KPI merge preserves the key universe and coalesces zeros") {
     val s = sc; import s.implicits._
     val star = Warehouse.Star(
-      dimDate = Seq((1L, "2024-11-01")).toDF("date_id", "date"),
+      dimDate = Seq((1L, "2024-11-01"), (2L, "2024-11-02"), (3L, "2024-11-03"))
+        .toDF("date_id", "date"),
       dimCustomers = spark.emptyDataFrame,
       dimProducts = spark.emptyDataFrame,
       dimCampaigns = Seq((10, "Email 2024-11", "Email")).toDF("campaign_id", "campaign_name", "channel"),
@@ -90,13 +91,14 @@ class EtlUnitSpec extends AnyFunSuite with BeforeAndAfterAll {
         (1L, 1L, 10, 30.0, 5L, 100L),   // shared key
         (2L, 3L, 10, 70.0, 0L, 0L))     // spend-only key
         .toDF("spend_id", "date_id", "campaign_id", "spend", "clicks", "impressions"))
-    val m = KpiViews.merged(star).collect()
-      .map(r => r.getAs[Long]("date_id") ->
+    val m = KpiViews.channelDaily(star).collect()
+      .map(r => r.getAs[String]("date") ->
         (r.getAs[Double]("revenue"), r.getAs[Double]("spend"), r.getAs[Long]("orders"))).toMap
-    assert(m.keySet === Set(1L, 2L, 3L)) // |keys| = |keys(a) ∪ keys(b)|
-    assert(m(1L) === ((100.0, 30.0, 1L)))
-    assert(m(2L) === ((50.0, 0.0, 1L)))  // spend coalesced to 0
-    assert(m(3L) === ((0.0, 70.0, 0L)))  // sales coalesced to 0
+    // |rows| = |dates(sales) ∪ dates(spend)|
+    assert(m.keySet === Set("2024-11-01", "2024-11-02", "2024-11-03"))
+    assert(m("2024-11-01") === ((100.0, 30.0, 1L)))
+    assert(m("2024-11-02") === ((50.0, 0.0, 1L)))  // spend zero-filled
+    assert(m("2024-11-03") === ((0.0, 70.0, 0L)))  // sales zero-filled
   }
 
   // C3: KPI null guards with zero denominators

@@ -59,18 +59,36 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("merge preserves the key universe exactly") {
-    val star = genStar(300)
-    val expected = star.factSales.select("date_id", "campaign_id")
-      .union(star.factSpend.select("date_id", "campaign_id")).distinct().count()
-    assert(KpiViews.merged(star).count() === expected)
+    // sparse enough that both facts have (date, channel) pairs of their own
+    val star = genStar(40)
+    // dim_date maps date_id 1:1 and channel is a function of campaign_id,
+    // so the view's keys are the distinct (date, channel) pairs over both
+    // facts
+    def keys(fact: org.apache.spark.sql.DataFrame): Set[(String, String)] = fact
+      .join(star.dimDate, Seq("date_id"))
+      .join(star.dimCampaigns, Seq("campaign_id"), "left")
+      .select("date", "channel").distinct().collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet
+    val (sales, spend) = (keys(star.factSales), keys(star.factSpend))
+    assert((sales -- spend).nonEmpty && (spend -- sales).nonEmpty)
+    val view = KpiViews.channelDaily(star)
+    assert(view.count() === (sales ++ spend).size)
+    assert(view.select("date", "channel").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet === sales ++ spend)
   }
 
   test("merged measures are non-negative and zero-filled, never null") {
-    val m = KpiViews.merged(star = genStar(300))
-    assert(m.filter(
-      "revenue IS NULL OR cost IS NULL OR spend IS NULL OR orders IS NULL " +
-        "OR clicks IS NULL OR impressions IS NULL").count() === 0)
-    assert(m.filter("revenue < 0 OR spend < 0 OR orders < 0").count() === 0)
+    val star = genStar(300)
+    Seq("mv_channel_daily" -> KpiViews.channelDaily(star),
+        "mv_kpi_channel" -> KpiViews.kpiChannel(star),
+        "mv_kpi_campaign" -> KpiViews.kpiCampaign(star)).foreach { case (name, v) =>
+      assert(v.filter(
+        "revenue IS NULL OR cost IS NULL OR spend IS NULL OR orders IS NULL " +
+          "OR clicks IS NULL OR impressions IS NULL").count() === 0, name)
+      assert(v.filter(
+        "revenue < 0 OR cost < 0 OR spend < 0 OR orders < 0 " +
+          "OR clicks < 0 OR impressions < 0").count() === 0, name)
+    }
   }
 
   test("KPI null-guards: roas NULL iff spend = 0; ctr in [0,1] when defined") {

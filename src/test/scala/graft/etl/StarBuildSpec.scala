@@ -1,11 +1,19 @@
 package graft.etl
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import graft.sources.WarehouseSink
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, countDistinct}
 import org.apache.spark.sql.execution.{ColumnarToRowExec, FileSourceScanExec, InputAdapter, ProjectExec, RDDScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -18,12 +26,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * INSERT…SELECT): the catalog surfaces plan over the landed tables
   * instead of re-parsing the raw CSVs, still do their own work per query
   * (like the reference's unmaterialized views), and a second call sees
-  * rewritten files. Runs over a micro raw dir written to a temp
-  * directory, so it needs no reference checkout. */
+  * rewritten files. The tables of a dependency wave land concurrently:
+  * a failure surfaces as Spark's own error, repeated builds agree row for
+  * row, and the landing threads never keep the JVM alive. Runs over a
+  * micro raw dir written to a temp directory (and the generated §A corpus
+  * for the split-CSV test), so it needs no reference checkout. */
 class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var raw: Path = _
+  // non-daemon threads alive once the session is up, before any build
+  private var sessionThreads: Set[Thread] = _
 
   private val txHeader = "Transaction Date,Customer ID,Age,Gender,Item Purchased," +
     "Category,Quantity,Purchase Amount (THB),Cost Price (THB),Location," +
@@ -71,6 +84,7 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
     raw = Files.createTempDirectory("graft_star_raw")
     writeRaw(baseTx)
+    sessionThreads = nonDaemonThreads
   }
 
   override def afterAll(): Unit = {
@@ -111,10 +125,7 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the star lands once: each table is a Scan ExistingRDD") {
     val star = Pipeline.run(spark, raw.toString)
-    val tables = Seq("dim_date" -> star.dimDate, "dim_customers" -> star.dimCustomers,
-      "dim_products" -> star.dimProducts, "dim_campaigns" -> star.dimCampaigns,
-      "fact_sales" -> star.factSales, "fact_spend" -> star.factSpend)
-    tables.foreach { case (name, df) =>
+    tables(star).foreach { case (name, df) =>
       resultRoot(df.queryExecution.executedPlan) match {
         case _: RDDScanExec =>
         case other => fail(s"$name is not landed:\n$other")
@@ -188,5 +199,99 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the first run's star keeps its own landed rows
       assert(first.factSales.count() === baseTx.size)
     } finally writeRaw(baseTx)
+  }
+
+  private def nonDaemonThreads: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+
+  private def tables(star: Warehouse.Star): Seq[(String, DataFrame)] = Seq(
+    "dim_date" -> star.dimDate, "dim_customers" -> star.dimCustomers,
+    "dim_products" -> star.dimProducts, "dim_campaigns" -> star.dimCampaigns,
+    "fact_sales" -> star.factSales, "fact_spend" -> star.factSpend)
+
+  test("a missing spend CSV fails the build with Spark's own path error") {
+    val partial = Files.createTempDirectory("graft_star_partial")
+    try {
+      Files.copy(raw.resolve("ecom_mens_streetwear_10000.csv"),
+        partial.resolve("ecom_mens_streetwear_10000.csv"))
+      // off the test thread, so a wave that never completes fails the
+      // test instead of hanging the suite
+      val outcome = Await.result(
+        Future(Try(Pipeline.run(spark, partial.toString))), 120.seconds)
+      val e = intercept[AnalysisException](outcome.get)
+      assert(e.getCondition === "PATH_NOT_FOUND", e)
+      assert(e.getMessage.contains("channel_spend_daily_campaign.csv"), e)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(partial.toFile)
+  }
+
+  test("the landing jobs carry the caller's job group and description") {
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(
+        (e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup("nightly-star", "land the star")
+    try {
+      Pipeline.build(spark, raw.toString)
+      // listener events arrive asynchronously: wait until the count settles
+      var prev = -1
+      while (seen.size != prev) { prev = seen.size; Thread.sleep(300) }
+      // at least one job per landed table, every one in the caller's group
+      assert(seen.size >= 7)
+      assert(seen.asScala.toSet === Set(("nightly-star", "land the star")))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("two builds in one session land the same six tables row for row") {
+    val (a, b) = (Pipeline.build(spark, raw.toString), Pipeline.build(spark, raw.toString))
+    tables(a).zip(tables(b)).foreach { case ((name, x), (_, y)) =>
+      assert(x.count() > 0, name)
+      assert(x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty, s"$name differs")
+    }
+  }
+
+  test("the build leaves no non-daemon thread behind") {
+    // against the session's start: the landing threads outlive a build
+    // and are reused by the next, so earlier tests may have started them
+    Pipeline.build(spark, raw.toString).factSales.count()
+    val left = nonDaemonThreads -- sessionThreads
+    assert(left.isEmpty, left.map(_.getName).mkString(", "))
+  }
+
+  test("sale_id and spend_id stay unique when the CSVs split into " +
+       "several partitions, so orders = count(sale_id) is exact") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "32k")
+    try {
+      val rawDir = RefFixture.rawDir
+      assert(Ingest.transactions(spark, rawDir).rdd.getNumPartitions > 1)
+      assert(Ingest.spend(spark, rawDir).rdd.getNumPartitions > 1)
+      val star = Pipeline.build(spark, rawDir)
+      def unique(df: DataFrame, id: String): Unit = {
+        val r = df.agg(org.apache.spark.sql.functions.count(id), countDistinct(id)).head()
+        assert(r.getLong(0) === r.getLong(1), s"$id repeats")
+      }
+      unique(star.factSales, "sale_id")
+      unique(star.factSpend, "spend_id")
+      // the view's orders against COUNT(DISTINCT sale_id) per (date, channel)
+      val distinctOrders = star.factSales
+        .join(star.dimDate.select("date_id", "date"), Seq("date_id"))
+        .join(star.dimCampaigns.select("campaign_id", "channel"), Seq("campaign_id"), "left")
+        .groupBy("date", "channel").agg(countDistinct("sale_id").as("orders"))
+      val viewOrders = KpiViews.channelDaily(star)
+        .filter(col("orders") > 0).select("date", "channel", "orders")
+      assert(distinctOrders.count() > 1)
+      assert(viewOrders.exceptAll(distinctOrders).isEmpty &&
+        distinctOrders.exceptAll(viewOrders).isEmpty)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 }
