@@ -19,6 +19,8 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // production posture (GraftExtensions): HOF dot/L2 folds run codegen'd
+    graft.functions.RewriteDotProduct.install(spark)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"===== $name =====")

@@ -17,14 +17,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * should measure. Entries of stopped sessions purge on access.
   *
   * The key also carries a fingerprint of the source dir (per-file
-  * name+size+mtime — the disk-memo discipline of
-  * [[graft.ops.Similarity]]): regenerating testdata under a live session
+  * name+size+mtime — the discipline [[graft.sources.ArtifactStore]]
+  * applies on disk): regenerating testdata under a live session
   * evicts (and unpersists) the stale entry instead of serving it. Builds
   * are guarded by a per-key holder so concurrent first access runs the
   * builder exactly once — a losing racer never persists an orphan frame.
   *
-  * Same discipline as the (private) memo in [[graft.ops.Similarity]];
-  * this is the shared form for query builders. */
+  * This is the shared in-memory memo for query builders; on-disk
+  * artifacts go through [[graft.sources.ArtifactStore]]. */
 object SessionMemo {
   /** One-shot build cell: the per-holder lock means at most one caller
     * runs `build` (and persists); `drop` unpersists only if built. */

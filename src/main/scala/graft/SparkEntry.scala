@@ -347,23 +347,6 @@ object SparkEntry {
       graft.sources.WarehouseSink.roundTrip(s, Pipeline.rawDir(s))),
   ) ++ refCatalog
 
-  /** Built-star catalogs memoized PER (session, raw dir) (same discipline
-    * as Dedup.shingleCache): a catalog's DataFrames are bound to the
-    * session that built them, so a process that stops its session and
-    * starts a new one must get a fresh catalog, not dead plans; and a
-    * catalog built over one raw dir is never served for another. Stopped
-    * sessions' entries are purged on every access. */
-  private val refCatalogCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Map[String, () => DataFrame]]
-
-  private def catalogFor(spark: SparkSession): Map[String, () => DataFrame] = {
-    refCatalogCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(refCatalogCache.remove)
-    val raw = Pipeline.rawDir(spark)
-    refCatalogCache.getOrElseUpdate((spark, raw),
-      Pipeline.queryCatalog(Pipeline.run(spark, raw), raw))
-  }
-
   /** The full reference-parity surface (marketing star schema → KPI views →
     * Q0–Q9) run on the reference's raw CSVs; sfDir is ignored. The raw dir
     * is the session's [[graft.etl.Pipeline.rawDir]]: the conf
@@ -375,7 +358,10 @@ object SparkEntry {
     * q6_spend_waste ships as its `_active` variant: the reference's literal
     * thresholds legitimately select 0 rows (SURVEY §0.2-7, would trip the
     * driver's rows>0 check), so the driver entry uses fan-out-scaled
-    * thresholds that exercise the identical plan shape. */
+    * thresholds that exercise the identical plan shape. Every call lands
+    * the star afresh through [[graft.etl.Pipeline.run]] (re-reading the
+    * CSVs) — there is no per-session catalog memo, so rewritten files
+    * are seen on the next call. */
   private def refCatalog: Map[String, (SparkSession, String) => DataFrame] = {
     val names = Seq("mv_channel_daily", "mv_channel_daily_incr",
       "mv_kpi_channel", "mv_kpi_campaign", "promo_enrichment",
@@ -384,7 +370,10 @@ object SparkEntry {
       "q5_hero_products", "q6_spend_waste_active", "q7_retention",
       "q8_demographics", "q9_frequency")
     names.map { n =>
-      s"ref_$n" -> ((spark: SparkSession, _: String) => catalogFor(spark)(n)())
+      s"ref_$n" -> ((spark: SparkSession, _: String) => {
+        val raw = Pipeline.rawDir(spark)
+        Pipeline.queryCatalog(Pipeline.run(spark, raw), raw)(n)()
+      })
     }.toMap
   }
 

@@ -177,21 +177,6 @@ object Similarity {
     * accumulation-order-dependent, the rounded value is not (at this data's
     * margins), and distances are then fixed-order left-to-right folds over
     * exact float-to-double inputs. */
-  /** Trained quantizer's centroid table: one row per cell with the mean
-    * vector assembled as an array — cells×dims, corpus-independent,
-    * always broadcast. Memoized per (session, dir): training is one
-    * corpus-wide aggregation, and every consumer after the first (s06's
-    * assignment, s07's probe ranking, repeat calls) should pay only the
-    * cells-sized cache read, not a corpus pass. */
-  private val memoCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-
-  /** Compute-once/query-many memo shared by every index artifact
-    * (centroids, corpus assignment, PQ codebooks, PQ code tables): build,
-    * persist, and materialize the frame on first access per
-    * (session, dir, tag); later calls pay only the cache read. This is the
-    * write-index/read-index split a production index needs — training
-    * never reruns inside a query. Stopped sessions' entries purge. */
   /** Materialize a CENTROID-SIZED frame (≤ k ≤ 256 rows by construction
     * — never a corpus-sized one) into a LocalRelation. Lloyd-style
     * training loops otherwise nest each iteration's plan inside the next
@@ -203,28 +188,9 @@ object Similarity {
     * doubles) and re-creating it as a LocalRelation makes every
     * downstream plan flat; the VALUES are identical, so determinism and
     * oracle parity are untouched. */
-  private def localized(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val t0 = System.nanoTime()
-    val rows = df.collect()
-    if (sys.env.contains("GRAFT_TRACE_COLD"))
-      System.err.println(f"[cold] localized ${rows.length} rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-  }
-
-  private def memo(spark: SparkSession, dir: String, tag: String)
-                  (build: => DataFrame): DataFrame = {
-    memoCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(memoCache.remove)
-    memoCache.getOrElseUpdate((spark, dir, tag), {
-      val t0 = System.nanoTime()
-      val df = build.persist()
-      df.count()
-      if (sys.env.contains("GRAFT_TRACE_COLD"))
-        System.err.println(f"[cold] memo $tag built in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      df
-    })
-  }
+  private def localized(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** The ANN artifact store — lifecycle machinery shared with every
     * other standing-artifact family since r14 (VERDICT r13 item 7):
@@ -241,9 +207,9 @@ object Similarity {
   private[graft] def artifactCurrent(d: java.io.File): Boolean =
     graft.sources.ArtifactStore.keepEntry(AnnStore)(d)
 
-  /** DISK-backed memo — [[memo]]'s build-once/consume-many contract
-    * extended ACROSS PROCESSES, which is the real production shape of an
-    * index artifact: the ingest job trains and ships parquet (s15's
+  /** DISK-backed memo — [[graft.SessionMemo]]'s build-once/consume-many
+    * contract extended ACROSS PROCESSES, which is the real production
+    * shape of an index artifact: the ingest job trains and ships parquet (s15's
     * write half), and every query node — including a fresh JVM like the
     * driver's cold bench — READS the artifact instead of retraining
     * (VERDICT r6 items 3/5). Lifecycle contract: [[graft.sources.ArtifactStore]].
@@ -341,7 +307,7 @@ object Similarity {
     * Dedup.docShingles — without the memo each consumer branch would
     * re-train and re-assign. Stopped sessions' entries purge on access. */
   def trainedAssignment(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "assign") {
+    graft.SessionMemo(spark, dir, "assign") {
       // [[nearestCell]]: the corpus→cell argmin is one narrow projection
       // over a broadcast LUT row — no exchange anywhere in the pass
       nearestCell(vectors(spark, dir), centroidVectors(spark, dir),
@@ -523,7 +489,7 @@ object Similarity {
         .as("cv"))
     // memoized, not bare-persisted: one cached assignment per (session,
     // dir) across bench passes instead of a leaked entry per invocation
-    val assigned = memo(spark, dir, "kmeans-assign") {
+    val assigned = graft.SessionMemo(spark, dir, "kmeans-assign") {
       nearestCell(vectors(spark, dir), cents,
           Seq.empty, "cid", "v", "cell")
         .select(col("vec_id"), col("cell"), col("v"), col("norm"))
@@ -643,7 +609,7 @@ object Similarity {
     * mirrors the same rule, and cell WIDTH, the scale contract, is
     * unchanged in expectation). Memoized per (session, dir). */
   private[ops] def semDedupAssignment(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "semassign") {
+    graft.SessionMemo(spark, dir, "semassign") {
       val cents = semDedupCentroids(spark, dir)
       val s = semDedupS(semDedupK(Tables.embeddings(spark, dir).count()))
       val cRows = cents.select(col("cell"), col("cv").as("cvec"))
@@ -717,7 +683,7 @@ object Similarity {
     // per (session, dir, θ) so repeated invocations read labels instead
     // of re-running the fixpoint loop's ~25 driver actions (r15 JobStats:
     // d29 was 89 jobs for 0.9 s of summed task time)
-    val comps = memo(spark, dir, s"semdedup-labels-$theta") {
+    val comps = graft.SessionMemo(spark, dir, s"semdedup-labels-$theta") {
       Dedup.dedupClustersOf(pairs)
     }
     val members = comps
@@ -2111,7 +2077,7 @@ object Similarity {
         .select(col("s"), col("vec_id").cast("int").as("cid"), col("sv").as("cv")))
 
   /** Raw-embedding PQ index, trained/encoded ONCE per (session, dir):
-    * [[memo]] makes the build-index/query-index split real — s10/s11/s12
+    * [[diskMemo]] makes the build-index/query-index split real — s10/s11/s12
     * and repeated bench reps share one training pass and one encode pass
     * instead of re-running Lloyd per call. */
   private[ops] def pqCodebooks(spark: SparkSession, dir: String): DataFrame =
@@ -2736,7 +2702,7 @@ object Similarity {
     // lazy: the assignment pass is a BUILD-time input only — when the
     // three disk artifacts already exist, a consuming process must not
     // pay a corpus pass (memo evaluates eagerly, so laziness gates it)
-    lazy val assigned = memo(spark, dir, "incr-assign") {
+    lazy val assigned = graft.SessionMemo(spark, dir, "incr-assign") {
       nearestCell(cand, cents, Seq.empty, "cell", "v", "cell")
         .select("vec_id", "v", "norm", "cell")
     }

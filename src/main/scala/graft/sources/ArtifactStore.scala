@@ -170,7 +170,6 @@ object ArtifactStore {
     val success = new java.io.File(dest, "_SUCCESS")
     inFlight.getOrElseUpdate(dest.toString, new Object).synchronized {
       if (!success.exists()) {
-        val t0 = System.nanoTime()
         val tmp = new java.io.File(
           s"${store.root}/.build_${java.util.UUID.randomUUID().toString.take(8)}")
         write(tmp)
@@ -183,9 +182,6 @@ object ArtifactStore {
           java.nio.file.Files.write(tmpSuccess.toPath, Array.empty[Byte])
         if (!tmp.renameTo(dest)) StaleOutputs.reset(tmp.toString)
         landsPerformed.incrementAndGet()
-        if (sys.env.contains("GRAFT_TRACE_COLD"))
-          System.err.println(
-            f"[cold] artifact $tag built in ${(System.nanoTime() - t0) / 1e9}%.2f s")
       } else {
         // lease renewal on every reuse — defense in depth against any
         // EXTERNAL age-based janitor (the in-store sweep never ages
@@ -193,8 +189,6 @@ object ArtifactStore {
         // mtime even though parquet reads never write. `_SOURCE` stays
         // untouched — it is the generation marker.
         success.setLastModified(System.currentTimeMillis())
-        if (sys.env.contains("GRAFT_TRACE_COLD"))
-          System.err.println(s"[cold] artifact $tag read from store")
       }
     }
     // ADVICE r13: verify the publication outcome rather than returning

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SHUFFLE-FREE CO-LOCATED JOIN (f19/f20) — the seventh rung of the
@@ -37,7 +37,9 @@ import org.apache.spark.sql.functions._
   * table files dropped or rewritten mid-read, because nothing ever
   * rewrites a published generation; each process merely registers an
   * EXTERNAL catalog table over the landed files (a metadata-only op).
-  * The fingerprint covers BOTH source tables.
+  * The fingerprint covers BOTH source tables. f03
+  * ([[Bucketing.bucketedRevenueByPriority]]) reads the same
+  * one-file-per-bucket pair, so it lands no tables of its own.
   *
   * The demo runs in an ISOLATED child session with broadcast disabled
   * (f17's discipline): at test SFs every table is broadcastable, which
@@ -151,40 +153,49 @@ object BucketedJoin {
 
   /** The fact⋈fact aggregate over whatever frames the session hands
     * it — the bucketed pairs and the raw-layout control run the SAME
-    * query shape, so the plan difference is purely the storage. */
-  private def revenueByPriority(l: DataFrame, o: DataFrame): DataFrame =
+    * query shape, so the plan difference is purely the storage.
+    * `revenue` is the per-row amount summed: discounted for f19/f20,
+    * the gross `l_extendedprice` for f03. */
+  private def revenueByPriority(l: DataFrame, o: DataFrame,
+                                revenue: Column): DataFrame =
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("line_count"),
-        round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-          .cast("decimal(18,6)")), 2).cast("double").as("revenue"))
+        round(sum(revenue.cast("decimal(18,6)")), 2).cast("double").as("revenue"))
       .orderBy("o_orderpriority")
+
+  private def discounted: Column =
+    col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+
+  /** [[revenueByPriority]] over the landed pair of the given layout, in
+    * the no-broadcast child session (f03, f19, f20). */
+  private[sources] def landedJoin(spark: SparkSession, dir: String,
+                                  multiFile: Boolean,
+                                  revenue: Column): DataFrame = {
+    val s = joinSession(spark)
+    val (lName, oName) = ensureTables(s, dir, multiFile)
+    revenueByPriority(s.table(lName), s.table(oName), revenue)
+  }
 
   /** Driver surface (f19): the co-located join through the
     * one-file-per-bucket layout (zero Exchange AND zero Sort), in the
     * no-broadcast child session. */
-  def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val s = joinSession(spark)
-    val (lName, oName) = ensureTables(s, dir, multiFile = false)
-    revenueByPriority(s.table(lName), s.table(oName))
-  }
+  def bucketedJoin(spark: SparkSession, dir: String): DataFrame =
+    landedJoin(spark, dir, multiFile = false, discounted)
 
   /** Driver surface (f20): the SAME join through MULTI-FILE buckets —
     * the posture a 100 TB table is actually in. The Exchange (the
     * dominant cost) stays gone; the per-bucket Sort reappears and is
     * pinned PRESENT by PlanSpec, so the claim is scoped honestly
     * (VERDICT r13 item 3). Values are layout-independent. */
-  def bucketedJoinMultiFile(spark: SparkSession, dir: String): DataFrame = {
-    val s = joinSession(spark)
-    val (lName, oName) = ensureTables(s, dir, multiFile = true)
-    revenueByPriority(s.table(lName), s.table(oName))
-  }
+  def bucketedJoinMultiFile(spark: SparkSession, dir: String): DataFrame =
+    landedJoin(spark, dir, multiFile = true, discounted)
 
   /** The raw-layout CONTROL in the same child session: identical query,
     * unbucketed scans — the plan the bucketing removes (PlanSpec pins
     * its shuffles as the counterfactual). */
   def rawJoin(spark: SparkSession, dir: String): DataFrame = {
     val s = joinSession(spark)
-    revenueByPriority(lineitemCols(s, dir), ordersCols(s, dir))
+    revenueByPriority(lineitemCols(s, dir), ordersCols(s, dir), discounted)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Bucketed tables: the shuffle-elimination lever for repeated big-big
   * joins (builder rules: "co-locate joins via bucketing").
@@ -31,75 +31,20 @@ object Bucketing {
                    key: String): DataFrame =
     spark.table(left).join(spark.table(right), key)
 
-  /** Oracle-verified bucketed-join round trip (f03): lineitem and orders
-    * written bucketed+sorted on the order key, then joined shuffle-free
-    * and aggregated — proving the bucket layout survives the write/read
-    * cycle with the same answer as the plain parquet join (the DuckDB
-    * oracle joins the raw files). Table names carry the applicationId so
-    * concurrent runs on the same warehouse dir never collide; Overwrite
-    * makes repeat runs in one session idempotent.
+  /** Oracle-verified bucketed-join round trip (f03): lineitem ⋈ orders
+    * on the order key over the bucketed+sorted pair f19 lands once per
+    * source generation in [[ArtifactStore.BucketStore]], joined
+    * shuffle-free in [[BucketedJoin]]'s no-broadcast child session and
+    * aggregated by priority — proving the bucket layout survives the
+    * write/read cycle with the same answer as the plain parquet join (the
+    * DuckDB oracle joins the raw files). f03 shares f19's landing and
+    * writes nothing under `spark.sql.warehouse.dir`; it sums the gross
+    * `l_extendedprice` where f19 sums the discounted price.
     *
     * This is the nightly-pipeline shape at 100 TB: pay the bucket shuffle
     * once at ingest, then every downstream join on the key reads
     * co-located sorted buckets — zero exchange, zero sort
     * (BucketingSpec asserts the exchange-free join subplan). */
-  /** One landed bucket-table pair per (session, dir, source-fingerprint)
-    * — the f18 landIndex discipline applied to the bucketed ingest: the
-    * docstring's "pay the bucket shuffle once at ingest" was previously
-    * paid on EVERY invocation (two writeBucketed table writes per call —
-    * r15 JobStats: 1.4 s of each warm f03 run was the rewrite). The
-    * fingerprint keys on the source files' identity so a regenerated
-    * testdata dir re-lands instead of serving stale buckets. */
-  private val landedPairs = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Unit]
-
-  private def sourceFp(dir: String): String = {
-    val fs = Seq("lineitem.parquet", "orders.parquet").map { n =>
-      val f = new java.io.File(dir, n)
-      s"$n:${f.length()}:${f.lastModified()}"
-    }
-    java.lang.Long.toHexString(
-      fs.mkString("|").hashCode.toLong & 0xffffffffL)
-  }
-
-  def bucketedRevenueByPriority(spark: SparkSession, dir: String): DataFrame = {
-    val token = (spark.sparkContext.applicationId + "_" + sourceFp(dir))
-      .replaceAll("[^A-Za-z0-9]", "_").toLowerCase
-    // GC: a finished application's table pair can never be read again —
-    // drop graft-bucketed tables from OTHER applications before writing
-    // this run's, so the warehouse converges to one live pair per running
-    // app (this run's own tables must outlive this call: the returned
-    // frame reads them lazily, hence no drop-after-use here). Same
-    // liveness guard as StaleOutputs.sweep: a concurrently running app's
-    // lazy query may still read its pair, so only tables whose warehouse
-    // directory has been quiet past the TTL are presumed abandoned.
-    val warehouse = new java.io.File(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val now = System.currentTimeMillis()
-    spark.catalog.listTables().collect()
-      .filter(t => (t.name.startsWith("graft_li_") || t.name.startsWith("graft_ord_")) &&
-        !t.name.endsWith(token))
-      .filter { t =>
-        val loc = new java.io.File(warehouse, t.name)
-        !loc.exists() || now - loc.lastModified() > StaleOutputs.SweepTtlMs
-      }
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-    landedPairs.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(landedPairs.remove)
-    landedPairs.getOrElseUpdate((spark, token), {
-      val li = spark.read.parquet(s"$dir/lineitem.parquet")
-        .select(col("l_orderkey"), col("l_extendedprice"))
-      val o = spark.read.parquet(s"$dir/orders.parquet")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      writeBucketed(li, s"graft_li_$token", "l_orderkey", 16)
-      writeBucketed(o, s"graft_ord_$token", "l_orderkey", 16)
-    })
-    bucketedJoin(spark, s"graft_li_$token", s"graft_ord_$token", "l_orderkey")
-      .groupBy("o_orderpriority")
-      .agg(
-        count(lit(1)).as("line_count"),
-        round(sum(col("l_extendedprice").cast("decimal(18,6)")), 2)
-          .cast("double").as("revenue"))
-      .orderBy("o_orderpriority")
-  }
+  def bucketedRevenueByPriority(spark: SparkSession, dir: String): DataFrame =
+    BucketedJoin.landedJoin(spark, dir, multiFile = false, col("l_extendedprice"))
 }

@@ -1780,6 +1780,60 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(first.storageLevel.useMemory, "memoized frame is not persisted")
   }
 
+  test("trainedAssignment builds once under concurrent first access: two " +
+       "callers released together on a fresh session persist one frame, " +
+       "and only one of them runs Spark jobs") {
+    import java.util.concurrent.{Callable, ConcurrentHashMap, CountDownLatch, Executors, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    // a private copy of the corpus: a plan no earlier test has cached
+    val copy = java.nio.file.Files.createTempDirectory("graft_assign_race")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
+      copy.resolve("embeddings.parquet"))
+    val fresh = spark.newSession()
+    val sc = spark.sparkContext
+    val groups = ConcurrentHashMap.newKeySet[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    val before = sc.getPersistentRDDs.keys.toSet
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map(i => pool.submit(new Callable[org.apache.spark.sql.DataFrame] {
+        def call(): org.apache.spark.sql.DataFrame = {
+          sc.setJobGroup(s"graft-assign-caller-$i", "concurrent first access")
+          go.await()
+          Similarity.trainedAssignment(fresh, copy.toString)
+        }
+      }))
+      go.countDown()
+      val frames = calls.map(_.get(600, TimeUnit.SECONDS))
+      assert(frames(0) eq frames(1), "the two callers got different frames")
+      val added = sc.getPersistentRDDs.keys.toSet -- before
+      assert(added.size === 1,
+        s"concurrent first access persisted ${added.size} frames, not 1")
+      // the listener bus delivers in order: once this job is seen, every
+      // job the callers started has been seen too
+      sc.setJobGroup("graft-assign-barrier", "barrier")
+      try sc.parallelize(Seq(1)).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60e9.toLong
+      while (!groups.contains("graft-assign-barrier") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(groups.contains("graft-assign-barrier"))
+      val building = groups.asScala.filter(_.startsWith("graft-assign-caller-"))
+      assert(building.size === 1,
+        s"both callers ran the build: ${building.toSeq.sorted.mkString(", ")}")
+    } finally {
+      pool.shutdownNow()
+      sc.removeSparkListener(listener)
+      org.apache.commons.io.FileUtils.deleteQuietly(copy.toFile)
+    }
+  }
+
   test("d38 retro compaction completes d22 across the arrival boundary: " +
        "tombstones are exactly the index docs the exact all-pairs " +
        "detector pairs with a SMALLER-id delta doc — the drops a " +
