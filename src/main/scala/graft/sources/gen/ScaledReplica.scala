@@ -1,6 +1,5 @@
 package graft.sources.gen
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-step harness (VERDICT r8 item 6): materialize an N× replica of
@@ -46,14 +45,7 @@ object ScaledReplica {
   def main(args: Array[String]): Unit = {
     val Array(src, dest, copiesStr) = args.take(3)
     val copies = copiesStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import org.apache.spark.sql.DataFrame
     // one adjacent-token swap at a (doc_id, shard)-derived position:
     // breaks exact-hash identity across shards, keeps ~all shingles (a

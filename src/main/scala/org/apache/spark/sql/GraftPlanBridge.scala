@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * construction to extensions (strategies, rules, expressions) but keeps
   * `Dataset.ofRows` package-private, so library code that INTRODUCES a
   * logical node (graft.plans.TopKPerGroup) routes through this shim —
-  * the standard pattern public Spark extension libraries use. Nothing
-  * else in the repo lives outside the `graft` namespace.
+  * the standard pattern public Spark extension libraries use. The only
+  * other file outside the `graft` namespace is
+  * [[org.apache.spark.GraftListenerBridge]].
   */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

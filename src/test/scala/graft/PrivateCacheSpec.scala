@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ratchet on private caches in the main tree. The engine's build-once
@@ -29,29 +28,10 @@ class PrivateCacheSpec extends AnyFunSuite {
   private val Declaration =
     """val\s+(\w+)\s*(?::[^=]*)?=\s*(?:new\s+)?[\w.]*TrieMap""".r
 
-  private def scalaFiles(d: File): Seq[File] =
-    Option(d.listFiles()).toSeq.flatten.flatMap { f =>
-      if (f.isDirectory) scalaFiles(f)
-      else if (f.getName.endsWith(".scala")) Seq(f)
-      else Nil
-    }
-
-  /** Code with comments and imports blanked, so only declarations count. */
-  private def code(f: File): String =
-    scala.io.Source.fromFile(f, "UTF-8").getLines()
-      .map(_.replaceAll("//.*$", ""))
-      .filterNot { l =>
-        val t = l.trim
-        t.startsWith("import ") || t.startsWith("*") || t.startsWith("/*")
-      }
-      .mkString("\n")
-
   test("no TrieMap outside SessionMemo and ArtifactStore beyond the pinned list") {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"main tree not found at ${root.getAbsolutePath}")
-    val declared = scalaFiles(root).flatMap { f =>
-      val owner = f.getName.stripSuffix(".scala")
-      val src = code(f)
+    val declared = MainTree.files.flatMap { f =>
+      val owner = MainTree.owner(f)
+      val src = MainTree.code(f)
       val names = Declaration.findAllMatchIn(src).map(_.group(1)).toSeq
       assert("TrieMap".r.findAllIn(src).length === names.size,
         s"${f.getPath}: a TrieMap use this spec cannot attribute to a val")

@@ -2,7 +2,6 @@ package graft.etl
 
 import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentLinkedQueue
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -163,22 +162,14 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("WarehouseSink.write of a landed star spends one job per table") {
     val star = Pipeline.run(spark, raw.toString)
     val out = Files.createTempDirectory("graft_star_wh")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new graft.Profile.Collector(spark.sparkContext)
     try {
       WarehouseSink.write(star, out.toString)
-      // listener events arrive asynchronously: wait until the count settles
-      var prev = -1
-      while (jobs.get() != prev) { prev = jobs.get(); Thread.sleep(300) }
       // one job per table: no write re-derives a dim or re-parses a CSV
-      assert(jobs.get() === 6)
+      assert(jobs.read().jobs === 6)
       assert(WarehouseSink.read(spark, out.toString).factSales.count() === baseTx.size)
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      jobs.close()
       org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
     }
   }

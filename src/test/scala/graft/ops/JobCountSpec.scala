@@ -1,8 +1,6 @@
 package graft.ops
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.Profile
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,34 +31,16 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  private def settledJobCount(counter: AtomicInteger): Int = {
-    // listener events are delivered asynchronously: wait until the count
-    // stops moving before reading it
-    var prev = -1
-    var cur = counter.get()
-    while (cur != prev) {
-      Thread.sleep(300)
-      prev = cur
-      cur = counter.get()
-    }
-    cur
-  }
-
   test("d16 CC loop: one Spark action per propagation round") {
     val s = spark; import s.implicits._
     // a 6-node chain 0-1-2-...-5: the min label moves one hop per round,
     // so the loop needs 5 propagation rounds + 1 no-change round — the
     // worst case per node count, which makes the job budget tight
     val chain = (0L until 5L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       val clusters = Dedup.dedupClustersOf(chain) // loop runs here
-      val loopJobs = settledJobCount(jobs)
+      val loopJobs = jobs.read().jobs
       // 1 job for the eager initial-labels checkpoint + 6 rounds × 1 job:
       // the round-3 shape (checkpoint + separate join-and-count) would
       // spend 13 — the budget below fails it
@@ -69,9 +49,7 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       val rows = clusters.collect()
       assert(rows.map(_.getLong(0)).sorted.toSeq === (0L to 5L))
       assert(rows.forall(_.getLong(1) == 0L))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 
   test("s29 driver-beam walk: a steady serve spends a CONSTANT job " +
@@ -80,15 +58,10 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = "/root/testdata/sf0.001"
     // warm: artifact builds, session memos, file-index cache
     Similarity.graphAnn(spark, dir).collect()
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       Similarity.graphAnn(spark, dir).collect()
-      val steady = settledJobCount(jobs)
+      val steady = jobs.read().jobs
       // entry beam (collect + its broadcasts) + 4 hops × (adjacency
       // point-read collect + scored point-read collect + the expansion/
       // query local-frame broadcasts) + the result collect. The budget
@@ -104,9 +77,7 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       // micro-job tail.
       info(s"steady s29 serve spent $steady jobs")
       assert(steady <= 28, s"steady s29 serve spent $steady jobs (≤28)")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 
   test("s42 batched serve: the job budget at 10× the queries is the " +
@@ -115,15 +86,10 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
        "per-query beams is an I/O batching, never a per-query loop)") {
     val dir = "/root/testdata/sf0.001"
     Similarity.batchedGraphAnn(spark, dir).collect() // warm
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       Similarity.batchedGraphAnn(spark, dir).collect()
-      val steady = settledJobCount(jobs)
+      val steady = jobs.read().jobs
       info(s"steady s42 batched serve spent $steady jobs for " +
         s"${Similarity.BatchedServeQueries} queries")
       // s29's budget, unchanged: a shape that walked queries one at a
@@ -131,9 +97,7 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(steady <= 28,
         s"steady s42 batched serve spent $steady jobs (≤28) — the hop " +
           "loop is no longer batch-size-independent")
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 
   test("g05 BFS loop: one Spark action per frontier round") {
@@ -142,15 +106,10 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     // needs 6 growing rounds + 1 empty round — one hop per round is the
     // worst case, which makes the job budget tight
     val chain = (0L until 6L).map(i => (i, i + 1)).toDF("p1", "p2")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       val hist = GraphRank.bfsHopsOf(chain) // seed + loop run here
-      val loopJobs = settledJobCount(jobs)
+      val loopJobs = jobs.read().jobs
       // 1 seed/materialize job + 1 eager frontier checkpoint + 7 rounds ×
       // 1 job: a second action per round (e.g. a separate isEmpty probe)
       // would spend 16 — the budget below fails it
@@ -163,9 +122,7 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(r.getAs[Long]("min_pk") === h.toLong &&
           r.getAs[Long]("max_pk") === h.toLong, s"hop $h node id")
       }
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 
   test("g07 converged-CC loop: one Spark action per propagation round") {
@@ -175,15 +132,10 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     // no-change round, the per-node worst case, so the budget is tight
     val und = (0L until 5L).map(i => (i, i + 1)).toDF("src", "dst")
       .union((0L until 5L).map(i => (i + 1, i)).toDF("src", "dst"))
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       val hist = GraphRank.componentSizesConvergedOf(und) // loop runs here
-      val loopJobs = settledJobCount(jobs)
+      val loopJobs = jobs.read().jobs
       // 1 eager adjacency checkpoint + 6 rounds × 1 convergence aggregate
       // (the chg flag rides the round's frame; a separate did-it-change
       // probe would spend 13) — budget fails the two-action shape
@@ -194,9 +146,7 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rows(0).getAs[Long]("size") === 6L)
       assert(rows(0).getAs[Long]("components") === 1L)
       assert(rows(0).getAs[Long]("nodes") === 6L)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 
   test("g08 k-core peel: per-round jobs are NODE-GRAIN broadcast builds " +
@@ -218,23 +168,16 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     val chain = Seq(("a", "x"), ("x", "a"), ("b", "x"), ("x", "b"),
       ("x", "y"), ("y", "x"))
     val und = (clique ++ chain).toDF("src", "dst")
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       val rounds = 4
       val rows = GraphRank.kcoreOf(und, k = 3, rounds = rounds).collect()
-      val spent = settledJobCount(jobs)
+      val spent = jobs.read().jobs
       assert(spent <= 2 + 3 * rounds, s"k-core spent $spent jobs; " +
         "more than the budgeted node-grain broadcast builds per round — " +
         "an edge materialization or driver probe has crept in")
       assert(rows.map(_.getString(0)).toSet === Set("a", "b", "c", "d"))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 
   test("k-means training: one driver action per Lloyd iteration, none hidden") {
@@ -242,23 +185,16 @@ class JobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     // regression to lazy nested-lineage centroids would re-execute prior
     // iterations inside later jobs — cheap at test scale but the
     // recursive-plan blowup that dominated the round-5 cold index builds
-    val jobs = new AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(jobStart: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val jobs = new Profile.Collector(spark.sparkContext)
     try {
       val cents = Similarity.kmeansCentroids(spark, "/root/testdata/sf0.001")
-      val built = settledJobCount(jobs)
+      val built = jobs.read().jobs
       // seed localize + 2 iteration localizes, each preceded by a file-
       // listing job for its fresh parquet scan (3 collects + 3 listings);
       // nested-lineage centroids re-executing prior iterations would blow
       // past this
       assert(built <= 6, s"k-means build spent $built driver actions")
       assert(cents.count() > 0)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-    }
+    } finally jobs.close()
   }
 }
