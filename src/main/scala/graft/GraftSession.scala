@@ -23,4 +23,22 @@ object GraftSession {
     graft.functions.RewriteDotProduct.install(spark)
     spark
   }
+
+  private val children = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, Seq[(String, String)]), SparkSession]
+
+  /** A child of `parent` with `settings` applied to its conf, memoized per
+    * (parent, settings). The child shares the parent's context and a clone
+    * of its SQL conf, so the settings never reach the parent's plans. A
+    * fresh `newSession()` per call would accumulate SessionState (conf,
+    * catalog, listener registrations) on the shared SparkContext for the
+    * life of the application. Entries of stopped parents are purged. */
+  def child(parent: SparkSession, settings: (String, String)*): SparkSession = {
+    children.keys.filter(_._1.sparkContext.isStopped).foreach(children.remove)
+    children.getOrElseUpdate((parent, settings), {
+      val s = parent.newSession()
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      s
+    })
+  }
 }

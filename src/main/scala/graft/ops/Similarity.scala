@@ -2235,9 +2235,7 @@ object Similarity {
     * billion-vector serving cheap. */
   def indexRoundTrip(spark: SparkSession, dir: String,
                      k: Int = 3, nprobe: Int = 2): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_annindex/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_annindex", spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "annindex", dir)
     centroidVectors(spark, dir).write.mode("overwrite").parquet(s"$base/centroids")
     residCodebooks(spark, dir).write.mode("overwrite").parquet(s"$base/codebooks")
     residCandidateCodes(spark, dir).write.mode("overwrite").parquet(s"$base/codes")
@@ -2628,9 +2626,7 @@ object Similarity {
     * lossless: tombstones applied, nothing else disturbed. */
   def indexCompactAnn(spark: SparkSession, dir: String,
                       k: Int = 3, nprobe: Int = 2): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_anncompact/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_anncompact", spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "anncompact", dir)
     val deletes = Tables.embeddings(spark, dir)
       .select(col("vec_id").as("cand_id"))
       .filter(substring(md5(col("cand_id").cast("string")), 1, 1) === "0")

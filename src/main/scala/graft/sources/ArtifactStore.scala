@@ -59,7 +59,7 @@ object ArtifactStore {
     * out — or die immediately when their source regenerates). */
   final case class Store(name: String, version: String,
                          defaultFiles: Seq[String]) {
-    def root: String = s"${sys.props("java.io.tmpdir")}/$name"
+    def root: String = s"${StaleOutputs.root}/$name"
   }
 
   /** The ANN index family (s-family walk artifacts, PQ codebooks/codes,

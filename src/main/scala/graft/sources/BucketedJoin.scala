@@ -73,27 +73,16 @@ object BucketedJoin {
   private val registered =
     scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
 
-  /** One child session per parent, memoized (the f17 discipline): its
-    * conf is fixed (no broadcast — the fact⋈fact posture), and catalog
-    * state stays contained while the landed files are shared. */
-  private val sessions =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-
-  private def joinSession(spark: SparkSession): SparkSession = {
-    sessions.keys.filter(_.sparkContext.isStopped).foreach(sessions.remove)
-    sessions.getOrElseUpdate(spark, {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // the scan reports its per-bucket sortBy order only under this
-      // (off by default since 3.0 because it lists files at planning —
-      // exactly the manifest cost the f19 one-file-per-bucket layout
-      // keeps trivial); with multi-file buckets (f20) Spark correctly
-      // declines to claim the order even under the flag
-      s2.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering",
-        "true")
-      s2
-    })
-  }
+  /** The fact⋈fact posture: no broadcast. The scan reports its
+    * per-bucket sortBy order only under the legacy flag (off by default
+    * since 3.0 because it lists files at planning — exactly the manifest
+    * cost the f19 one-file-per-bucket layout keeps trivial); with
+    * multi-file buckets (f20) Spark correctly declines to claim the order
+    * even under the flag. */
+  private def joinSession(spark: SparkSession): SparkSession =
+    graft.GraftSession.child(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true")
 
   private def lineitemCols(s: SparkSession, dir: String): DataFrame =
     graft.Tables.lineitem(s, dir)

@@ -11,18 +11,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * ~128 MB-sized files (here a fixed count of 4, the local stand-in for
   * `table_bytes / 128MB`). The repartition is a DELIBERATE full
   * shuffle — the write pays it once so every later scan opens a bounded
-  * file set, and `CompactionSpec` asserts the exact output file count.
-  * Output dir carries the applicationId (the shared concurrency
-  * contract). */
+  * file set, and `CompactionSpec` asserts the exact output file count. */
 object Compaction {
 
   def outDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_compact/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
+    StaleOutputs.appDir(spark, "compact", dir)
 
   def compact(spark: SparkSession, dir: String, files: Int = 4): DataFrame = {
     val out = outDir(spark, dir)
-    StaleOutputs.sweep("graft_compact", spark.sparkContext.applicationId)
     spark.read.parquet(s"$dir/documents.parquet")
       .repartition(files)
       .write.mode("overwrite").parquet(out)

@@ -31,14 +31,9 @@ object CorruptJsonl {
   val schemaWithCorrupt: StructType =
     JsonlCorpus.documentsSchema.add(StructField("_corrupt_record", StringType))
 
-  def baseDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_corrupt_jsonl/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-
   /** Land the deterministically-corrupted JSONL feed; returns its path. */
   def writeFeed(spark: SparkSession, dir: String): String = {
-    val out = baseDir(spark, dir)
-    StaleOutputs.sweep("graft_corrupt_jsonl", spark.sparkContext.applicationId)
+    val out = StaleOutputs.appDir(spark, "corrupt_jsonl", dir)
     val line = to_json(struct(col("doc_id"), col("text"), col("lang"),
       col("source"), col("n_chars")))
     graft.Tables.documents(spark, dir)

@@ -23,10 +23,6 @@ import org.apache.spark.sql.functions._
   * answer stays identical to the unpruned read. */
 object DataSkipping {
 
-  def baseDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_skip/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-
   /** Write `df` as `files` range-partitioned files on `layoutCol` plus a
     * stats manifest carrying per-file (min, max) for each of `statCols`. */
   def writeWithStats(df: DataFrame, layoutCol: String, statCols: Seq[String],
@@ -67,8 +63,7 @@ object DataSkipping {
     * through the pruned plan. The layout must be invisible to results —
     * the oracle runs the same aggregate over the raw table. */
   def skippingQuery(spark: SparkSession, dir: String): DataFrame = {
-    val out = baseDir(spark, dir)
-    StaleOutputs.sweep("graft_skip", spark.sparkContext.applicationId)
+    val out = StaleOutputs.appDir(spark, "skip", dir)
     writeWithStats(graft.Tables.documents(spark, dir),
       "n_chars", Seq("n_chars", "doc_id"), out, 8)
     prunedRead(spark, out, "n_chars", 200, 400)

@@ -27,10 +27,6 @@ import org.apache.spark.sql.functions._
   * join. */
 object DynamicPruning {
 
-  def baseDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_dpp/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-
   /** The 5-row language→region dim (deterministic literal rows — a stand-in
     * for the usual date/geo dimension). */
   def regionDim(spark: SparkSession): DataFrame = {
@@ -48,11 +44,10 @@ object DynamicPruning {
     * between a demo and the production star-schema shape, where the dim
     * is a table. */
   def tables(spark: SparkSession, dir: String): (String, String) = {
-    val base = baseDir(spark, dir)
+    val base = StaleOutputs.appDir(spark, "dpp", dir)
     val fact = s"$base/table"
     val dim = s"$base/dim"
     if (!new java.io.File(fact, "_SUCCESS").exists()) {
-      StaleOutputs.sweep("graft_dpp", spark.sparkContext.applicationId)
       graft.Tables.documents(spark, dir)
         .select("doc_id", "n_chars", "lang")
         .write.partitionBy("lang").mode("overwrite").parquet(fact)

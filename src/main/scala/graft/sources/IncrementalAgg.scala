@@ -39,9 +39,7 @@ object IncrementalAgg {
   /** Materialize history, aggregate the delta, merge, and return the
     * refreshed view in the driver-contract projection. */
   def refreshedDailyView(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_incragg/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    StaleOutputs.sweep("graft_incragg", spark.sparkContext.applicationId)
+    val base = StaleOutputs.appDir(spark, "incragg", dir)
     val ev = graft.Tables.eventsUs(spark, dir)
       .select(col("event_type"), col("ts_us"), col("value"))
     val cutoff = ev.select(expr(s"ts_us div $DayUs").as("day"))

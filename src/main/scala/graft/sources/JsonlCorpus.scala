@@ -51,16 +51,9 @@ object JsonlCorpus {
 
   /** Driver-contract round trip: documents → JSONL → read back, projected
     * to a hash-comparable form (md5(text) proves byte-level text fidelity
-    * through JSON escaping without shipping the text itself).
-    *
-    * The output path carries the Spark applicationId: two concurrent
-    * sessions round-tripping the same sfDir write disjoint directories
-    * instead of racing an Overwrite on a shared one (within one session,
-    * repeat runs legitimately overwrite their own previous output). */
+    * through JSON escaping without shipping the text itself). */
   def roundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_jsonl/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    StaleOutputs.sweep("graft_jsonl", spark.sparkContext.applicationId)
+    val out = StaleOutputs.appDir(spark, "jsonl", dir)
     write(graft.Tables.documents(spark, dir), out)
     read(spark, out)
       .select(col("doc_id"), md5(col("text")).as("fp"), col("lang"), col("n_chars"))

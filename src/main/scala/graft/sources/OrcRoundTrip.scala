@@ -9,14 +9,11 @@ import org.apache.spark.sql.functions._
   * reads the ORIGINAL parquet, so a hash match shows the ORC layout is
   * invisible to results — including string, long, and null handling.
   * Text round-trips as its md5 (the hash gate compares fingerprints, not
-  * megabytes of prose). Output dir is applicationId-scoped with the
-  * stale-sibling sweep, like every scratch sink. */
+  * megabytes of prose). */
 object OrcRoundTrip {
 
   def roundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_orc/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    StaleOutputs.sweep("graft_orc", spark.sparkContext.applicationId)
+    val out = StaleOutputs.appDir(spark, "orc", dir)
     graft.Tables.documents(spark, dir)
       .write.mode("overwrite").orc(out)
     spark.read.orc(out)

@@ -16,18 +16,13 @@ import org.apache.spark.sql.functions._
   * (the spec additionally pins the untouched partitions' FILES). */
 object PartitionOverwrite {
 
-  def baseDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_partover/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-
   private def corpus(spark: SparkSession, dir: String): DataFrame =
     graft.Tables.documents(spark, dir)
       .select("doc_id", "n_chars", "text", "lang")
 
   /** Step 1: land the full lang-partitioned table. Returns its path. */
   def writeBase(spark: SparkSession, dir: String): String = {
-    val base = baseDir(spark, dir)
-    StaleOutputs.sweep("graft_partover", spark.sparkContext.applicationId)
+    val base = StaleOutputs.appDir(spark, "partover", dir)
     corpus(spark, dir).write.partitionBy("lang")
       .mode("overwrite").parquet(s"$base/table")
     s"$base/table"

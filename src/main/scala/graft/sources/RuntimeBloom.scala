@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * difference between shuffling the whole fact table and shuffling the
   * ~4% that joins a one-nation supplier slice.
   *
-  * The demo runs in an ISOLATED child session (`newSession` — shared
-  * context, cloned SQL conf) with broadcast disabled (a broadcast join
+  * The demo runs in an ISOLATED child session (`GraftSession.child` —
+  * shared context, cloned SQL conf) with broadcast disabled (a broadcast join
   * needs no runtime filter — the filter targets shuffle joins) and the
   * application-side size threshold lowered so the test-scale fact
   * qualifies; at production scale the DEFAULT thresholds (10 GB scan)
@@ -48,27 +48,13 @@ object RuntimeBloom {
       .orderBy("s_suppkey")
   }
 
-  /** One child session per parent, MEMOIZED: its conf is fixed, and a
-    * fresh `newSession()` per invocation would accumulate SessionState
-    * (conf, catalog, listener registrations) on the shared SparkContext
-    * across bench reps for the life of the application (ADVICE r11). */
-  private val sessions =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-
   /** Child session with the runtime-filter posture: shuffle join (no
     * broadcast), bloom injection thresholds sized for the test corpus. */
-  def bloomSession(spark: SparkSession): SparkSession = {
-    sessions.keys.filter(_.sparkContext.isStopped).foreach(sessions.remove)
-    sessions.getOrElseUpdate(spark, {
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "1")
-      s2
-    })
-  }
+  def bloomSession(spark: SparkSession): SparkSession =
+    graft.GraftSession.child(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "1")
 
   def bloomPrunedAgg(spark: SparkSession, dir: String): DataFrame =
     query(bloomSession(spark), dir)

@@ -15,15 +15,11 @@ import org.apache.spark.sql.functions._
   * (millions of footers). Production pins the superset schema in a
   * catalog and passes it explicitly (`spark.read.schema(...)`), which
   * skips the footer sweep; the merged result is identical, which is
-  * exactly what this surface verifies. Output dirs carry the
-  * applicationId (the concurrency contract shared with f01/f03/w07).
-  */
+  * exactly what this surface verifies. */
 object SchemaEvolution {
 
   def roundTrip(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_schema_evo/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    StaleOutputs.sweep("graft_schema_evo", spark.sparkContext.applicationId)
+    val base = StaleOutputs.appDir(spark, "schema_evo", dir)
     val o = spark.read.parquet(s"$dir/orders.parquet")
     o.filter(col("o_orderkey") % 2 === 0)
       .select("o_orderkey", "o_totalprice")

@@ -51,8 +51,7 @@ object ShardExport {
   }
 
   def outDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_shards/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
+    StaleOutputs.appDir(spark, "shards", dir)
 
   /** Write the sharded corpus and return the manifest read back from it:
     * per shard, doc count, char mass, and the md5 of the rank-ordered id
@@ -60,7 +59,6 @@ object ShardExport {
   def shardExport(spark: SparkSession, dir: String,
                   seed: String = "42", nShards: Int = 8): DataFrame = {
     val out = outDir(spark, dir)
-    StaleOutputs.sweep("graft_shards", spark.sparkContext.applicationId)
     assignShards(
       graft.Tables.documents(spark, dir).select("doc_id", "lang", "n_chars"),
       seed, nShards)

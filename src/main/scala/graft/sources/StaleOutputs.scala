@@ -1,25 +1,41 @@
 package graft.sources
 
-/** GC for applicationId-scoped scratch outputs. Every sink in this
-  * package (and the streaming sinks) writes under
-  * `java.io.tmpdir/graft_<tag>/<applicationId>/…` so concurrent
-  * applications never collide — but a finished application's directory
-  * can never be read again. Each writer calls [[sweep]] before writing:
-  * sibling application directories under the same tag that have been
-  * quiet for longer than [[SweepTtlMs]] are deleted, so the scratch area
-  * converges to one live generation per tag. The TTL is the liveness
-  * guard: a CONCURRENTLY RUNNING application (bench alongside tests, two
-  * bench passes) keeps touching its directory well inside the TTL, so
-  * its in-flight sink/compaction/index output is never deleted
-  * mid-write; only genuinely abandoned generations age out. */
+import org.apache.spark.sql.SparkSession
+
+/** Owner of graft's on-disk scratch. Everything lives under [[root]]
+  * (the JVM's `java.io.tmpdir`); this is the only main-tree file that
+  * reads it.
+  *
+  * Layout and TTL contract for application-scoped outputs: every sink
+  * (the `sources` round trips, the streaming sinks, the ANN index round
+  * trips) writes under `<root>/graft_<tag>/<applicationId>/<dir name>`,
+  * taken from [[appDir]], so concurrent applications never collide. A
+  * finished application's directory is never read again, so each
+  * [[appDir]] call first deletes sibling application directories under
+  * the same tag whose newest file is older than [[SweepTtlMs]]; the
+  * scratch area converges to one live generation per tag. The TTL is the
+  * liveness guard: a concurrently running application (bench alongside
+  * tests, two bench passes) keeps touching its directory well inside the
+  * TTL, so its in-flight output is never deleted mid-write; the caller's
+  * own directory is never swept. */
 object StaleOutputs {
 
   /** Sibling app dirs younger than this are presumed live and kept. */
   val SweepTtlMs: Long = 60L * 60 * 1000
 
-  def sweep(tag: String, keepApplicationId: String): Unit = {
+  def root: String = sys.props("java.io.tmpdir")
+
+  /** `<root>/graft_<tag>/<applicationId>/<name of dir>`, after sweeping
+    * the tag's stale sibling application dirs. */
+  def appDir(spark: SparkSession, tag: String, dir: String): String = {
+    val appId = spark.sparkContext.applicationId
+    sweep(s"graft_$tag", appId)
+    s"$root/graft_$tag/$appId/${new java.io.File(dir).getName}"
+  }
+
+  private def sweep(tag: String, keepApplicationId: String): Unit = {
     val now = System.currentTimeMillis()
-    val parent = new java.io.File(s"${sys.props("java.io.tmpdir")}/$tag")
+    val parent = new java.io.File(s"$root/$tag")
     val stale = Option(parent.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName != keepApplicationId &&
         now - latestMtime(f) > SweepTtlMs)

@@ -23,8 +23,7 @@ import org.apache.spark.sql.functions._
 object TimeTravel {
 
   def baseDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_timetravel/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
+    StaleOutputs.appDir(spark, "timetravel", dir)
 
   private def listParquet(d: String): Seq[String] =
     Option(new java.io.File(d).listFiles()).getOrElse(Array.empty)
@@ -54,7 +53,6 @@ object TimeTravel {
     * manifest reference. */
   def buildDemo(spark: SparkSession, dir: String): String = {
     val base = baseDir(spark, dir)
-    StaleOutputs.sweep("graft_timetravel", spark.sparkContext.applicationId)
     val docs = graft.Tables.documents(spark, dir)
       .select("doc_id", "lang", "n_chars", "text")
     docs.repartitionByRange(4, col("doc_id"))

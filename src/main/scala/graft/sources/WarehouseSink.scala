@@ -62,14 +62,11 @@ object WarehouseSink {
     * partition-order-dependent by design (SURVEY §0.2-6) — every
     * deterministic column round-trips.
     *
-    * Output path carries the applicationId (same concurrency contract as
-    * JsonlCorpus.roundTrip). sfDir is ignored, like every ref_* surface;
-    * the registered entry passes the session's [[Pipeline.rawDir]]. */
+    * sfDir is ignored, like every ref_* surface; the registered entry
+    * passes the session's [[Pipeline.rawDir]]. */
   def roundTrip(spark: SparkSession,
                 rawDir: String = Pipeline.DefaultRawDir): DataFrame = {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_warehouse/" +
-      spark.sparkContext.applicationId
-    StaleOutputs.sweep("graft_warehouse", spark.sparkContext.applicationId)
+    val out = StaleOutputs.appDir(spark, "warehouse", rawDir)
     write(Pipeline.build(spark, rawDir), out)
     val star = read(spark, out)
     star.factSales

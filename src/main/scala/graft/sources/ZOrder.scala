@@ -67,18 +67,13 @@ object ZOrder {
       .write.mode("overwrite").parquet(out)
   }
 
-  def outDir(spark: SparkSession, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_zorder/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-
   /** Driver surface (f06): z-order `orders` on (o_custkey, o_totalprice),
     * read the layout back, and answer a 2-D box query through it. The
     * layout must be invisible to results — the oracle computes the same
     * aggregate over the raw table — while ZOrderSpec proves the scan-side
     * skipping the layout exists for. */
   def zorderQuery(spark: SparkSession, dir: String): DataFrame = {
-    val out = outDir(spark, dir)
-    StaleOutputs.sweep("graft_zorder", spark.sparkContext.applicationId)
+    val out = StaleOutputs.appDir(spark, "zorder", dir)
     writeZOrdered(graft.Tables.orders(spark, dir),
       "o_custkey", "o_totalprice", out, 16)
     spark.read.parquet(out)

@@ -74,7 +74,7 @@ object ClusteredEmbeddings {
 
   /** Write (once per machine) and return the corpus dir. */
   def ensure(spark: SparkSession): String = synchronized {
-    val dir = new java.io.File(sys.props("java.io.tmpdir"), "graft_clustered_sfspec")
+    val dir = new java.io.File(graft.sources.StaleOutputs.root, "graft_clustered_sfspec")
     val table = new java.io.File(dir, "embeddings.parquet")
     if (!new java.io.File(table, "_SUCCESS").exists()) {
       import spark.implicits._

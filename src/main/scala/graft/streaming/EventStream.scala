@@ -86,20 +86,18 @@ object EventStream {
       .withWatermark("event_time", "10 minutes")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
 
+  /** Drain `df` with AvailableNow into the memory sink `name`, in output
+    * mode `mode`, and return the sink's table. */
+  private def drainToMemory(df: DataFrame, name: String, mode: String): DataFrame = {
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    df.sparkSession.table(name)
+  }
+
   /** Run [[dedupEvents]] with AvailableNow into a memory sink. Append mode:
     * each surviving event emits exactly once. */
-  def runDedupAvailableNow(spark: SparkSession, dir: String,
-                           queryName: String = "graft_dedup"): DataFrame = {
-    val q = dedupEvents(readEvents(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runDedupAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(dedupEvents(readEvents(spark, dir)), "graft_dedup", "append")
 
   /** Driver-contract batch anchor for the streaming dedup: the
     * deterministic form — per (user_id, event_type) the minimum event_id is
@@ -139,18 +137,8 @@ object EventStream {
   }
 
   /** Run [[streamStreamJoin]] with AvailableNow into a memory sink. */
-  def runStreamJoinAvailableNow(spark: SparkSession, dir: String,
-                                queryName: String = "graft_ssjoin"): DataFrame = {
-    val q = streamStreamJoin(spark, dir)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runStreamJoinAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(streamStreamJoin(spark, dir), "graft_ssjoin", "append")
 
   /** Streaming → warehouse round trip (the streaming analog of the f01 /
     * warehouse sink round trips): the windowed aggregation runs as an
@@ -173,14 +161,9 @@ object EventStream {
     *
     * The written table is read back and projected to the
     * driver-contract form, so the oracle verifies the entire
-    * stream→sink→scan path end to end. Output dir carries the
-    * applicationId (same concurrency contract as the other round
-    * trips). */
+    * stream→sink→scan path end to end. */
   def streamToWarehouse(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_stream_sink/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_stream_sink",
-      spark.sparkContext.applicationId)
+    val out = graft.sources.StaleOutputs.appDir(spark, "stream_sink", dir)
     // append-mode sink + fixed app-scoped dir: a SECOND invocation in the
     // same application (bench interleaves 3+ passes) would append a full
     // duplicate generation — reset makes each invocation rebuild from empty
@@ -241,10 +224,7 @@ object EventStream {
     * (arg_max over all events), proving the whole
     * stream→merge→sink→scan path. */
   def streamUpsertLatest(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_upsert/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_upsert",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "upsert", dir)
     @volatile var last: Option[String] = None
     val src = readEvents(spark, dir)
     val q = src
@@ -401,18 +381,8 @@ object EventStream {
   /** Run the windowed aggregation with AvailableNow into a memory sink and
     * return the collected result. Complete mode: every window emits its
     * final value once the source drains. */
-  def runWindowedAvailableNow(spark: SparkSession, dir: String,
-                              queryName: String = "graft_windowed"): DataFrame = {
-    val q = windowedCounts(readEvents(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-  }
+  def runWindowedAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(windowedCounts(readEvents(spark, dir)), "graft_windowed", "complete")
 
   // ---------------------------------------------------------------------
   // w08: STREAMING ingest dedup against a static signature index — the
@@ -583,10 +553,7 @@ object EventStream {
     * what the oracle computes. */
   def streamBandIndex(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.MinHashSigs.register(spark)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_stream_index/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_stream_index",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "stream_index", dir)
     // min-merge is idempotent, so a re-run over the same feed would
     // converge even on top of the old log — reset anyway so repeated
     // bench passes don't grow the delta log without bound
@@ -672,10 +639,7 @@ object EventStream {
     * per-arrival disjoint, so no merge function is even needed (simpler
     * than w12's bucket-min). Compaction is s37's job. */
   def streamAnnIngest(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_stream_annlog/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_stream_annlog",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "stream_annlog", dir)
     graft.sources.StaleOutputs.reset(base)
     val gen = s"$base/gen"
     @volatile var batches = 0
@@ -762,18 +726,8 @@ object EventStream {
     * Append mode: each surviving document emits exactly once; the result
     * is arrival-order-free (the keep decision is a pure per-row
     * function), so the driver oracle hash-matches it directly. */
-  def runIngestDedupAvailableNow(spark: SparkSession, dir: String,
-                                 queryName: String = "graft_ingest_dedup"): DataFrame = {
-    val q = ingestDedupStream(spark, dir)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).orderBy("doc_id")
-  }
+  def runIngestDedupAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(ingestDedupStream(spark, dir), "graft_ingest_dedup", "append").orderBy("doc_id")
 
   /** STREAMING SKETCH MAINTENANCE (w09) — t29's count-min grid kept live
     * over the document feed. This is WHY sketches matter on streams: a
@@ -795,18 +749,9 @@ object EventStream {
     * Complete mode: the sink holds the whole (grid-sized) state each
     * commit — exactly the "publish the sketch" step a live pipeline
     * runs per trigger. */
-  def runStreamCmsAvailableNow(spark: SparkSession, dir: String,
-                               queryName: String = "graft_stream_cms"): DataFrame = {
-    val q = streamCmsCells(readDocuments(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).orderBy("hrow", "bucket")
-  }
+  def runStreamCmsAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(streamCmsCells(readDocuments(spark, dir)),
+      "graft_stream_cms", "complete").orderBy("hrow", "bucket")
 
   /** STREAM-STATIC ENRICHMENT (w11) — the canonical production join: an
     * unbounded event stream enriched against a bounded dimension table
@@ -836,18 +781,9 @@ object EventStream {
 
   /** Run [[enrichedSegmentStats]] as an AvailableNow stream into a
     * memory sink and return the settled grid, ordered. */
-  def runEnrichAvailableNow(spark: SparkSession, dir: String,
-                            queryName: String = "graft_enrich"): DataFrame = {
-    val q = enrichedSegmentStats(readEvents(spark, dir), segmentDim(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).orderBy("segment", "event_type")
-  }
+  def runEnrichAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(enrichedSegmentStats(readEvents(spark, dir), segmentDim(spark, dir)),
+      "graft_enrich", "complete").orderBy("segment", "event_type")
 
   /** STREAM AS-OF SCD2 ENRICHMENT (w13) — the "dimension correctness at
     * event time" production join: arriving events (md5 bucket 'f', the
@@ -888,18 +824,8 @@ object EventStream {
     * Append mode, arrival-order-free (the probe is a pure per-row
     * function of the static dim), so the driver oracle hash-matches the
     * sink directly. */
-  def runAsOfEnrichAvailableNow(spark: SparkSession, dir: String,
-                                queryName: String = "graft_asof_enrich"): DataFrame = {
-    val q = asOfEnrichStream(spark, dir)
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).orderBy("event_id")
-  }
+  def runAsOfEnrichAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(asOfEnrichStream(spark, dir), "graft_asof_enrich", "append").orderBy("event_id")
 
   /** NATIVE SESSION WINDOWS (w10) — the DECLARATIVE form of [[sessionize]]:
     * Spark's built-in `session_window` aggregate (dynamic-gap merging
@@ -930,18 +856,9 @@ object EventStream {
         unix_micros(col("session_window.end")).as("end_us"),
         col("events"), col("total_value"))
 
-  def runSessionWindowAvailableNow(spark: SparkSession, dir: String,
-                                   queryName: String = "graft_session_win"): DataFrame = {
-    val q = sessionWindowStats(readEvents(spark, dir))
-      .writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).orderBy("user_id", "start_us")
-  }
+  def runSessionWindowAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    drainToMemory(sessionWindowStats(readEvents(spark, dir)),
+      "graft_session_win", "append").orderBy("user_id", "start_us")
 
   /** Dead-letter routing rule shared by the w15 stream and its oracle:
     * first matching rule wins. `value_outlier` models a bounds check,
@@ -970,10 +887,7 @@ object EventStream {
     * AvailableNow's batch slicing cannot change the answer (w14's
     * determinism stance). */
   def streamQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_quarantine/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_quarantine",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "quarantine", dir)
     graft.sources.StaleOutputs.reset(base)
     val good = s"$base/good"
     val dead = s"$base/dead"
@@ -1035,8 +949,8 @@ object EventStream {
     * IN ORDER, so once the run's QueryTerminatedEvent arrives every
     * progress event is already folded; batches are keyed by batchId so a
     * replayed progress event can't double-count. */
-  def runObservedIngest(spark: SparkSession, dir: String,
-                        queryName: String = "graft_observed"): DataFrame = {
+  def runObservedIngest(spark: SparkSession, dir: String): DataFrame = {
+    val queryName = "graft_observed"
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener.{
       QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -1128,10 +1042,7 @@ object EventStream {
     * determinism stance), and total docs across reasons must equal the
     * feed — nothing lost, nothing duplicated. */
   def streamQualityGate(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_quality_gate/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_quality_gate",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "quality_gate", dir)
     graft.sources.StaleOutputs.reset(base)
     val out = s"$base/routed"
     val routed = qualityGateVerdict(readDocuments(spark, dir))
@@ -1193,10 +1104,7 @@ object EventStream {
     * monoids, so AvailableNow slicing cannot change it (w14's stance). */
   def streamModelScore(spark: SparkSession, dir: String): DataFrame = {
     val (lrs, prior) = graft.ops.TextAnalysis.distilledModel(spark, dir)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_model_score/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_model_score",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "model_score", dir)
     graft.sources.StaleOutputs.reset(base)
     val out = s"$base/routed"
     val scored = modelScoreVerdict(
@@ -1271,10 +1179,7 @@ object EventStream {
     * once. Nothing here grows with the corpus except the one narrow
     * verdict pass the gate already pays. */
   def streamGateDrift(spark: SparkSession, dir: String): DataFrame = {
-    val base = s"${sys.props("java.io.tmpdir")}/graft_gate_drift/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_gate_drift",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "gate_drift", dir)
     graft.sources.StaleOutputs.reset(base)
     val out = s"$base/kept_counts"
     val countsSchema = StructType(Seq(
@@ -1387,10 +1292,7 @@ object EventStream {
     * #verdicts×#langs-row aggregate per trigger. */
   def streamIngestLedger(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.MinHashSigs.register(spark)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_ingest_ledger/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
-    graft.sources.StaleOutputs.sweep("graft_ingest_ledger",
-      spark.sparkContext.applicationId)
+    val base = graft.sources.StaleOutputs.appDir(spark, "ingest_ledger", dir)
     graft.sources.StaleOutputs.reset(base)
     val out = s"$base/counts"
     val countsSchema = StructType(Seq(

@@ -919,8 +919,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = mf.collect()
     // precondition: the landing really produced multi-file buckets —
     // otherwise the Sort-present assertion below pins nothing
-    val landed = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_bucketedjoin")
+    val landed = new java.io.File(graft.sources.ArtifactStore.BucketStore.root)
       .listFiles().filter(_.getName.startsWith("bktjoin_mf_"))
       .maxBy(_.lastModified())
     val bucketFiles = new java.io.File(landed, "lineitem")
@@ -1120,8 +1119,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.contains("LocalTableScan"), p.take(2000))
     assert(!p.contains("Scan parquet"), p.take(3000))
     // the compacted artifacts exist on disk, versioned like the build's
-    val base = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft_annartifacts")
+    val base = new java.io.File(graft.sources.ArtifactStore.AnnStore.root)
     val names = Option(base.listFiles()).map(_.map(_.getName).toSeq)
       .getOrElse(Seq.empty)
     assert(names.exists(_.startsWith("knncompact8e")),

@@ -16,10 +16,8 @@ class PrivateCacheSpec extends AnyFunSuite {
   private val Pinned = Map(
     "TextAnalysis.bpeMemo" ->
       "t24's merge table is the query result itself, not a shared intermediate",
-    "RuntimeBloom.sessions" ->
-      "one no-broadcast child session per parent session, not data",
-    "BucketedJoin.sessions" ->
-      "one no-broadcast child session per parent session, not data",
+    "GraftSession.children" ->
+      "one child session per (parent session, conf settings), not data",
     "BucketedJoin.registered" ->
       "catalog registrations over ArtifactStore landings, not data",
     "MinHashSigs.prefixTables" ->

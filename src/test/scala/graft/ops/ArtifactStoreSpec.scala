@@ -27,8 +27,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val dir = "/root/testdata/sf0.001"
   private var spark: SparkSession = _
 
-  private val store =
-    new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_annartifacts")
+  private val store = new java.io.File(graft.sources.ArtifactStore.AnnStore.root)
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder()

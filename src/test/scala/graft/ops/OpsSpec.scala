@@ -940,8 +940,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val compacted = Similarity.indexCompactAnn(spark, dir).collect().toSeq
     val logical = Similarity.indexDeleteAnn(spark, dir).collect().toSeq
     assert(compacted === logical, "compacted index must serve s17's answers")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_anncompact/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}/codes"
+    val base = graft.sources.StaleOutputs.appDir(spark, "anncompact", dir) + "/codes"
     val cellDirs = Option(new java.io.File(base).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("cell="))
     assert(cellDirs.length > 1, s"expected cell=* inverted-list layout under $base")
@@ -1739,8 +1738,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val fromDisk = Similarity.indexRoundTrip(spark, dir).collect().toSeq
     val inSession = Similarity.ivfPqAnn(spark, dir).collect().toSeq
     assert(fromDisk === inSession)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_annindex/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
+    val base = graft.sources.StaleOutputs.appDir(spark, "annindex", dir)
     for (part <- Seq("centroids", "codebooks", "codes"))
       assert(new java.io.File(s"$base/$part").exists(), s"$part not persisted")
   }
@@ -1761,7 +1759,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
           .map(newestMtime)).max
       else if (f.getName == "_SUCCESS") 0L
       else f.lastModified()
-    val store = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_annartifacts")
+    val store = new java.io.File(graft.sources.ArtifactStore.AnnStore.root)
     for (f <- Seq[(SparkSession, String) => org.apache.spark.sql.DataFrame](
         Similarity.pqCodebooks, Similarity.pqCandidateCodes,
         Similarity.residCodebooks, Similarity.residCandidateCodes)) {
@@ -2967,8 +2965,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     Similarity.graphAnn(spark, dir).collect()
     def artifactDirs: Set[String] = {
       val sfName = new java.io.File(dir).getName
-      val base = new java.io.File(
-        s"${sys.props("java.io.tmpdir")}/graft_annartifacts")
+      val base = new java.io.File(graft.sources.ArtifactStore.AnnStore.root)
       Option(base.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
         .filter(n => n.contains(s"_${sfName}_") &&
           Seq("knngraph", "walkvec", "knnmedoid", "cents", "km")

@@ -48,8 +48,7 @@ class DataSkippingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("f13: manifest interval pruning plans a strict subset of files, same answer") {
-    val out = s"${sys.props("java.io.tmpdir")}/graft_skip_spec/" +
-      spark.sparkContext.applicationId
+    val out = StaleOutputs.appDir(spark, "skip_spec", dir)
     val docs = graft.Tables.documents(spark, dir)
     DataSkipping.writeWithStats(docs, "n_chars", Seq("n_chars", "doc_id"), out, 8)
 

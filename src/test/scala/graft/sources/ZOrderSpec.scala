@@ -51,8 +51,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("f06: 2-D box predicate skips most row groups under z-order, not under linear sort") {
-    val base = sys.props("java.io.tmpdir") +
-      s"/graft_zorder_spec/${spark.sparkContext.applicationId}"
+    val base = StaleOutputs.appDir(spark, "zorder_spec", dir)
     val orders = graft.Tables.orders(spark, dir)
     val total = orders.count()
 

@@ -25,7 +25,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   test("AvailableNow windowed aggregation matches the batch equivalent") {
-    val streamed = EventStream.runWindowedAvailableNow(spark, dir, "spec_windowed")
+    val streamed = EventStream.runWindowedAvailableNow(spark, dir)
       .orderBy("window_start", "event_type").collect()
     val batch = EventStream.windowedCountsBatch(spark, dir)
       .orderBy("window_start", "event_type").collect()
@@ -36,7 +36,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream-static enrichment settles to the batch join rollup") {
-    val streamed = EventStream.runEnrichAvailableNow(spark, dir, "spec_enrich").collect()
+    val streamed = EventStream.runEnrichAvailableNow(spark, dir).collect()
     val batch = EventStream.enrichedSegmentStats(
         graft.Tables.events(spark, dir), EventStream.segmentDim(spark, dir))
       .orderBy("segment", "event_type").collect()
@@ -98,7 +98,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AvailableNow dedup keeps one first-seen event per key, same key set as batch") {
-    val streamed = EventStream.runDedupAvailableNow(spark, dir, "spec_dedup").collect()
+    val streamed = EventStream.runDedupAvailableNow(spark, dir).collect()
     val streamedKeys = streamed
       .map(r => (r.getAs[Long]("user_id"), r.getAs[String]("event_type")))
     // exactly one survivor per key
@@ -114,7 +114,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream-stream interval join emits exactly the batch pair set") {
-    val streamed = EventStream.runStreamJoinAvailableNow(spark, dir, "spec_ssjoin")
+    val streamed = EventStream.runStreamJoinAvailableNow(spark, dir)
       .collect()
       .map(r => (r.getAs[Long]("purchase_id"), r.getAs[Long]("click_id"),
         r.getAs[Long]("gap_us")))
@@ -542,8 +542,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cannot race the assertion; suites run in parallel under sbt)
     def baseArtifacts: Set[String] = {
       val sfName = new java.io.File(dir).getName
-      val base = new java.io.File(
-        s"${sys.props("java.io.tmpdir")}/graft_annartifacts")
+      val base = new java.io.File(graft.sources.ArtifactStore.AnnStore.root)
       Option(base.listFiles()).map(_.map(_.getName).toSet).getOrElse(Set.empty)
         .filter(n => n.contains(s"_${sfName}_") &&
           Seq("knngraph", "walkvec", "knnmedoid", "cents", "km")
