@@ -8,13 +8,18 @@ package graft.ops
   */
 object OpsOracles {
 
+  /** Every embedding as a DOUBLE list `v` with its L2 `norm`, as CTE `n`
+    * keyed by `cols` — the cosine input of Similarity.knnBrute. */
+  private def normedCte(cols: String) =
+    s"""n AS (
+       |  SELECT $cols, embedding::DOUBLE[] AS v,
+       |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
+       |  FROM embeddings)""".stripMargin
+
   /** Shared by d06 (detection) and d09 (application): same-cell cosine
     * pairs ranked with full tie-breaks. */
   private val embNearDupCte =
-    """n AS (
-      |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
-      |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-      |  FROM embeddings),
+    s"""${normedCte("vec_id, label")},
       |scored AS (
       |  SELECT a.vec_id AS v1, b.vec_id AS v2,
       |    round(list_sum(list_transform(range(len(a.v)), i -> a.v[i+1] * b.v[i+1]))
@@ -34,29 +39,34 @@ object OpsOracles {
 
   private val shingleCte = shingleCteFrom("documents")
 
-  /** d30's deterministic calibration sample — mirrors
-    * [[graft.ops.Dedup.calibrationSampleOf]]: identity while the corpus
-    * fits the 5000-doc budget (every gated SF), an md5-uniform fraction
-    * beyond it. The 4-nibble decode is the simhash oracle's strpos trick. */
+  /** Eight hex digits of the md5 string `m` from 1-based position `from`
+    * as one non-negative BIGINT — conv(substring(m, from, 8), 16, 10). */
+  private def hexToBigint(m: String, from: Int = 1): String =
+    (0 until 8).map { i =>
+      val mult = 1L << (4 * (7 - i))
+      s"(strpos('0123456789abcdef', $m[${from + i}]) - 1) * CAST($mult AS BIGINT)"
+    }.mkString(" + ")
+
+  /** t49's Gopher counts over `toks` and `text`, as select columns —
+    * TextAnalysis.gopherFlagsOf's inputs. */
+  private val gopherCountCols =
+    """CAST(len(toks) AS BIGINT) AS n_words,
+      |    CAST(list_sum(list_transform(toks, w -> length(w))) AS BIGINT) AS word_chars,
+      |    CAST(len(regexp_extract_all(text, '#'))
+      |       + len(regexp_extract_all(text, '\.\.\.')) AS BIGINT) AS sym_hits,
+      |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
+      |    CAST(len(list_intersect(list_distinct(toks),
+      |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_distinct""".stripMargin
+
   /** t50/w17 shared model CTEs: t49 labels (minStopwords=1) + 'f'
     * holdout, (doc, bucket) unigram counts, the 64-bucket lr model and
     * the class prior — everything up to scoring. */
-  private def distilledModelCtes: String = {
-    val decode = (0 until 8).map { i =>
-      val mult = 1L << (4 * (7 - i))
-      s"(strpos('0123456789abcdef', m[${i + 1}]) - 1) * CAST($mult AS BIGINT)"
-    }.mkString(" + ")
+  private val distilledModelCtes =
     s"""tq AS (
       |  SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
       |mq AS (
       |  SELECT doc_id,
-      |    CAST(len(toks) AS BIGINT) AS n_words,
-      |    CAST(list_sum(list_transform(toks, w -> length(w))) AS BIGINT) AS word_chars,
-      |    CAST(len(regexp_extract_all(text, '#'))
-      |       + len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS sym_hits,
-      |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-      |    CAST(len(list_intersect(list_distinct(toks),
-      |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_distinct
+      |    $gopherCountCols
       |  FROM tq),
       |lab AS (
       |  SELECT doc_id,
@@ -71,7 +81,7 @@ object OpsOracles {
       |  SELECT doc_id, unnest(string_split(text, ' ')) AS tk FROM documents),
       |tok AS (SELECT doc_id, md5(tk) AS m FROM tok0),
       |pdb AS (
-      |  SELECT doc_id, CAST(($decode) % 64 AS INT) AS b,
+      |  SELECT doc_id, CAST((${hexToBigint("m")}) % 64 AS INT) AS b,
       |    CAST(count(*) AS BIGINT) AS n
       |  FROM tok GROUP BY 1, 2),
       |cnt AS (
@@ -93,8 +103,11 @@ object OpsOracles {
       |  SELECT round(ln(CAST(sum(CASE WHEN label = 1 THEN 1 ELSE 0 END) AS DOUBLE)
       |    / sum(CASE WHEN label = 0 THEN 1 ELSE 0 END)), 6) AS pr
       |  FROM lab WHERE NOT is_eval)""".stripMargin
-  }
 
+  /** d30's deterministic calibration sample — mirrors
+    * [[graft.ops.Dedup.calibrationSampleOf]]: identity while the corpus
+    * fits the 5000-doc budget (every gated SF), an md5-uniform fraction
+    * beyond it. The 4-nibble decode is the simhash oracle's strpos trick. */
   private val calibrationSampleCte =
     """dcnt AS (SELECT CAST(count(*) AS BIGINT) AS dn FROM documents),
       |dsamp AS (SELECT doc_id, text,
@@ -107,6 +120,19 @@ object OpsOracles {
       |       + (strpos('0123456789abcdef', m[3]) - 1) * 16
       |       + (strpos('0123456789abcdef', m[4]) - 1) AS BIGINT) * dn
       |      < 5000 * 65536)""".stripMargin
+
+  /** t24's training vocabulary: the 256 most frequent lowercase
+    * alphanumeric words as `w`(word, freq), each split into `|`-joined
+    * symbols as `v0` — the input of TextAnalysis.bpeMergesOf. */
+  private val bpeVocabCtes =
+    """w AS (
+      |  SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
+      |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
+      |  WHERE regexp_matches(tok, '^[a-z0-9]+$')
+      |  GROUP BY 1 ORDER BY freq DESC, word LIMIT 256),
+      |v0 AS (SELECT word, freq,
+      |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
+      |  FROM w)""".stripMargin
 
   /** t24: the eight BPE stages unrolled (DuckDB 1.0 has no recursive
     * lambda state beyond list_reduce's first-element seed, and memory's
@@ -130,6 +156,10 @@ object OpsOracles {
        |    ELSE acc || '|' || s END) AS repr
        |  FROM $prev, t$k)""".stripMargin
   }
+
+  /** [[bpeStage]] 1..8: t24's merges as `t1`..`t8` —
+    * TextAnalysis.bpeMergesOf's eight merges. */
+  private val bpeStages = (1 to 8).map(bpeStage).mkString(",\n")
 
   /** t56: one BATCHED round — the bounded ranked prefix (LIMIT mirrors
     * TextAnalysis.BpePairScanBudget, the d30 bounded-in-code rule), a
@@ -178,14 +208,7 @@ object OpsOracles {
     val union = (for (r <- 1 to rounds; k <- 1 to batch) yield
       s"SELECT CAST($r AS BIGINT) AS round, CAST($k AS INT) AS pick, a AS lhs, b AS rhs, cnt AS pair_count, a || b AS merged FROM s$r$k WHERE a IS NOT NULL")
       .mkString("\nUNION ALL\n")
-    s"""WITH w AS (
-       |  SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
-       |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')
-       |  GROUP BY 1 ORDER BY freq DESC, word LIMIT 256),
-       |v0 AS (SELECT word, freq,
-       |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
-       |  FROM w),
+    s"""WITH $bpeVocabCtes,
        |$stages
        |$union
        |ORDER BY round, pick""".stripMargin
@@ -226,27 +249,15 @@ object OpsOracles {
   }
 
   private def bpeOracleSql: String = {
-    val stages = (1 to 8).map(bpeStage).mkString(",\n")
     val union = (1 to 8).map(k =>
       s"SELECT CAST($k AS BIGINT) AS step, a AS lhs, b AS rhs, cnt AS pair_count, a || b AS merged FROM t$k")
       .mkString("\nUNION ALL\n")
-    s"""WITH w AS (
-       |  SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
-       |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')
-       |  GROUP BY 1 ORDER BY freq DESC, word LIMIT 256),
-       |v0 AS (SELECT word, freq,
-       |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
-       |  FROM w),
-       |$stages
+    s"""WITH $bpeVocabCtes,
+       |$bpeStages
        |$union
        |ORDER BY step""".stripMargin
   }
 
-  /** t25: the t24 merge stages (t1..t8) re-derived, then the encode chain —
-    * the same string-accumulator greedy fold applied to every distinct
-    * corpus word (not just the training vocabulary), joined back to the
-    * token stream for per-doc subword counts. */
   /** The e1..e8 greedy-encode chain over e0's distinct word types —
     * shared by the t25 and t34 oracles. */
   private def bpeEncodeStages: String =
@@ -261,26 +272,26 @@ object OpsOracles {
          |  FROM $prev, t$k)""".stripMargin
     }.mkString(",\n")
 
-  private def bpeEncodeOracleSql: String = {
-    val stages = (1 to 8).map(bpeStage).mkString(",\n")
-    val encodeStages = bpeEncodeStages
-    s"""WITH w AS (
-       |  SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
-       |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')
-       |  GROUP BY 1 ORDER BY freq DESC, word LIMIT 256),
-       |v0 AS (SELECT word, freq,
-       |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
-       |  FROM w),
-       |$stages,
+  /** The t24 merge stages (t1..t8) re-derived, then [[bpeEncodeStages]]
+    * over every distinct corpus word (not just the training vocabulary)
+    * as `dw`(key, word) + `e0`..`e8` — TextAnalysis.bpeEncodeOf's
+    * chain, keyed by doc_id (t25) or lang (t34). */
+  private def bpeEncodeCtes(key: String): String =
+    s"""$bpeVocabCtes,
+       |$bpeStages,
        |dw AS (
-       |  SELECT doc_id, tok AS word
-       |  FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
+       |  SELECT $key, tok AS word
+       |  FROM (SELECT $key, unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
        |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')),
        |e0 AS (SELECT DISTINCT word,
        |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
        |  FROM dw),
-       |$encodeStages,
+       |$bpeEncodeStages""".stripMargin
+
+  /** t25: [[bpeEncodeCtes]] joined back to the token stream for per-doc
+    * subword counts. */
+  private def bpeEncodeOracleSql: String =
+    s"""WITH ${bpeEncodeCtes("doc_id")},
        |enc AS (SELECT word, CAST(len(string_split(repr, '|')) AS INT) AS n_sub FROM e8)
        |SELECT dw.doc_id, CAST(count(*) AS BIGINT) AS word_count,
        |  CAST(sum(enc.n_sub) AS BIGINT) AS subword_count,
@@ -288,30 +299,12 @@ object OpsOracles {
        |FROM dw JOIN enc USING (word)
        |GROUP BY dw.doc_id
        |ORDER BY dw.doc_id""".stripMargin
-  }
 
   /** t34: the t24 merge stages + shared encode chain, aggregated to
     * LANGUAGE grain — fertility (subwords/word) and chars/subword as
     * single divides of exact BIGINT sums. */
-  private def tokenizerFertilityOracleSql: String = {
-    val stages = (1 to 8).map(bpeStage).mkString(",\n")
-    s"""WITH w AS (
-       |  SELECT tok AS word, CAST(count(*) AS BIGINT) AS freq
-       |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
-       |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')
-       |  GROUP BY 1 ORDER BY freq DESC, word LIMIT 256),
-       |v0 AS (SELECT word, freq,
-       |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
-       |  FROM w),
-       |$stages,
-       |dw AS (
-       |  SELECT lang, tok AS word
-       |  FROM (SELECT lang, unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
-       |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')),
-       |e0 AS (SELECT DISTINCT word,
-       |  array_to_string(list_transform(range(1, len(word) + 1), i -> word[i]), '|') AS repr
-       |  FROM dw),
-       |$bpeEncodeStages,
+  private def tokenizerFertilityOracleSql: String =
+    s"""WITH ${bpeEncodeCtes("lang")},
        |enc AS (SELECT word, CAST(len(string_split(repr, '|')) AS INT) AS n_sub,
        |  CAST(length(word) AS BIGINT) AS n_chars_w FROM e8)
        |SELECT dw.lang, CAST(count(*) AS BIGINT) AS words,
@@ -323,7 +316,6 @@ object OpsOracles {
        |FROM dw JOIN enc USING (word)
        |GROUP BY dw.lang
        |ORDER BY dw.lang""".stripMargin
-  }
 
   /** The three fixed-point PageRank supersteps unrolled (mirrors
     * GraphRank.superstep: BIGINT micro-unit mass, floor division, integer
@@ -390,11 +382,6 @@ object OpsOracles {
        |$rankSteps
        |$rankOutput""".stripMargin
 
-  /** g06: HashMin bounded-round connected components — the same
-    * [[GraphRank.ComponentRounds]] min-label supersteps as
-    * GraphRank.componentSizes, unrolled (each step: every node takes the
-    * min of its own and its neighbors' labels), then the component-size
-    * histogram. The shared constant keeps engine and oracle in lockstep. */
   /** Each step references the previous round TWICE (own label + the
     * neighbor join) — `AS MATERIALIZED` is load-bearing: DuckDB
     * auto-materializes multiply-referenced CTEs under a plain WITH, but
@@ -416,6 +403,11 @@ object OpsOracles {
     s"""l0 AS (SELECT src AS node, src AS l FROM deg),
        |${(1 to rounds).map(hashMinStep).mkString(",\n")}""".stripMargin
 
+  /** g06: HashMin bounded-round connected components — the same
+    * [[GraphRank.ComponentRounds]] min-label supersteps as
+    * GraphRank.componentSizes, unrolled (each step: every node takes the
+    * min of its own and its neighbors' labels), then the component-size
+    * histogram. The shared constant keeps engine and oracle in lockstep. */
   private def componentSizesOracleSql: String = {
     val rounds = GraphRank.ComponentRounds
     s"""WITH $rankEdgesCte,
@@ -612,6 +604,126 @@ object OpsOracles {
       |  FROM bands b JOIN bmin USING (band, bkey)
       |  WHERE b.doc_id > bmin.d1)""".stripMargin
 
+  /** The verify half of Dedup.minhashLsh: per-doc shingle-set `sizes` and
+    * the shared-shingle count `c` of every candidate pair, as CTE `inter`
+    * (d31 names it `linter`, beside a second detector's pairs). */
+  private def lshInterCtes(inter: String) =
+    s"""$lshCandCte,
+       |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+       |$inter AS (
+       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
+       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Dedup.jaccardOf's keep rule over `inter` + `sizes` (4dp-rounded
+    * jaccard >= 0.5) as CTE `name`, projecting `select` (which ends in
+    * `FROM inter`). */
+  private def jaccardKeepCte(name: String, select: String) =
+    s"""$name AS (
+       |  $select
+       |  JOIN sizes sa ON d1 = sa.doc_id
+       |  JOIN sizes sb ON d2 = sb.doc_id
+       |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5)""".stripMargin
+
+  /** The [[jaccardKeepCte]] projection of Dedup.jaccardOf's columns. */
+  private val jaccardSelect =
+    """SELECT d1, d2,
+      |    round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
+      |  FROM inter""".stripMargin
+
+  /** d03's and d04's result: every pair the keep rule keeps, with its
+    * jaccard, in (d1, d2) order — Dedup.jaccardOf's output. */
+  private val jaccardPairsSelect =
+    """SELECT d1, d2,
+      |  round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
+      |FROM inter
+      |JOIN sizes sa ON d1 = sa.doc_id
+      |JOIN sizes sb ON d2 = sb.doc_id
+      |WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5
+      |ORDER BY d1, d2""".stripMargin
+
+  /** d04's verified pair list (d1, d2) as `pairs` — Dedup.minhashLsh. */
+  private val lshPairsCtes =
+    s"${lshInterCtes("inter")},\n${jaccardKeepCte("pairs", "SELECT d1, d2 FROM inter")}"
+
+  /** d04's losers (the larger id of each verified pair) as `losers` —
+    * the set Dedup.dropNearDuplicatesOf drops. */
+  private val lshLosersCtes =
+    s"${lshInterCtes("inter")},\n${jaccardKeepCte("losers", "SELECT DISTINCT d2 FROM inter")}"
+
+  /** Reachability over the undirected edge list `bi`(a, b): min(node) per
+    * doc_id is the fixpoint of Dedup.dedupClustersOf's min-label
+    * propagation. */
+  private val clusterWalkCte =
+    """walk(doc_id, node) AS (
+      |  SELECT DISTINCT a, a FROM bi
+      |  UNION
+      |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a)""".stripMargin
+
+  /** [[clusterWalkCte]] over the pair CTE `pairs`, made undirected as
+    * Dedup.dedupClustersOf's edge list is. */
+  private def clusterWalkCtes(pairs: String) =
+    s"""bi AS (SELECT d1 AS a, d2 AS b FROM $pairs
+       |       UNION ALL SELECT d2, d1 FROM $pairs),
+       |$clusterWalkCte""".stripMargin
+
+  /** d16's components over d04's pairs (Dedup.dedupClusters). */
+  private val lshClusterWalkCtes = s"$lshPairsCtes,\n${clusterWalkCtes("pairs")}"
+
+  /** t02's quality signals per doc as `qual`, n_tokens cast to `tokens` —
+    * the gate of Dedup.cleanCorpus. */
+  private def qualCte(tokens: String) =
+    s"""qual AS (
+       |  SELECT doc_id,
+       |    CAST(len(string_split(text, ' ')) AS $tokens) AS n_tokens,
+       |    round(len(list_filter(string_split(text, ' '),
+       |          w -> w IN ('the','a','of','and','is')))
+       |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS stop_ratio,
+       |    round(1.0 - len(list_distinct(string_split(text, ' ')))
+       |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS repetition_ratio
+       |  FROM documents)""".stripMargin
+
+  /** The support-≥2 co-purchase graph as `edges`(p1 < p2) over the
+    * basket `items` and pair `support` — GraphRank.copurchaseSupport and
+    * its edge cut. */
+  private val basketEdgesCtes =
+    """items AS (
+      |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+      |pairs AS (
+      |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
+      |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
+      |  GROUP BY 1, 2),
+      |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2)""".stripMargin
+
+  /** [[basketEdgesCtes]] oriented by packed (degree, id) keys as
+    * `oriented`(src, dst, dstk) — GraphRank.triangleCount's orientation,
+    * shared by g03 and g10. */
+  private val orientedEdgesCtes =
+    s"""$basketEdgesCtes,
+       |deg AS (
+       |  SELECT pk, count(*) AS d FROM (
+       |    SELECT p1 AS pk FROM edges UNION ALL SELECT p2 AS pk FROM edges)
+       |  GROUP BY 1),
+       |okey AS (SELECT pk, d * 2147483648 + pk AS k FROM deg),
+       |oriented AS (
+       |  SELECT CASE WHEN ka.k < kb.k THEN e.p1 ELSE e.p2 END AS src,
+       |         CASE WHEN ka.k < kb.k THEN e.p2 ELSE e.p1 END AS dst,
+       |         CASE WHEN ka.k < kb.k THEN kb.k ELSE ka.k END AS dstk
+       |  FROM edges e
+       |  JOIN okey ka ON e.p1 = ka.pk
+       |  JOIN okey kb ON e.p2 = kb.pk)""".stripMargin
+
+  /** Every doc's LSH band keys with its md5 arrival bucket as `bb` —
+    * the index/delta split of Dedup.incrementalNearDupOf. */
+  private val bandBucketsCtes =
+    s"""$shingleCte,
+       |$sigBandsCte,
+       |bb AS (
+       |  SELECT doc_id, band, bkey,
+       |    substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket
+       |  FROM bands)""".stripMargin
+
   /** Trained-IVF building block shared by s06/s07/d13 (mirrors
     * Similarity.cellScored + trainedAssignment/cellRanked): per-cell mean
     * centroids seeded from labels, then every vector distance-ranked
@@ -621,17 +733,14 @@ object OpsOracles {
     * sorted by cell id, and array_position takes the FIRST index
     * achieving the rounded minimum distance). */
   private val ivfRankedCte =
-    """cent0 AS (
+    s"""cent0 AS (
       |  SELECT label AS cell, i AS dim,
       |    round(avg(CAST(embedding[i+1] AS DOUBLE)), 6) AS centroid
       |  FROM embeddings, range(64) AS t(i)
       |  GROUP BY label, i),
       |cent AS (
       |  SELECT cell, list(centroid ORDER BY dim) AS cv FROM cent0 GROUP BY cell),
-      |n AS (
-      |  SELECT vec_id, embedding::DOUBLE[] AS v,
-      |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-      |  FROM embeddings),
+      |${normedCte("vec_id")},
       |cellranked AS (
       |  SELECT n.vec_id, c.cell, n.v, n.norm,
       |    row_number() OVER (PARTITION BY n.vec_id ORDER BY
@@ -689,10 +798,7 @@ object OpsOracles {
     * centroid→super membership the final per-super argmin joins. `n`
     * carries norms for the cosine downstream. */
   private val semKmeansCtes =
-    s"""n AS (
-       |  SELECT vec_id, embedding::DOUBLE[] AS v,
-       |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-       |  FROM embeddings),
+    s"""${normedCte("vec_id")},
        |kk AS (SELECT greatest(8, CAST(ceil(count(*) / ${Similarity.SemDedupTargetCell}.0) AS BIGINT)) AS k
        |       FROM embeddings),
        |c0 AS (SELECT CAST(vec_id AS INT) AS cid, v AS cv FROM n
@@ -740,15 +846,20 @@ object OpsOracles {
        |    FROM n CROSS JOIN (SELECT * FROM sup SEMI JOIN routed USING (sup)) u)
        |  WHERE rk = 1)""".stripMargin
 
-  /** s29/s30 shared walk chain (mirrors Similarity.beamWalkScored):
-    * cells from the CORPUS-SIZED two-level-routed quantizer
-    * ([[semKmeansCtes]] — the graph build's pair join must stay
-    * O(N·targetCell), the d29 lesson applied to the index build), k-NN
-    * graph (per-node top-M same-cell cosine), per-cell medoid entry,
-    * then GraphAnnHops unrolled hops — e$t = the expanded frontier,
-    * s$t = its scored ranking (cosine + rnk kept), b$t = the rank-≤beam
-    * beam. The M/beam/hops literals come from the SAME constants the
-    * engine defaults read. */
+  /** [[semKmeansCtes]] plus each vector's cell from the two-level route
+    * as `assigned` — Similarity.semDedupAssignment. */
+  private val semAssignedCtes =
+    s"""$semKmeansCtes,
+       |assigned AS MATERIALIZED (
+       |  SELECT vec_id, cell, v, norm FROM (
+       |    SELECT w.vec_id, r.cell, w.v, w.norm,
+       |      row_number() OVER (PARTITION BY w.vec_id ORDER BY
+       |        round(list_sum(list_transform(range(64),
+       |          i -> (w.v[i+1] - r.cv[i+1]) * (w.v[i+1] - r.cv[i+1]))), 6) ASC,
+       |        r.cell ASC) AS rk
+       |    FROM vsup w JOIN routed r ON w.sup = r.sup)
+       |  WHERE rk = 1)""".stripMargin
+
   /** One unrolled hop of the beam walk, PARAMETERIZED over the CTE
     * names so the same generator serves the standard search walk
     * (prefix "", graph/cand/q), the s33 arrival walk (prefix "i" over
@@ -796,16 +907,7 @@ object OpsOracles {
     * candidates, per-cell medoids, scored same-cell pairs, and the
     * near+long-range edge graph — shared verbatim by s29/s30/s33/s34. */
   private val graphWalkBaseCtes = {
-    s"""$semKmeansCtes,
-       |assigned AS MATERIALIZED (
-       |  SELECT vec_id, cell, v, norm FROM (
-       |    SELECT w.vec_id, r.cell, w.v, w.norm,
-       |      row_number() OVER (PARTITION BY w.vec_id ORDER BY
-       |        round(list_sum(list_transform(range(64),
-       |          i -> (w.v[i+1] - r.cv[i+1]) * (w.v[i+1] - r.cv[i+1]))), 6) ASC,
-       |        r.cell ASC) AS rk
-       |    FROM vsup w JOIN routed r ON w.sup = r.sup)
-       |  WHERE rk = 1),
+    s"""$semAssignedCtes,
        |cand AS MATERIALIZED (
        |  SELECT vec_id AS cand_id, cell, v, norm FROM assigned
        |  WHERE vec_id >= 10),
@@ -841,6 +943,15 @@ object OpsOracles {
        |      // ${Similarity.GraphAnnEntryDegree}) = 0))""".stripMargin
   }
 
+  /** s29/s30 shared walk chain (mirrors Similarity.beamWalkScored):
+    * cells from the CORPUS-SIZED two-level-routed quantizer
+    * ([[semKmeansCtes]] — the graph build's pair join must stay
+    * O(N·targetCell), the d29 lesson applied to the index build), k-NN
+    * graph (per-node top-M same-cell cosine), per-cell medoid entry,
+    * then GraphAnnHops unrolled hops — e$t = the expanded frontier,
+    * s$t = its scored ranking (cosine + rnk kept), b$t = the rank-≤beam
+    * beam. The M/beam/hops literals come from the SAME constants the
+    * engine defaults read. */
   private val graphWalkCtes = {
     def hop(t: Int) = walkHopCte("", "graph", "cand", "q")(t)
     s"""$graphWalkBaseCtes,
@@ -1077,6 +1188,32 @@ object OpsOracles {
        |        FROM n, range(8) AS t(s)),
        |$pqTrainCtes""".stripMargin
 
+  /** IVF-PQ's query side over `probes`(query_id, cell, v), `cent`, the
+    * residual codebooks `c2` and the candidates' `codes`: per-(query,
+    * probed cell) residual LUTs and the ADC ranking `rankedq` — shared by
+    * [[ivfPqCtesWith]] and s16 (Similarity.ivfPqSearch). */
+  private val ivfPqQueryCtes =
+    """qres AS (
+      |  SELECT p.query_id, p.cell,
+      |    list_transform(range(64), i -> p.v[i+1] - c.cv[i+1]) AS v
+      |  FROM probes p JOIN cent c ON p.cell = c.cell),
+      |qsub AS (SELECT query_id, cell, CAST(s AS INT) AS s, v[s*8+1 : s*8+8] AS sv
+      |         FROM qres, range(8) AS t(s)),
+      |lut AS (
+      |  SELECT q.query_id, q.cell, q.s, b.cid AS code,
+      |    CAST(round(list_sum(list_transform(range(8),
+      |      i -> (q.sv[i+1] - b.cv[i+1]) * (q.sv[i+1] - b.cv[i+1]))), 6)
+      |      AS DECIMAL(18,6)) AS d
+      |  FROM qsub q JOIN c2 b ON q.s = b.s),
+      |scored AS (
+      |  SELECT query_id, cand_id, sum(d) AS adist
+      |  FROM codes JOIN lut USING (cell, s, code)
+      |  GROUP BY query_id, cand_id),
+      |rankedq AS (
+      |  SELECT *, row_number() OVER (
+      |    PARTITION BY query_id ORDER BY adist ASC, cand_id ASC) AS rnk
+      |  FROM scored)""".stripMargin
+
   /** IVF-PQ chain shared by s13 (the search), s14 (the recall report),
     * and s17 (`codesFilter` drops tombstoned candidates from the code
     * table): coarse cells, residual subvectors, residual-PQ training,
@@ -1100,40 +1237,43 @@ object OpsOracles {
        |probes AS (
        |  SELECT vec_id AS query_id, cell, v FROM cellranked
        |  WHERE rk <= 2 AND vec_id < 10),
-       |qres AS (
-       |  SELECT p.query_id, p.cell,
-       |    list_transform(range(64), i -> p.v[i+1] - c.cv[i+1]) AS v
-       |  FROM probes p JOIN cent c ON p.cell = c.cell),
-       |qsub AS (SELECT query_id, cell, CAST(s AS INT) AS s, v[s*8+1 : s*8+8] AS sv
-       |         FROM qres, range(8) AS t(s)),
-       |lut AS (
-       |  SELECT q.query_id, q.cell, q.s, b.cid AS code,
-       |    CAST(round(list_sum(list_transform(range(8),
-       |      i -> (q.sv[i+1] - b.cv[i+1]) * (q.sv[i+1] - b.cv[i+1]))), 6)
-       |      AS DECIMAL(18,6)) AS d
-       |  FROM qsub q JOIN c2 b ON q.s = b.s),
-       |scored AS (
-       |  SELECT query_id, cand_id, sum(d) AS adist
-       |  FROM codes JOIN lut USING (cell, s, code)
-       |  GROUP BY query_id, cand_id),
-       |rankedq AS (
-       |  SELECT *, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY adist ASC, cand_id ASC) AS rnk
-       |  FROM scored)""".stripMargin
+       |$ivfPqQueryCtes""".stripMargin
 
   private val ivfPqCtes = ivfPqCtesWith("")
 
-  /** m08: cross-modal retrieval — the m05 closed-form feature vectors
-    * through the s01 brute-cosine ranking. */
-  private val mediaSearchSql =
-    """WITH b0 AS (SELECT doc_id, octet_length(encode(text)) AS bytes FROM documents),
+  /** The top-3 of `rankedq` per query — Similarity.ivfPqAnn's answer. */
+  private val rankedqTop3 =
+    """SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
+      |FROM rankedq
+      |WHERE rnk <= 3
+      |ORDER BY query_id, rnk""".stripMargin
+
+  /** m05's closed-form feature vectors as `n`(vec_id, v) over the byte
+    * lengths `b0` — Multimodal.featureBatch's deterministic stub. */
+  private val mediaFeatureCtes =
+    """b0 AS (SELECT doc_id, octet_length(encode(text)) AS bytes FROM documents),
       |n AS (
       |  SELECT doc_id AS vec_id,
       |    [CAST(bytes AS DOUBLE), CAST(64 + bytes % 512 AS DOUBLE),
       |     CAST(64 + (bytes * 7) % 512 AS DOUBLE), CAST(bytes % 3 AS DOUBLE),
       |     CAST(bytes // 1024 + 1 AS DOUBLE), CAST(bytes % 997 AS DOUBLE),
       |     CAST(bytes % 499 AS DOUBLE), CAST(bytes % 251 AS DOUBLE)] AS v
-      |  FROM b0),
+      |  FROM b0)""".stripMargin
+
+  /** The top-3 of `scored` by cosine per query — Similarity.knnBrute's
+    * answer. */
+  private val cosineTop3 =
+    """SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk FROM (
+      |  SELECT *, row_number() OVER (
+      |    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rnk
+      |  FROM scored)
+      |WHERE rnk <= 3
+      |ORDER BY query_id, rnk""".stripMargin
+
+  /** m08: cross-modal retrieval — the m05 closed-form feature vectors
+    * through the s01 brute-cosine ranking. */
+  private val mediaSearchSql =
+    s"""WITH $mediaFeatureCtes,
       |n2 AS (SELECT vec_id, v,
       |  sqrt(list_sum(list_transform(v, x -> x * x))) AS norm FROM n),
       |scored AS (
@@ -1142,12 +1282,47 @@ object OpsOracles {
       |          / (q.norm * c.norm), 6) AS cosine
       |  FROM n2 q CROSS JOIN n2 c
       |  WHERE q.vec_id < 10 AND c.vec_id >= 10)
-      |SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-      |  SELECT *, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rnk
-      |  FROM scored)
-      |WHERE rnk <= 3
-      |ORDER BY query_id, rnk""".stripMargin
+      |$cosineTop3""".stripMargin
+
+  /** SRP-LSH's 16 hyperplanes over `dims` dimensions, regenerated from
+    * md5('srp|b|d'), as `wl`(b, wv) — Similarity.srpNearDupOf's planes. */
+  private def srpPlanesCtes(dims: Int) =
+    s"""w0 AS (
+       |  SELECT b, d,
+       |    (instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 4096 +
+       |    (instr('0123456789abcdef', substr(m, 2, 1)) - 1) * 256 +
+       |    (instr('0123456789abcdef', substr(m, 3, 1)) - 1) * 16 +
+       |    (instr('0123456789abcdef', substr(m, 4, 1)) - 1) - 32768 AS w
+       |  FROM (SELECT b, d,
+       |          md5('srp|' || CAST(b AS VARCHAR) || '|' || CAST(d AS VARCHAR)) AS m
+       |        FROM range(16) t1(b), range($dims) t2(d))),
+       |wl AS (SELECT b, list(w ORDER BY d) AS wv FROM w0 GROUP BY b)""".stripMargin
+
+  /** Every `vecs`(vec_id, v, norm) row's 16-bit sign code under `wl`,
+    * 2×8-bit bands, bucket-min candidate pairs and their exact cosine as
+    * `scored`(v1, v2, cosine) — Similarity.srpNearDupOf's detector. */
+  private def srpScoredCtes(dims: Int, vecs: String) =
+    s"""dots AS (
+       |  SELECT vec_id, b,
+       |    list_sum(list_transform(range($dims), i -> v[i+1] * wv[i+1])) AS dot
+       |  FROM $vecs CROSS JOIN wl),
+       |codes AS (
+       |  SELECT vec_id,
+       |    CAST(sum(CASE WHEN dot > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS code
+       |  FROM dots GROUP BY vec_id),
+       |bands AS (
+       |  SELECT vec_id, 0 AS band, code % 256 AS bkey FROM codes
+       |  UNION ALL SELECT vec_id, 1, code // 256 FROM codes),
+       |bmin AS (SELECT band, bkey, min(vec_id) AS v1 FROM bands GROUP BY 1, 2),
+       |cand AS (
+       |  SELECT DISTINCT bmin.v1, b.vec_id AS v2
+       |  FROM bands b JOIN bmin USING (band, bkey)
+       |  WHERE b.vec_id > bmin.v1),
+       |scored AS (
+       |  SELECT cand.v1, cand.v2,
+       |    round(list_sum(list_transform(range($dims), i -> a.v[i+1] * c.v[i+1]))
+       |          / (a.norm * c.norm), 6) AS cosine
+       |  FROM cand JOIN $vecs a ON cand.v1 = a.vec_id JOIN $vecs c ON cand.v2 = c.vec_id)""".stripMargin
 
   /** Shared by m06 (detection) and m07 (application): the m05 feature
     * vectors (closed-form from octet_length — Multimodal.featureBatch's
@@ -1155,49 +1330,53 @@ object OpsOracles {
     * dim=8: md5-derived hyperplanes, 16-bit codes, 2×8-bit bands,
     * bucket-min candidate pairing, exact cosine verify into `scored`. */
   private val mediaSrpCte =
-    """b0 AS (SELECT doc_id, octet_length(encode(text)) AS bytes FROM documents),
-      |n AS (
-      |  SELECT doc_id AS vec_id,
-      |    [CAST(bytes AS DOUBLE), CAST(64 + bytes % 512 AS DOUBLE),
-      |     CAST(64 + (bytes * 7) % 512 AS DOUBLE), CAST(bytes % 3 AS DOUBLE),
-      |     CAST(bytes // 1024 + 1 AS DOUBLE), CAST(bytes % 997 AS DOUBLE),
-      |     CAST(bytes % 499 AS DOUBLE), CAST(bytes % 251 AS DOUBLE)] AS v
-      |  FROM b0),
+    s"""$mediaFeatureCtes,
       |n2 AS (
       |  SELECT vec_id, v,
       |    sqrt(list_sum(list_transform(v, x -> x * x))) AS norm
       |  FROM n),
-      |w0 AS (
-      |  SELECT b, d,
-      |    (instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 4096 +
-      |    (instr('0123456789abcdef', substr(m, 2, 1)) - 1) * 256 +
-      |    (instr('0123456789abcdef', substr(m, 3, 1)) - 1) * 16 +
-      |    (instr('0123456789abcdef', substr(m, 4, 1)) - 1) - 32768 AS w
-      |  FROM (SELECT b, d,
-      |          md5('srp|' || CAST(b AS VARCHAR) || '|' || CAST(d AS VARCHAR)) AS m
-      |        FROM range(16) t1(b), range(8) t2(d))),
-      |wl AS (SELECT b, list(w ORDER BY d) AS wv FROM w0 GROUP BY b),
-      |dots AS (
-      |  SELECT vec_id, b,
-      |    list_sum(list_transform(range(8), i -> v[i+1] * wv[i+1])) AS dot
-      |  FROM n2 CROSS JOIN wl),
-      |codes AS (
-      |  SELECT vec_id,
-      |    CAST(sum(CASE WHEN dot > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS code
-      |  FROM dots GROUP BY vec_id),
-      |bands AS (
-      |  SELECT vec_id, 0 AS band, code % 256 AS bkey FROM codes
-      |  UNION ALL SELECT vec_id, 1, code // 256 FROM codes),
-      |bmin AS (SELECT band, bkey, min(vec_id) AS v1 FROM bands GROUP BY 1, 2),
-      |cand AS (
-      |  SELECT DISTINCT bmin.v1, b.vec_id AS v2
-      |  FROM bands b JOIN bmin USING (band, bkey)
-      |  WHERE b.vec_id > bmin.v1),
-      |scored AS (
-      |  SELECT cand.v1, cand.v2,
-      |    round(list_sum(list_transform(range(8), i -> a.v[i+1] * c.v[i+1]))
-      |          / (a.norm * c.norm), 6) AS cosine
-      |  FROM cand JOIN n2 a ON cand.v1 = a.vec_id JOIN n2 c ON cand.v2 = c.vec_id)""".stripMargin
+      |${srpPlanesCtes(8)},
+      |${srpScoredCtes(8, "n2")}""".stripMargin
+
+  /** SQ8 over the candidates (vec_id >= 10) of `n`(vec_id, v): per-dim
+    * `st`/`sa` min/max, every candidate decoded from its byte codes as
+    * `xh`(vec_id, xhat), and each query's squared L2 to it as CTE
+    * `scored` — Similarity.sqSearch. */
+  private def sq8ScoredCtes(scored: String) =
+    s"""st AS (
+       |  SELECT CAST(t.d AS INT) AS dim, min(v[t.d + 1]) AS mn,
+       |    max(v[t.d + 1]) AS mx
+       |  FROM n, unnest(range(len(v))) AS t(d)
+       |  WHERE vec_id >= 10
+       |  GROUP BY 1),
+       |sa AS (
+       |  SELECT list(mn ORDER BY dim) AS mns, list(mx ORDER BY dim) AS mxs
+       |  FROM st),
+       |xh AS (
+       |  SELECT vec_id,
+       |    list_transform(range(len(v)), d ->
+       |      CASE WHEN mxs[d + 1] = mns[d + 1] THEN mns[d + 1]
+       |      ELSE mns[d + 1] + least(255, greatest(0,
+       |        floor((v[d + 1] - mns[d + 1]) * 255 / (mxs[d + 1] - mns[d + 1]) + 0.5)))
+       |        * (mxs[d + 1] - mns[d + 1]) / 255 END) AS xhat
+       |  FROM n CROSS JOIN sa
+       |  WHERE vec_id >= 10),
+       |$scored AS (
+       |  SELECT q.vec_id AS query_id, x.vec_id AS cand_id,
+       |    round(list_sum(list_transform(range(len(q.v)),
+       |      i -> (q.v[i + 1] - x.xhat[i + 1]) * (q.v[i + 1] - x.xhat[i + 1]))), 6)
+       |      AS sqdist
+       |  FROM n q CROSS JOIN xh x
+       |  WHERE q.vec_id < 10)""".stripMargin
+
+  /** The top-3 of `scored` by sqdist per query — Similarity.sqAnn's answer. */
+  private val sqdistTop3 =
+    """SELECT query_id, cand_id, sqdist, CAST(rnk AS INT) AS rnk FROM (
+      |  SELECT *, row_number() OVER (
+      |    PARTITION BY query_id ORDER BY sqdist ASC, cand_id ASC) AS rnk
+      |  FROM scored)
+      |WHERE rnk <= 3
+      |ORDER BY query_id, rnk""".stripMargin
 
   private val eventWindowsSql =
     """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS window_start_epoch,
@@ -1209,22 +1388,14 @@ object OpsOracles {
       |ORDER BY 1, 2""".stripMargin
 
   private val knnBruteSql =
-    """WITH n AS (
-      |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
-      |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-      |  FROM embeddings),
+    s"""WITH ${normedCte("vec_id, label")},
       |scored AS (
       |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
       |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
       |          / (q.norm * c.norm), 6) AS cosine
       |  FROM n q CROSS JOIN n c
       |  WHERE q.vec_id < 10 AND c.vec_id >= 10)
-      |SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-      |  SELECT *, row_number() OVER (
-      |    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rnk
-      |  FROM scored)
-      |WHERE rnk <= 3
-      |ORDER BY query_id, rnk""".stripMargin
+      |$cosineTop3""".stripMargin
 
   private val simhashCodesCte = {
     val votes = (0 until 16)
@@ -1255,11 +1426,6 @@ object OpsOracles {
     * code_hi from md5 hex chars 1-8, code_lo from chars 9-16; exact
     * non-negative BIGINT arithmetic, no overflow on either engine). */
   private val simhash64CodesCte = {
-    def decode32(startPos: Int): String =
-      (0 until 8).map { i =>
-        val mult = 1L << (4 * (7 - i))
-        s"(strpos('0123456789abcdef', m[${startPos + i}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
     val votes =
       ((0 until 32).map(b => s"sum(2 * ((vhi >> $b) & 1) - 1) AS h$b") ++
        (0 until 32).map(b => s"sum(2 * ((vlo >> $b) & 1) - 1) AS l$b")).mkString(", ")
@@ -1272,7 +1438,7 @@ object OpsOracles {
       |  FROM documents),
       |tok AS (SELECT doc_id, md5(t) AS m FROM tok0),
       |tv AS (
-      |  SELECT doc_id, ${decode32(1)} AS vhi, ${decode32(9)} AS vlo
+      |  SELECT doc_id, ${hexToBigint("m")} AS vhi, ${hexToBigint("m", 9)} AS vlo
       |  FROM tok),
       |votes AS (SELECT doc_id, $votes FROM tv GROUP BY doc_id),
       |codes64 AS (
@@ -1326,6 +1492,218 @@ object OpsOracles {
       |WHERE bit_count(xor(h1, h2)) <= 3
       |ORDER BY d1, d2""".stripMargin
 
+  /** j05/j07's 30-min-gap sessions as `sess`(user_id, sid, s_start,
+    * s_end, n_events) over the µs event stream `ev` —
+    * IntervalJoin.sessionIntervals. */
+  private val sessionCtes =
+    """ev AS (
+      |  SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type
+      |  FROM events),
+      |s0 AS (SELECT user_id, ts_us, event_id,
+      |  lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
+      |    AS prev
+      |  FROM ev),
+      |s1 AS (SELECT user_id, ts_us, event_id,
+      |  CASE WHEN prev IS NULL OR ts_us - prev > 1800000000
+      |    THEN 1 ELSE 0 END AS brk FROM s0),
+      |s2 AS (SELECT user_id, ts_us,
+      |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+      |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
+      |  FROM s1),
+      |sess AS (SELECT user_id, sid, min(ts_us) AS s_start,
+      |  max(ts_us) AS s_end, count(*) AS n_events
+      |  FROM s2 GROUP BY 1, 2)""".stripMargin
+
+  /** j04/j06's per-purchase clicks ranked by |gap|, past before future
+    * on ties, as `ranked`(…, rk); equal-µs clicks pre-collapsed to the max
+    * event_id, and purchases without a click kept when `join` is a LEFT
+    * JOIN — AsOfJoin.nearest's pick order. */
+  private def nearestClickCtes(join: String) =
+    s"""p AS (
+       |  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS p_us
+       |  FROM events WHERE event_type = 'purchase'),
+       |c AS (
+       |  SELECT user_id, epoch_us(ts) AS c_us, max(event_id) AS click_id
+       |  FROM events WHERE event_type = 'click' GROUP BY user_id, epoch_us(ts)),
+       |ranked AS (
+       |  SELECT p.purchase_id, p.user_id, c.click_id,
+       |    c.c_us - p.p_us AS gap_us,
+       |    row_number() OVER (PARTITION BY p.purchase_id ORDER BY
+       |      abs(c.c_us - p.p_us) ASC,
+       |      CASE WHEN c.c_us <= p.p_us THEN 0 ELSE 1 END ASC) AS rk
+       |  FROM p $join c ON p.user_id = c.user_id)""".stripMargin
+
+  /** m01/m02's byte length `L` and format class flags per doc as `b` —
+    * the synthesized media layout Multimodal.decodedMeta parses. */
+  private val imageClassCte =
+    """b AS (
+      |  SELECT doc_id, octet_length(encode(text)) AS L,
+      |    (doc_id % 3 = 0 AND octet_length(encode(text)) >= 200) AS is_bmp,
+      |    (doc_id % 6 = 2 AND octet_length(encode(text)) >= 280) AS is_png,
+      |    (doc_id % 12 = 5 AND octet_length(encode(text)) >= 200) AS is_jpeg,
+      |    (doc_id % 12 = 11 AND octet_length(encode(text)) >= 64) AS is_webp
+      |  FROM documents)""".stripMargin
+
+  /** `width`, `height` and `format` over [[imageClassCte]]'s `b` — the
+    * per-format dimension laws of Multimodal.decodedMeta. */
+  private val imageDimCols =
+    """CASE WHEN is_bmp THEN 4 + L % 5
+      |         WHEN is_png THEN 4 + L % 6
+      |         WHEN is_jpeg THEN 3 + L % 6
+      |         WHEN is_webp THEN 5 + L % 9
+      |         ELSE 64 + L % 512 END AS width,
+      |    CASE WHEN is_bmp THEN 4 + L % 3
+      |         WHEN is_png THEN 4 + L % 4
+      |         WHEN is_jpeg THEN 3 + L % 4
+      |         WHEN is_webp THEN 4 + L % 7
+      |         ELSE 64 + (L * 7) % 512 END AS height,
+      |    CASE WHEN is_bmp THEN 'bmp'
+      |      WHEN is_png THEN 'png'
+      |      WHEN is_jpeg THEN 'jpeg'
+      |      WHEN is_webp THEN 'webp'
+      |      ELSE CASE L % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
+      |           ELSE 'webp' END END AS format""".stripMargin
+
+  /** t31/t35's HyperLogLog registers (m = 64) per source as CTE `regs`
+    * over the lowercase alphanumeric tokens `toks` —
+    * TextAnalysis.hllRegistersOf. */
+  private def hllRegisterCtes(regs: String) =
+    s"""toks AS (
+       |  SELECT source, tok AS word
+       |  FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS tok
+       |        FROM documents) s
+       |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')),
+       |h AS (
+       |  SELECT source, (${hexToBigint("m8")}) AS h
+       |  FROM (SELECT source, substr(md5('h#' || word), 1, 8) AS m8 FROM toks) t),
+       |b AS (SELECT source, h % 64 AS bucket, h // 64 AS w FROM h),
+       |$regs AS (
+       |  SELECT source, bucket,
+       |    max(CASE WHEN w = 0 THEN 27
+       |             ELSE strpos(lpad(bin(w), 26, '0'), '1') END) AS reg
+       |  FROM b GROUP BY 1, 2)""".stripMargin
+
+  /** t23's token-window chunks of `src` (window 32, stride 24) with
+    * their global token offset as `o`(doc_id, chunk_id, nt, off) —
+    * TextAnalysis.sequencePackOf's input. */
+  private def packOffsetsCtes(src: String) =
+    s"""t AS (SELECT doc_id, len(string_split(text, ' ')) AS n FROM $src),
+       |c AS (SELECT doc_id, unnest(range(0, n, 24)) AS s, n FROM t),
+       |ch AS (SELECT doc_id, CAST(s // 24 AS INT) AS chunk_id,
+       |  CAST(least(32, n - s) AS INT) AS nt FROM c),
+       |dt AS (SELECT doc_id, CAST(sum(nt) AS BIGINT) AS doc_tokens
+       |  FROM ch GROUP BY 1),
+       |db AS (SELECT doc_id, CAST(coalesce(sum(doc_tokens) OVER (ORDER BY doc_id
+       |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
+       |    AS doc_base
+       |  FROM dt),
+       |o AS (SELECT ch.doc_id, chunk_id, nt,
+       |  db.doc_base + CAST(coalesce(sum(nt) OVER (PARTITION BY ch.doc_id
+       |    ORDER BY chunk_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+       |    0) AS BIGINT) AS off
+       |  FROM ch JOIN db ON ch.doc_id = db.doc_id)""".stripMargin
+
+  /** w16/w18's first failing t49 rule per doc as `v`(cols…, reason) —
+    * EventStream.qualityGateVerdict. */
+  private def gopherReasonCtes(cols: String) =
+    s"""t AS (
+       |  SELECT doc_id, lang, text, string_split(text, ' ') AS toks FROM documents),
+       |m AS (
+       |  SELECT doc_id, lang,
+       |    $gopherCountCols
+       |  FROM t),
+       |v AS (
+       |  SELECT $cols,
+       |    CASE
+       |      WHEN NOT (n_words BETWEEN 50 AND 100000) THEN 'too_few_words'
+       |      WHEN NOT (3 * n_words <= word_chars AND word_chars <= 10 * n_words)
+       |        THEN 'word_length'
+       |      WHEN NOT (10 * sym_hits <= n_words) THEN 'symbol_heavy'
+       |      WHEN NOT (5 * alpha_words >= 4 * n_words) THEN 'non_alpha'
+       |      WHEN NOT (stop_distinct >= 1) THEN 'no_stopwords'
+       |      ELSE 'ok' END AS reason
+       |  FROM m)""".stripMargin
+
+  /** t02's per-doc quality signals as `s`(cols…, n_tokens, stop_ratio,
+    * repetition_ratio) — TextAnalysis.qualityScoreOf. */
+  private def qualityScoreCtes(cols: String) =
+    s"""t AS (SELECT $cols, string_split(text, ' ') AS toks FROM documents),
+       |s AS (SELECT $cols,
+       |  CAST(len(toks) AS INT) AS n_tokens,
+       |  round(len(list_filter(toks, w -> w IN ('the','a','of','and','is')))
+       |        / CAST(len(toks) AS DOUBLE), 4) AS stop_ratio,
+       |  round(1.0 - len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE), 4) AS repetition_ratio
+       |  FROM t)""".stripMargin
+
+  /** t11/t28: train docs (md5 bucket != 'f') sharing a shingle with the
+    * eval slice (bucket 'f') — TextAnalysis.decontaminateOf. */
+  private val decontaminateSql =
+    s"""WITH $shingleCte,
+      |b AS (SELECT doc_id, shingle,
+      |  substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket FROM sh),
+      |ev AS (SELECT DISTINCT shingle FROM b WHERE bucket = 'f')
+      |SELECT doc_id, count(*) AS shared_shingles
+      |FROM b JOIN ev USING (shingle)
+      |WHERE bucket != 'f'
+      |GROUP BY doc_id
+      |ORDER BY doc_id""".stripMargin
+
+  /** f19/f20: the plain lineitem ⋈ orders revenue per priority that
+    * BucketedJoin.bucketedJoin and bucketedJoinMultiFile must reproduce. */
+  private val bucketedJoinSql =
+    """SELECT o_orderpriority,
+      |  CAST(count(*) AS BIGINT) AS line_count,
+      |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
+      |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
+      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |GROUP BY o_orderpriority
+      |ORDER BY o_orderpriority""".stripMargin
+
+  /** s29/s43: the walk's last hop, rank <= 3 — Similarity.graphAnn's
+    * answer. */
+  private val graphAnnSql =
+    s"""WITH $graphWalkCtes
+      |SELECT query_id, node AS cand_id, cosine, rnk
+      |FROM s${Similarity.GraphAnnHops}
+      |WHERE rnk <= 3
+      |ORDER BY query_id, rnk""".stripMargin
+
+  /** s17/s19: the IVF-PQ search with the md5-'0' slice tombstoned out
+    * of the code table — Similarity.indexDeleteAnn. */
+  private val ivfPqDeleteSql =
+    s"""WITH ${ivfPqCtesWith(
+           " AND substring(md5(CAST(a3.vec_id AS VARCHAR)), 1, 1) != '0'")}
+      |$rankedqTop3""".stripMargin
+
+  /** The top-3 cosine candidates per query within its cell: queries `q`
+    * joined to candidates `c` on cell and `filter` — the IVF search of
+    * Similarity.annIvf over a trained cell assignment. */
+  private def cellCosineTop3(q: String, c: String, filter: String) =
+    s"""SELECT query_id, cand_id, cosine, rnk FROM (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
+       |    round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
+       |          / (q.norm * c.norm), 6) AS cosine,
+       |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
+       |      round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
+       |            / (q.norm * c.norm), 6) DESC, c.vec_id ASC) AS rnk
+       |  FROM $q q JOIN $c c
+       |    ON q.cell = c.cell AND $filter)
+       |WHERE rnk <= 3
+       |ORDER BY query_id, rnk""".stripMargin
+
+  /** The brute-force cosine top-3 per query as `exact`(query_id, node) —
+    * the ground truth of Similarity.graphAnnSweep and graphAnnBeamSweep. */
+  private val exactCosineTop3Cte =
+    """exact AS (SELECT query_id, node FROM (
+      |    SELECT a.vec_id AS query_id, b.vec_id AS node,
+      |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
+      |        round(list_sum(list_transform(range(64),
+      |          i -> a.v[i+1] * b.v[i+1])) / (a.norm * b.norm), 6) DESC,
+      |        b.vec_id ASC) AS rk
+      |    FROM n a CROSS JOIN n b
+      |    WHERE a.vec_id < 10 AND b.vec_id >= 10)
+      |  WHERE rk <= 3)""".stripMargin
+
   val sql: Map[String, String] = Map(
     "s03_knn_native" -> knnBruteSql,
 
@@ -1369,13 +1747,7 @@ object OpsOracles {
         |ORDER BY doc_id""".stripMargin,
 
     "t02_quality_score" ->
-      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  round(len(list_filter(toks, w -> w IN ('the','a','of','and','is')))
-        |        / CAST(len(toks) AS DOUBLE), 4) AS stop_ratio,
-        |  round(1.0 - len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM t)
+      s"""WITH ${qualityScoreCtes("doc_id")}
         |SELECT doc_id, n_tokens, stop_ratio, repetition_ratio,
         |  CASE WHEN n_tokens < 10 THEN 'too_short'
         |       WHEN repetition_ratio > 0.8 THEN 'repetitive'
@@ -1387,13 +1759,7 @@ object OpsOracles {
     // t20: corpus mixture report — (lang, quality band) cross-tab with
     // doc counts, token mass, and corpus share (t02's band rules).
     "t20_mixture_report" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  round(len(list_filter(toks, w -> w IN ('the','a','of','and','is')))
-        |        / CAST(len(toks) AS DOUBLE), 4) AS stop_ratio,
-        |  round(1.0 - len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM t),
+      s"""WITH ${qualityScoreCtes("doc_id, lang")},
         |b AS (SELECT lang, n_tokens,
         |  CASE WHEN n_tokens < 10 THEN 'too_short'
         |       WHEN repetition_ratio > 0.8 THEN 'repetitive'
@@ -1483,12 +1849,8 @@ object OpsOracles {
     // estimates, and the exact counts all replay bit-identically (md5
     // row hashes, integer counters), so the whole report hash-matches.
     "t29_cms_topwords" -> {
-      def decode(m: String) = (0 until 8).map { j =>
-        val mult = 1L << (4 * (7 - j))
-        s"(strpos('0123456789abcdef', $m[${j + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
       val bucketed =
-        s"""SELECT word, i AS hrow, (${decode("m")}) % 512 AS bucket
+        s"""SELECT word, i AS hrow, (${hexToBigint("m")}) % 512 AS bucket
            |  FROM (SELECT word, i,
            |          substr(md5(CAST(i AS VARCHAR) || '#' || word), 1, 8) AS m""".stripMargin
       s"""WITH toks AS (
@@ -1575,24 +1937,19 @@ object OpsOracles {
     // w09: streaming sketch maintenance — the streamed grid is
     // arrival-order-free (pure counts), so the oracle is the batch grid:
     // t29's cell CTE with the grid as output.
-    "w09_stream_sketch" -> {
-      val decode = (0 until 8).map { j =>
-        val mult = 1L << (4 * (7 - j))
-        s"(strpos('0123456789abcdef', m[${j + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
+    "w09_stream_sketch" ->
       s"""WITH toks AS (
         |  SELECT tok AS word
         |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) s
         |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')),
         |tb AS (
-        |  SELECT word, i AS hrow, ($decode) % 512 AS bucket
+        |  SELECT word, i AS hrow, (${hexToBigint("m")}) % 512 AS bucket
         |  FROM (SELECT word, i,
         |          substr(md5(CAST(i AS VARCHAR) || '#' || word), 1, 8) AS m
         |        FROM toks, range(4) t(i)))
         |SELECT CAST(hrow AS INT) AS hrow, bucket, count(*) AS cell_count
         |FROM tb GROUP BY 1, 2
-        |ORDER BY 1, 2""".stripMargin
-    },
+        |ORDER BY 1, 2""".stripMargin,
 
     // g03: triangle count — the same degree-ordered orientation replayed
     // relationally: pack (degree, id) keys, orient, wedge self-join,
@@ -1609,13 +1966,7 @@ object OpsOracles {
            |  FROM w${t - 1} JOIN e ON u = e.p1
            |  GROUP BY start, w)""".stripMargin
       }.mkString(",\n")
-      s"""WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |pairs AS (
-        |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
-        |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2),
+      s"""WITH $basketEdgesCtes,
         |e AS (SELECT p1, p2 FROM edges UNION ALL SELECT p2, p1 FROM edges),
         |nodes AS (SELECT DISTINCT p1 FROM e),
         |w0 AS (SELECT p1 AS start, w, 0 AS t, p1 AS u
@@ -1632,25 +1983,7 @@ object OpsOracles {
     },
 
     "g03_triangle_count" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |pairs AS (
-        |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
-        |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2),
-        |deg AS (
-        |  SELECT pk, count(*) AS d FROM (
-        |    SELECT p1 AS pk FROM edges UNION ALL SELECT p2 AS pk FROM edges)
-        |  GROUP BY 1),
-        |okey AS (SELECT pk, d * 2147483648 + pk AS k FROM deg),
-        |oriented AS (
-        |  SELECT CASE WHEN ka.k < kb.k THEN e.p1 ELSE e.p2 END AS src,
-        |         CASE WHEN ka.k < kb.k THEN e.p2 ELSE e.p1 END AS dst,
-        |         CASE WHEN ka.k < kb.k THEN kb.k ELSE ka.k END AS dstk
-        |  FROM edges e
-        |  JOIN okey ka ON e.p1 = ka.pk
-        |  JOIN okey kb ON e.p2 = kb.pk),
+      s"""WITH $orientedEdgesCtes,
         |wedges AS (
         |  SELECT e1.dst AS v, e2.dst AS w
         |  FROM oriented e1 JOIN oriented e2
@@ -1668,25 +2001,7 @@ object OpsOracles {
     // of exact BIGINTs (g04's jaccard pattern), ordering total via the
     // unique node id.
     "g10_local_clustering" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |pairs AS (
-        |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
-        |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2),
-        |deg AS (
-        |  SELECT pk, count(*) AS d FROM (
-        |    SELECT p1 AS pk FROM edges UNION ALL SELECT p2 AS pk FROM edges)
-        |  GROUP BY 1),
-        |okey AS (SELECT pk, d * 2147483648 + pk AS k FROM deg),
-        |oriented AS (
-        |  SELECT CASE WHEN ka.k < kb.k THEN e.p1 ELSE e.p2 END AS src,
-        |         CASE WHEN ka.k < kb.k THEN e.p2 ELSE e.p1 END AS dst,
-        |         CASE WHEN ka.k < kb.k THEN kb.k ELSE ka.k END AS dstk
-        |  FROM edges e
-        |  JOIN okey ka ON e.p1 = ka.pk
-        |  JOIN okey kb ON e.p2 = kb.pk),
+      s"""WITH $orientedEdgesCtes,
         |tri AS (
         |  SELECT e1.src AS u, e1.dst AS v, e2.dst AS w
         |  FROM oriented e1
@@ -1717,13 +2032,7 @@ object OpsOracles {
     // double divide of exact BIGINT counts, ranking on the rounded score
     // with (cn, v, w) tie-breaks making the order total.
     "g04_node_similarity" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |pairs AS (
-        |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
-        |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2),
+      s"""WITH $basketEdgesCtes,
         |und AS (SELECT p1, p2 FROM edges UNION ALL SELECT p2, p1 FROM edges),
         |deg AS (SELECT p1 AS pk, count(*) AS deg FROM und GROUP BY 1),
         |wedges AS (
@@ -1783,25 +2092,8 @@ object OpsOracles {
     // string-position ρ over zero-padded bin(), exact dyadic 2^-reg
     // terms); CAST(0.709 AS DOUBLE) forces double (bare literal product
     // is DECIMAL in DuckDB); exact NDV beside as calibration.
-    "t31_hll_distinct" -> {
-      val decode = (0 until 8).map { j =>
-        val mult = 1L << (4 * (7 - j))
-        s"(strpos('0123456789abcdef', m8[${j + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
-      s"""WITH toks AS (
-        |  SELECT source, tok AS word
-        |  FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS tok
-        |        FROM documents) s
-        |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')),
-        |h AS (
-        |  SELECT source, ($decode) AS h
-        |  FROM (SELECT source, substr(md5('h#' || word), 1, 8) AS m8 FROM toks) t),
-        |b AS (SELECT source, h % 64 AS bucket, h // 64 AS w FROM h),
-        |r AS (
-        |  SELECT source, bucket,
-        |    max(CASE WHEN w = 0 THEN 27
-        |             ELSE strpos(lpad(bin(w), 26, '0'), '1') END) AS reg
-        |  FROM b GROUP BY 1, 2),
+    "t31_hll_distinct" ->
+      s"""WITH ${hllRegisterCtes("r")},
         |a AS (
         |  SELECT source, count(*) AS present,
         |    sum(1.0 / CAST(CAST(1 AS BIGINT) << reg AS DOUBLE)) AS sumterm
@@ -1822,32 +2114,14 @@ object OpsOracles {
         |  hll_ndv, exact_ndv,
         |  round((hll_ndv - exact_ndv) / exact_ndv, 4) AS rel_err
         |FROM est JOIN x USING (source)
-        |ORDER BY source""".stripMargin
-    },
+        |ORDER BY source""".stripMargin,
 
     // t35: HLL mergeability — the oracle independently derives BOTH the
     // per-source-merged and the direct corpus registers and counts
     // mismatches (0 by max-associativity), then estimates from the
     // merged sketch with t31's estimator.
-    "t35_hll_merge" -> {
-      val decode = (0 until 8).map { j =>
-        val mult = 1L << (4 * (7 - j))
-        s"(strpos('0123456789abcdef', m8[${j + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
-      s"""WITH toks AS (
-        |  SELECT source, tok AS word
-        |  FROM (SELECT source, unnest(string_split(lower(text), ' ')) AS tok
-        |        FROM documents) s
-        |  WHERE regexp_matches(tok, '^[a-z0-9]+$$')),
-        |h AS (
-        |  SELECT source, ($decode) AS h
-        |  FROM (SELECT source, substr(md5('h#' || word), 1, 8) AS m8 FROM toks) t),
-        |b AS (SELECT source, h % 64 AS bucket, h // 64 AS w FROM h),
-        |rs AS (
-        |  SELECT source, bucket,
-        |    max(CASE WHEN w = 0 THEN 27
-        |             ELSE strpos(lpad(bin(w), 26, '0'), '1') END) AS reg
-        |  FROM b GROUP BY 1, 2),
+    "t35_hll_merge" ->
+      s"""WITH ${hllRegisterCtes("rs")},
         |merged AS (SELECT bucket, max(reg) AS reg FROM rs GROUP BY 1),
         |direct AS (
         |  SELECT bucket,
@@ -1887,21 +2161,14 @@ object OpsOracles {
         |  CAST(mm.register_mismatches AS BIGINT) AS register_mismatches,
         |  x.exact_ndv,
         |  round((em.merged_ndv - x.exact_ndv) / x.exact_ndv, 4) AS rel_err
-        |FROM em, ed, mm, x""".stripMargin
-    },
+        |FROM em, ed, mm, x""".stripMargin,
 
     // g05: BFS hop profile — DuckDB replays the frontier loop as a
     // recursive CTE: UNION-dedup on (pk, hop) with a hop bound matching
     // the engine's cap, then min(hop) per node = first visit. Integers
     // only; nothing can diverge.
     "g05_bfs_hops" ->
-      """WITH RECURSIVE items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |pairs AS (
-        |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
-        |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2),
+      s"""WITH RECURSIVE $basketEdgesCtes,
         |und AS (SELECT p1, p2 FROM edges UNION ALL SELECT p2, p1 FROM edges),
         |walk(pk, hop) AS (
         |  SELECT (SELECT min(p1) FROM und), 0
@@ -1918,13 +2185,7 @@ object OpsOracles {
     // unrolled level by level (DISTINCT caps each level at S×V; min-hop
     // recovered by the grouped MIN, mirroring the engine's anti-join BFS).
     "g12_harmonic_centrality" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |pairs AS (
-        |  SELECT a.pk AS p1, b.pk AS p2, count(*) AS support
-        |  FROM items a JOIN items b ON a.ok = b.ok AND a.pk < b.pk
-        |  GROUP BY 1, 2),
-        |edges AS (SELECT p1, p2 FROM pairs WHERE support >= 2),
+      s"""WITH $basketEdgesCtes,
         |und AS MATERIALIZED (
         |  SELECT p1, p2 FROM edges UNION ALL SELECT p2, p1 FROM edges),
         |seeds AS (
@@ -2069,42 +2330,24 @@ object OpsOracles {
     // against per-(query, probed-cell) residual lookup tables. nprobe=2.
     "s13_ivfpq_ann" ->
       s"""WITH $ivfPqCtes
-        |SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
-        |FROM rankedq
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |$rankedqTop3""".stripMargin,
 
     // s15: index-persistence round trip — the parquet write/read of the
     // index artifacts must be invisible to answers, so the oracle is
     // exactly s13's chain recomputed from the raw table.
     "s15_index_roundtrip" ->
       s"""WITH $ivfPqCtes
-        |SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
-        |FROM rankedq
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |$rankedqTop3""".stripMargin,
 
     // s17: index delete — s13's chain with the tombstoned md5-'0' slice
     // dropped from the code table before scoring.
-    "s17_index_delete" ->
-      s"""WITH ${ivfPqCtesWith(
-             " AND substring(md5(CAST(a3.vec_id AS VARCHAR)), 1, 1) != '0'")}
-        |SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
-        |FROM rankedq
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+    "s17_index_delete" -> ivfPqDeleteSql,
 
     // s19: index compaction — the physical rewrite (tombstones applied,
     // cell-clustered layout) must be invisible to answers, so the oracle
     // is exactly s17's post-delete chain; hash identity proves the
     // compacted artifact serves the same index.
-    "s19_index_compact" ->
-      s"""WITH ${ivfPqCtesWith(
-             " AND substring(md5(CAST(a3.vec_id AS VARCHAR)), 1, 1) != '0'")}
-        |SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
-        |FROM rankedq
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+    "s19_index_compact" -> ivfPqDeleteSql,
 
     // s20: refined ANN — s13's ADC chain over-fetches a 12-deep
     // shortlist, then the exact float rerank picks the top 3; mirrors
@@ -2144,39 +2387,10 @@ object OpsOracles {
     // rounding primitive), squared-L2 to the exact query floats via the
     // same per-row list fold as knnBrute, 6dp round before ranking
     "s23_sq_ann" ->
-      """WITH n AS (
+      s"""WITH n AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        |st AS (
-        |  SELECT CAST(t.d AS INT) AS dim, min(v[t.d + 1]) AS mn,
-        |    max(v[t.d + 1]) AS mx
-        |  FROM n, unnest(range(len(v))) AS t(d)
-        |  WHERE vec_id >= 10
-        |  GROUP BY 1),
-        |sa AS (
-        |  SELECT list(mn ORDER BY dim) AS mns, list(mx ORDER BY dim) AS mxs
-        |  FROM st),
-        |xh AS (
-        |  SELECT vec_id,
-        |    list_transform(range(len(v)), d ->
-        |      CASE WHEN mxs[d + 1] = mns[d + 1] THEN mns[d + 1]
-        |      ELSE mns[d + 1] + least(255, greatest(0,
-        |        floor((v[d + 1] - mns[d + 1]) * 255 / (mxs[d + 1] - mns[d + 1]) + 0.5)))
-        |        * (mxs[d + 1] - mns[d + 1]) / 255 END) AS xhat
-        |  FROM n CROSS JOIN sa
-        |  WHERE vec_id >= 10),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, x.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(len(q.v)),
-        |      i -> (q.v[i + 1] - x.xhat[i + 1]) * (q.v[i + 1] - x.xhat[i + 1]))), 6)
-        |      AS sqdist
-        |  FROM n q CROSS JOIN xh x
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, cand_id, sqdist, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY sqdist ASC, cand_id ASC) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |${sq8ScoredCtes("scored")}
+        |$sqdistTop3""".stripMargin,
 
     // s24: IVF-SQ — coarse cells (the trained-assignment replay) + SQ8
     // stats on candidate residuals + probed search scored in RESIDUAL
@@ -2218,21 +2432,13 @@ object OpsOracles {
         |      i -> (qr.qrv[i + 1] - x.rhat[i + 1]) * (qr.qrv[i + 1] - x.rhat[i + 1]))), 6)
         |      AS sqdist
         |  FROM qr JOIN xh x USING (cell))
-        |SELECT query_id, cand_id, sqdist, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY sqdist ASC, cand_id ASC) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |$sqdistTop3""".stripMargin,
 
     // s21: hybrid search — IDF-overlap lexical ranking and brute cosine
     // ranking fused by integer reciprocal-rank fusion (1e6 // (60+rank));
     // ranks are exact, floor division is exact, the fusion cannot drift.
     "s21_hybrid_search" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id")},
         |vscored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
         |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
@@ -2285,10 +2491,7 @@ object OpsOracles {
     "s18_filtered_ann" ->
       s"""WITH ${ivfPqCtesWith(
              " AND a3.vec_id IN (SELECT vec_id FROM embeddings WHERE label % 2 = 0)")}
-        |SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
-        |FROM rankedq
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |$rankedqTop3""".stripMargin,
 
     // s16: incremental index update — coarse centroids and residual
     // codebooks trained on the INDEX subset only (md5 bucket != 'f';
@@ -2296,10 +2499,7 @@ object OpsOracles {
     // frozen trainers, search over the merged code table. Mirrors
     // Similarity.incrementalIndexAnn stage for stage.
     "s16_incremental_index" ->
-      s"""WITH n AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id, label")},
         |cand AS (SELECT * FROM n WHERE vec_id >= 10),
         |idx AS (SELECT * FROM cand
         |        WHERE substring(md5(CAST(vec_id AS VARCHAR)), 1, 1) != 'f'),
@@ -2344,30 +2544,8 @@ object OpsOracles {
         |      ct.cell ASC) AS rk
         |  FROM n q CROSS JOIN cent ct WHERE q.vec_id < 10),
         |probes AS (SELECT vec_id AS query_id, cell, v FROM qranked WHERE rk <= 2),
-        |qres AS (
-        |  SELECT p.query_id, p.cell,
-        |    list_transform(range(64), i -> p.v[i+1] - c.cv[i+1]) AS v
-        |  FROM probes p JOIN cent c ON p.cell = c.cell),
-        |qsub AS (SELECT query_id, cell, CAST(s AS INT) AS s, v[s*8+1 : s*8+8] AS sv
-        |         FROM qres, range(8) AS t(s)),
-        |lut AS (
-        |  SELECT q.query_id, q.cell, q.s, b.cid AS code,
-        |    CAST(round(list_sum(list_transform(range(8),
-        |      i -> (q.sv[i+1] - b.cv[i+1]) * (q.sv[i+1] - b.cv[i+1]))), 6)
-        |      AS DECIMAL(18,6)) AS d
-        |  FROM qsub q JOIN c2 b ON q.s = b.s),
-        |scored AS (
-        |  SELECT query_id, cand_id, sum(d) AS adist
-        |  FROM codes JOIN lut USING (cell, s, code)
-        |  GROUP BY query_id, cand_id),
-        |rankedq AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY adist ASC, cand_id ASC) AS rnk
-        |  FROM scored)
-        |SELECT query_id, cand_id, CAST(adist AS DOUBLE) AS adist, CAST(rnk AS INT) AS rnk
-        |FROM rankedq
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |$ivfPqQueryCtes
+        |$rankedqTop3""".stripMargin,
 
     // s14: ANN recall report — how many of s13's top-3 survive against
     // the exact-L2 ground truth, per query.
@@ -2409,17 +2587,7 @@ object OpsOracles {
         |        c.cid ASC) AS rk
         |    FROM normed n CROSS JOIN c2 c)
         |  WHERE rk = 1)
-        |SELECT query_id, cand_id, cosine, rnk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
-        |          / (q.norm * c.norm), 6) AS cosine,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |      round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
-        |            / (q.norm * c.norm), 6) DESC, c.vec_id ASC) AS rnk
-        |  FROM fin q JOIN fin c
-        |    ON q.cell = c.cell AND q.vec_id < 10 AND c.vec_id >= 10)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |${cellCosineTop3("fin", "fin", "q.vec_id < 10 AND c.vec_id >= 10")}""".stripMargin,
 
     "s05_label_centroids" ->
       """SELECT label, CAST(i AS INT) AS dim,
@@ -2431,17 +2599,7 @@ object OpsOracles {
     "s06_ivf_trained" ->
       s"""WITH $ivfRankedCte,
         |assigned AS (SELECT vec_id, cell, v, norm FROM cellranked WHERE rk = 1)
-        |SELECT query_id, cand_id, cosine, rnk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
-        |          / (q.norm * c.norm), 6) AS cosine,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |      round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
-        |            / (q.norm * c.norm), 6) DESC, c.vec_id ASC) AS rnk
-        |  FROM assigned q JOIN assigned c
-        |    ON q.cell = c.cell AND q.vec_id < 10 AND c.vec_id >= 10)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |${cellCosineTop3("assigned", "assigned", "q.vec_id < 10 AND c.vec_id >= 10")}""".stripMargin,
 
     // s07: multi-probe — the query side expands to its 2 nearest cells
     // (rk <= 2); candidates stay on their rk = 1 assignment.
@@ -2451,17 +2609,7 @@ object OpsOracles {
         |probes AS (
         |  SELECT vec_id, cell, v, norm FROM cellranked
         |  WHERE rk <= 2 AND vec_id < 10)
-        |SELECT query_id, cand_id, cosine, rnk FROM (
-        |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
-        |          / (q.norm * c.norm), 6) AS cosine,
-        |    row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |      round(list_sum(list_transform(range(64), i -> q.v[i+1] * c.v[i+1]))
-        |            / (q.norm * c.norm), 6) DESC, c.vec_id ASC) AS rnk
-        |  FROM probes q JOIN assigned c
-        |    ON q.cell = c.cell AND c.vec_id >= 10)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |${cellCosineTop3("probes", "assigned", "c.vec_id >= 10")}""".stripMargin,
 
     // s28: nprobe recall/cost sweep — query cells rk ≤ nprobe per sweep
     // point, candidates on their rk = 1 assignment; matched vs exact
@@ -2510,23 +2658,13 @@ object OpsOracles {
     // s29: HNSW-lite graph ANN — the shared walk chain's last hop,
     // rank ≤ 3 (beam ≥ 3 makes "top-3 of the beam" ≡ "top-3 of the
     // expansion", exactly as the engine computes it).
-    "s29_graph_ann" ->
-      s"""WITH $graphWalkCtes
-        |SELECT query_id, node AS cand_id, cosine, rnk
-        |FROM s${Similarity.GraphAnnHops}
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+    "s29_graph_ann" -> graphAnnSql,
 
     // s43: shard-parallel build + merge — the oracle replays the
     // MONOLITHIC build + walk while Spark serves from the MERGED
     // artifact (two per-shard builds + a cross-pair-only merge): the
     // hash equality IS the merge ≡ rebuild claim, end to end.
-    "s43_merged_shard_ann" ->
-      s"""WITH $graphWalkCtes
-        |SELECT query_id, node AS cand_id, cosine, rnk
-        |FROM s${Similarity.GraphAnnHops}
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+    "s43_merged_shard_ann" -> graphAnnSql,
 
     // s42: batched ANN serving — the s29 walk over the 100-query batch,
     // replayed query by query (the engine's per-hop batching must be
@@ -2589,15 +2727,7 @@ object OpsOracles {
            |   LEFT JOIN exact e ON a.query_id = e.query_id AND a.node = e.node)
            |    AS matched""".stripMargin
       s"""WITH $beamSweepCtes,
-        |exact AS (SELECT query_id, node FROM (
-        |    SELECT a.vec_id AS query_id, b.vec_id AS node,
-        |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
-        |        round(list_sum(list_transform(range(64),
-        |          i -> a.v[i+1] * b.v[i+1])) / (a.norm * b.norm), 6) DESC,
-        |        b.vec_id ASC) AS rk
-        |    FROM n a CROSS JOIN n b
-        |    WHERE a.vec_id < 10 AND b.vec_id >= 10)
-        |  WHERE rk <= 3)
+        |$exactCosineTop3Cte
         |SELECT beam, n_queries, cand_nodes, matched,
         |  round(matched / (n_queries * 3.0), 4) AS recall
         |FROM (${Seq(4, 8, 16).map(summary).mkString("\nUNION ALL\n")})
@@ -2628,31 +2758,7 @@ object OpsOracles {
         |  SELECT *, row_number() OVER (
         |    PARTITION BY query_id ORDER BY adist ASC, cand_id ASC) AS rnk
         |  FROM pscored) WHERE rnk <= 3),
-        |st AS (
-        |  SELECT CAST(t.d AS INT) AS dim, min(v[t.d + 1]) AS mn,
-        |    max(v[t.d + 1]) AS mx
-        |  FROM n, unnest(range(len(v))) AS t(d)
-        |  WHERE vec_id >= 10
-        |  GROUP BY 1),
-        |sa AS (
-        |  SELECT list(mn ORDER BY dim) AS mns, list(mx ORDER BY dim) AS mxs
-        |  FROM st),
-        |xh AS (
-        |  SELECT vec_id,
-        |    list_transform(range(len(v)), d ->
-        |      CASE WHEN mxs[d + 1] = mns[d + 1] THEN mns[d + 1]
-        |      ELSE mns[d + 1] + least(255, greatest(0,
-        |        floor((v[d + 1] - mns[d + 1]) * 255 / (mxs[d + 1] - mns[d + 1]) + 0.5)))
-        |        * (mxs[d + 1] - mns[d + 1]) / 255 END) AS xhat
-        |  FROM n CROSS JOIN sa
-        |  WHERE vec_id >= 10),
-        |qscored AS (
-        |  SELECT q.vec_id AS query_id, x.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(len(q.v)),
-        |      i -> (q.v[i + 1] - x.xhat[i + 1]) * (q.v[i + 1] - x.xhat[i + 1]))), 6)
-        |      AS sqdist
-        |  FROM n q CROSS JOIN xh x
-        |  WHERE q.vec_id < 10),
+        |${sq8ScoredCtes("qscored")},
         |stop AS (SELECT query_id, cand_id FROM (
         |  SELECT *, row_number() OVER (
         |    PARTITION BY query_id ORDER BY sqdist ASC, cand_id ASC) AS rnk
@@ -2869,15 +2975,7 @@ object OpsOracles {
           .mkString("\n  UNION ALL ")}),
         |cc AS (SELECT hop, CAST(count(*) AS BIGINT) AS cand_nodes
         |  FROM allh GROUP BY hop),
-        |exact AS (SELECT query_id, node FROM (
-        |    SELECT a.vec_id AS query_id, b.vec_id AS node,
-        |      row_number() OVER (PARTITION BY a.vec_id ORDER BY
-        |        round(list_sum(list_transform(range(64),
-        |          i -> a.v[i+1] * b.v[i+1])) / (a.norm * b.norm), 6) DESC,
-        |        b.vec_id ASC) AS rk
-        |    FROM n a CROSS JOIN n b
-        |    WHERE a.vec_id < 10 AND b.vec_id >= 10)
-        |  WHERE rk <= 3),
+        |$exactCosineTop3Cte,
         |nq AS (SELECT CAST(count(*) AS BIGINT) AS n_queries
         |  FROM embeddings WHERE vec_id < 10),
         |mt AS (
@@ -2895,16 +2993,7 @@ object OpsOracles {
     // semantic detector: one celled pair pass, the θ grid folded over
     // the same 6dp cosines d29 thresholds.
     "d37_semdedup_sweep" ->
-      s"""WITH $semKmeansCtes,
-        |assigned AS MATERIALIZED (
-        |  SELECT vec_id, cell, v, norm FROM (
-        |    SELECT w.vec_id, r.cell, w.v, w.norm,
-        |      row_number() OVER (PARTITION BY w.vec_id ORDER BY
-        |        round(list_sum(list_transform(range(64),
-        |          i -> (w.v[i+1] - r.cv[i+1]) * (w.v[i+1] - r.cv[i+1]))), 6) ASC,
-        |        r.cell ASC) AS rk
-        |    FROM vsup w JOIN routed r ON w.sup = r.sup)
-        |  WHERE rk = 1),
+      s"""WITH $semAssignedCtes,
         |pairsc AS MATERIALIZED (
         |  SELECT b.vec_id AS d2,
         |    round(list_sum(list_transform(range(64),
@@ -2931,16 +3020,7 @@ object OpsOracles {
     // index members and smaller-id batch peers. Verdict precedence:
     // index wins (immutable tonight), sentinels -1/0.0 for unique.
     "d35_incremental_semdedup" ->
-      s"""WITH $semKmeansCtes,
-        |assigned AS MATERIALIZED (
-        |  SELECT vec_id, cell, v, norm FROM (
-        |    SELECT w.vec_id, r.cell, w.v, w.norm,
-        |      row_number() OVER (PARTITION BY w.vec_id ORDER BY
-        |        round(list_sum(list_transform(range(64),
-        |          i -> (w.v[i+1] - r.cv[i+1]) * (w.v[i+1] - r.cv[i+1]))), 6) ASC,
-        |        r.cell ASC) AS rk
-        |    FROM vsup w JOIN routed r ON w.sup = r.sup)
-        |  WHERE rk = 1),
+      s"""WITH $semAssignedCtes,
         |delta AS MATERIALIZED (SELECT * FROM assigned
         |  WHERE substr(md5(CAST(vec_id AS VARCHAR)), 1, 1) = 'f'),
         |idx AS MATERIALIZED (SELECT * FROM assigned
@@ -2978,16 +3058,7 @@ object OpsOracles {
         |ORDER BY d.vec_id""".stripMargin,
 
     "d29_semdedup" ->
-      s"""WITH RECURSIVE $semKmeansCtes,
-        |assigned AS MATERIALIZED (
-        |  SELECT vec_id, cell, v, norm FROM (
-        |    SELECT w.vec_id, r.cell, w.v, w.norm,
-        |      row_number() OVER (PARTITION BY w.vec_id ORDER BY
-        |        round(list_sum(list_transform(range(64),
-        |          i -> (w.v[i+1] - r.cv[i+1]) * (w.v[i+1] - r.cv[i+1]))), 6) ASC,
-        |        r.cell ASC) AS rk
-        |    FROM vsup w JOIN routed r ON w.sup = r.sup)
-        |  WHERE rk = 1),
+      s"""WITH RECURSIVE $semAssignedCtes,
         |pairs AS MATERIALIZED (
         |  SELECT a.vec_id AS d1, b.vec_id AS d2
         |  FROM assigned a JOIN assigned b
@@ -2997,10 +3068,7 @@ object OpsOracles {
         |bi AS MATERIALIZED (
         |  SELECT d1 AS a, d2 AS b FROM pairs
         |  UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |$clusterWalkCte,
         |comps AS (SELECT doc_id, min(node) AS cluster_id FROM walk
         |  GROUP BY doc_id),
         |mem AS (
@@ -3054,13 +3122,7 @@ object OpsOracles {
         |ORDER BY doc_id""".stripMargin,
 
     "t08_quality_filtered" ->
-      """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-        |s AS (SELECT doc_id, lang,
-        |  CAST(len(toks) AS INT) AS n_tokens,
-        |  round(len(list_filter(toks, w -> w IN ('the','a','of','and','is')))
-        |        / CAST(len(toks) AS DOUBLE), 4) AS stop_ratio,
-        |  round(1.0 - len(list_distinct(toks)) / CAST(len(toks) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM t)
+      s"""WITH ${qualityScoreCtes("doc_id, lang")}
         |SELECT lang, count(*) AS kept_docs, round(avg(n_tokens), 4) AS avg_tokens
         |FROM s
         |WHERE NOT (n_tokens < 10) AND NOT (repetition_ratio > 0.8)
@@ -3077,16 +3139,7 @@ object OpsOracles {
     // t11: decontamination detection — train docs (md5 bucket != 'f')
     // sharing any 3-gram shingle with the eval slice (bucket 'f');
     // mirrors TextAnalysis.decontaminateOf (sh is per-doc distinct).
-    "t11_decontaminate" ->
-      s"""WITH $shingleCte,
-        |b AS (SELECT doc_id, shingle,
-        |  substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket FROM sh),
-        |ev AS (SELECT DISTINCT shingle FROM b WHERE bucket = 'f')
-        |SELECT doc_id, count(*) AS shared_shingles
-        |FROM b JOIN ev USING (shingle)
-        |WHERE bucket != 'f'
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+    "t11_decontaminate" -> decontaminateSql,
 
     // t38: n-gram novelty — shingle-grain first-owner min-agg, doc-grain
     // rollup; integer counts + one rounded divide
@@ -3133,16 +3186,7 @@ object OpsOracles {
     // execution-side pruning device (false positives die in the exact
     // confirm join), so the oracle is t11's exact chain verbatim: hash
     // identity IS the proof that fpp never leaked into the answer.
-    "t28_bloom_decontaminate" ->
-      s"""WITH $shingleCte,
-        |b AS (SELECT doc_id, shingle,
-        |  substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket FROM sh),
-        |ev AS (SELECT DISTINCT shingle FROM b WHERE bucket = 'f')
-        |SELECT doc_id, count(*) AS shared_shingles
-        |FROM b JOIN ev USING (shingle)
-        |WHERE bucket != 'f'
-        |GROUP BY doc_id
-        |ORDER BY doc_id""".stripMargin,
+    "t28_bloom_decontaminate" -> decontaminateSql,
 
     // t12: decontamination apply — the train split minus contaminated docs
     // (docs under 3 tokens have no shingles and pass through, both engines).
@@ -3165,27 +3209,8 @@ object OpsOracles {
     // Spark side's g1..g4 columns exactly.
     "t53_pipeline_funnel" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |qual AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    round(len(list_filter(string_split(text, ' '),
-        |          w -> w IN ('the','a','of','and','is')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS stop_ratio,
-        |    round(1.0 - len(list_distinct(string_split(text, ' ')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM documents),
+        |$lshLosersCtes,
+        |${qualCte("BIGINT")},
         |bkt AS (SELECT doc_id, shingle,
         |  substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket FROM sh),
         |ev AS (SELECT DISTINCT shingle FROM bkt WHERE bucket = 'f'),
@@ -3231,27 +3256,8 @@ object OpsOracles {
     // manifest grain out.
     "t55_curation_pipeline" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |qual AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |    round(len(list_filter(string_split(text, ' '),
-        |          w -> w IN ('the','a','of','and','is')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS stop_ratio,
-        |    round(1.0 - len(list_distinct(string_split(text, ' ')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM documents),
+        |$lshLosersCtes,
+        |${qualCte("BIGINT")},
         |bkt AS (SELECT doc_id, shingle,
         |  substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket FROM sh),
         |evd AS (
@@ -3281,21 +3287,7 @@ object OpsOracles {
         |  FROM gated),
         |sampled AS (SELECT doc_id, text FROM mrk JOIN tgt USING (lang)
         |  WHERE mr <= target),
-        |t AS (SELECT doc_id, len(string_split(text, ' ')) AS n FROM sampled),
-        |c AS (SELECT doc_id, unnest(range(0, n, 24)) AS s, n FROM t),
-        |ch AS (SELECT doc_id, CAST(s // 24 AS INT) AS chunk_id,
-        |  CAST(least(32, n - s) AS INT) AS nt FROM c),
-        |dt AS (SELECT doc_id, CAST(sum(nt) AS BIGINT) AS doc_tokens
-        |  FROM ch GROUP BY 1),
-        |db AS (SELECT doc_id, CAST(coalesce(sum(doc_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS doc_base
-        |  FROM dt),
-        |o AS (SELECT ch.doc_id, chunk_id, nt,
-        |  db.doc_base + CAST(coalesce(sum(nt) OVER (PARTITION BY ch.doc_id
-        |    ORDER BY chunk_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    0) AS BIGINT) AS off
-        |  FROM ch JOIN db ON ch.doc_id = db.doc_id),
+        |${packOffsetsCtes("sampled")},
         |seqs AS (SELECT CAST(off // 97 AS BIGINT) AS seq_id,
         |  CAST(count(*) AS BIGINT) AS n_chunks,
         |  CAST(sum(nt) AS BIGINT) AS n_tokens
@@ -3332,21 +3324,7 @@ object OpsOracles {
     // which caps every sequence at budget (offsets contiguous, chunk <=
     // window). sum(INT) goes HUGEINT in DuckDB: cast BIGINT throughout.
     "t23_sequence_pack" ->
-      """WITH t AS (SELECT doc_id, len(string_split(text, ' ')) AS n FROM documents),
-        |c AS (SELECT doc_id, unnest(range(0, n, 24)) AS s, n FROM t),
-        |ch AS (SELECT doc_id, CAST(s // 24 AS INT) AS chunk_id,
-        |  CAST(least(32, n - s) AS INT) AS nt FROM c),
-        |dt AS (SELECT doc_id, CAST(sum(nt) AS BIGINT) AS doc_tokens
-        |  FROM ch GROUP BY 1),
-        |db AS (SELECT doc_id, CAST(coalesce(sum(doc_tokens) OVER (ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-        |    AS doc_base
-        |  FROM dt),
-        |o AS (SELECT ch.doc_id, chunk_id, nt,
-        |  db.doc_base + CAST(coalesce(sum(nt) OVER (PARTITION BY ch.doc_id
-        |    ORDER BY chunk_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |    0) AS BIGINT) AS off
-        |  FROM ch JOIN db ON ch.doc_id = db.doc_id)
+      s"""WITH ${packOffsetsCtes("documents")}
         |SELECT CAST(off // 97 AS BIGINT) AS seq_id,
         |  CAST(count(*) AS BIGINT) AS n_chunks,
         |  CAST(sum(nt) AS BIGINT) AS n_tokens,
@@ -3524,27 +3502,13 @@ object OpsOracles {
     // PLAIN join on the raw tables: bucketing must only change the scan
     // and exchange shape, never the values. Per-row DECIMAL(18,6) cast
     // before the sum (the cross-engine sum discipline).
-    "f19_bucketed_join" ->
-      """SELECT o_orderpriority,
-        |  CAST(count(*) AS BIGINT) AS line_count,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+    "f19_bucketed_join" -> bucketedJoinSql,
 
     // f20: the SAME join through MULTI-FILE buckets (the 100 TB
     // posture — Exchange still absent, per-bucket Sort back, PlanSpec-
     // pinned): values are layout-independent, so the oracle is
     // identical to f19's plain join on the raw tables.
-    "f20_bucketed_join_multifile" ->
-      """SELECT o_orderpriority,
-        |  CAST(count(*) AS BIGINT) AS line_count,
-        |  CAST(round(sum(CAST(l_extendedprice * (1 - l_discount)
-        |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
+    "f20_bucketed_join_multifile" -> bucketedJoinSql,
 
     // t36: stratified split report — the md5-nibble three-way split with
     // per-source shares; pure integer counts and one rounded divide
@@ -3730,12 +3694,7 @@ object OpsOracles {
     // within the delta; exact-Jaccard verify; losers dropped from the
     // delta only (mirrors Dedup.incrementalNearDupOf stage for stage).
     "d22_incremental_neardup" ->
-      s"""WITH $shingleCte,
-        |$sigBandsCte,
-        |bb AS (
-        |  SELECT doc_id, band, bkey,
-        |    substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket
-        |  FROM bands),
+      s"""WITH $bandBucketsCtes,
         |cand_idx AS (
         |  SELECT i.doc_id AS d1, d.doc_id AS d2
         |  FROM bb d JOIN bb i ON d.band = i.band AND d.bkey = i.bkey
@@ -3756,11 +3715,7 @@ object OpsOracles {
         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
         |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
         |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5)
+        |${jaccardKeepCte("losers", "SELECT DISTINCT d2 FROM inter")}
         |SELECT doc_id, lang, n_chars FROM documents
         |WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'
         |  AND doc_id NOT IN (SELECT d2 FROM losers)
@@ -3770,12 +3725,7 @@ object OpsOracles {
     // delta-vs-index candidates: an index doc out-kept by a SMALLER-id
     // arrival is a tombstone for the next index compaction.
     "d38_retro_compaction" ->
-      s"""WITH $shingleCte,
-        |$sigBandsCte,
-        |bb AS (
-        |  SELECT doc_id, band, bkey,
-        |    substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket
-        |  FROM bands),
+      s"""WITH $bandBucketsCtes,
         |cand AS (
         |  SELECT DISTINCT d.doc_id AS d1, i.doc_id AS d2
         |  FROM bb d JOIN bb i ON d.band = i.band AND d.bkey = i.bkey
@@ -3786,11 +3736,7 @@ object OpsOracles {
         |  FROM sh a JOIN sh b ON a.shingle = b.shingle
         |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
         |  GROUP BY 1, 2),
-        |tomb AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5)
+        |${jaccardKeepCte("tomb", "SELECT DISTINCT d2 FROM inter")}
         |SELECT doc_id, lang, n_chars FROM documents
         |WHERE doc_id IN (SELECT d2 FROM tomb)
         |ORDER BY doc_id""".stripMargin,
@@ -3801,12 +3747,7 @@ object OpsOracles {
     // nightly form). Mirrors EventStream.ingestDedupStream's per-row
     // decision exactly.
     "w08_stream_ingest_dedup" ->
-      s"""WITH $shingleCte,
-        |$sigBandsCte,
-        |bb AS (
-        |  SELECT doc_id, band, bkey,
-        |    substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS bucket
-        |  FROM bands),
+      s"""WITH $bandBucketsCtes,
         |im AS (
         |  SELECT band, bkey, min(doc_id) AS bmin FROM bb
         |  WHERE bucket != 'f' GROUP BY 1, 2),
@@ -3828,13 +3769,7 @@ object OpsOracles {
         |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2,
-        |    round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
-        |  FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
+        |${jaccardKeepCte("pairs", jaccardSelect)},
         |sig AS (SELECT doc_id,
         |  min(md5('0|' || shingle)) AS h0, min(md5('1|' || shingle)) AS h1,
         |  min(md5('2|' || shingle)) AS h2, min(md5('3|' || shingle)) AS h3,
@@ -3864,30 +3799,13 @@ object OpsOracles {
         |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
         |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
         |  GROUP BY 1, 2)
-        |SELECT d1, d2,
-        |  round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON d1 = sa.doc_id
-        |JOIN sizes sb ON d2 = sb.doc_id
-        |WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
+        |$jaccardPairsSelect""".stripMargin,
 
     // Mirrors the Spark LSH exactly: bucket-min candidate pairing
     // (each doc vs its band-bucket's min doc_id), exact-Jaccard verify.
     "d07_dedup_apply" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5)
+        |$lshLosersCtes
         |SELECT doc_id, lang, n_chars FROM documents
         |WHERE doc_id NOT IN (SELECT d2 FROM losers)
         |ORDER BY doc_id""".stripMargin,
@@ -3896,27 +3814,8 @@ object OpsOracles {
     // cleaning pipeline (mirrors Dedup.cleanCorpus stage for stage)
     "d14_clean_corpus" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |qual AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-        |    round(len(list_filter(string_split(text, ' '),
-        |          w -> w IN ('the','a','of','and','is')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS stop_ratio,
-        |    round(1.0 - len(list_distinct(string_split(text, ' ')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM documents)
+        |$lshLosersCtes,
+        |${qualCte("INT")}
         |SELECT d.doc_id, d.lang, d.n_chars FROM documents d JOIN qual q USING (doc_id)
         |WHERE d.doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))
         |  AND d.doc_id NOT IN (SELECT d2 FROM losers)
@@ -3928,27 +3827,8 @@ object OpsOracles {
     // flags; the kept column must reproduce d14's survivor set exactly.
     "d27_drop_provenance" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |losers AS (
-        |  SELECT DISTINCT d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |qual AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-        |    round(len(list_filter(string_split(text, ' '),
-        |          w -> w IN ('the','a','of','and','is')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS stop_ratio,
-        |    round(1.0 - len(list_distinct(string_split(text, ' ')))
-        |          / CAST(len(string_split(text, ' ')) AS DOUBLE), 4) AS repetition_ratio
-        |  FROM documents),
+        |$lshLosersCtes,
+        |${qualCte("INT")},
         |flags AS (
         |  SELECT d.doc_id,
         |    CASE WHEN d.doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))
@@ -3969,26 +3849,9 @@ object OpsOracles {
     // the jaccards are d04's engine-identical rounded values.
     "d34_cluster_coherence" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairsj AS (
-        |  SELECT d1, d2,
-        |    round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
-        |  FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairsj
-        |       UNION ALL SELECT d2, d1 FROM pairsj),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |${lshInterCtes("inter")},
+        |${jaccardKeepCte("pairsj", jaccardSelect)},
+        |${clusterWalkCtes("pairsj")},
         |lab AS (SELECT doc_id, min(node) AS cluster_id FROM walk GROUP BY doc_id),
         |csize AS (SELECT cluster_id, count(*) AS size FROM lab GROUP BY 1),
         |agg AS (
@@ -4010,24 +3873,7 @@ object OpsOracles {
     // Spark's min-label propagation (mirrors Dedup.dedupClusters).
     "d16_dedup_clusters" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairs
-        |       UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a)
+        |$lshClusterWalkCtes
         |SELECT doc_id, min(node) AS cluster_id FROM walk
         |GROUP BY doc_id
         |ORDER BY doc_id""".stripMargin,
@@ -4036,24 +3882,7 @@ object OpsOracles {
     // to (family size → families, docs absorbed).
     "d21_cluster_sizes" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairs
-        |       UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |$lshClusterWalkCtes,
         |labels AS (SELECT doc_id, min(node) AS cluster_id FROM walk GROUP BY doc_id),
         |fam AS (SELECT cluster_id, count(*) AS family_size FROM labels GROUP BY cluster_id)
         |SELECT family_size, count(*) AS families,
@@ -4067,24 +3896,7 @@ object OpsOracles {
     // window (the oracle form of the engine's packed-BIGINT max_by).
     "d28_cluster_best_keep" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairs
-        |       UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |$lshClusterWalkCtes,
         |labels AS (
         |  SELECT doc_id, min(node) AS cluster_id FROM walk GROUP BY doc_id),
         |jd AS (
@@ -4105,24 +3917,7 @@ object OpsOracles {
     // their component's minimum (same walk CTE as d16).
     "d17_cluster_apply" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairs
-        |       UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |$lshClusterWalkCtes,
         |labels AS (
         |  SELECT doc_id, min(node) AS cluster_id FROM walk GROUP BY doc_id)
         |SELECT d.doc_id, d.lang, d.n_chars FROM documents d
@@ -4139,24 +3934,7 @@ object OpsOracles {
     // (u < 1/n with no float ever materializing; the d30 decode, salted).
     "d36_weighted_resample" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairs
-        |       UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |$lshClusterWalkCtes,
         |labels AS (
         |  SELECT doc_id, min(node) AS cluster_id FROM walk GROUP BY doc_id),
         |fam AS (
@@ -4179,24 +3957,7 @@ object OpsOracles {
 
     "d32_dedup_weights" ->
       s"""WITH RECURSIVE $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
-        |bi AS (SELECT d1 AS a, d2 AS b FROM pairs
-        |       UNION ALL SELECT d2, d1 FROM pairs),
-        |walk(doc_id, node) AS (
-        |  SELECT DISTINCT a, a FROM bi
-        |  UNION
-        |  SELECT w.doc_id, e.b FROM walk w JOIN bi e ON w.node = e.a),
+        |$lshClusterWalkCtes,
         |labels AS (
         |  SELECT doc_id, min(node) AS cluster_id FROM walk GROUP BY doc_id),
         |fam AS (
@@ -4231,38 +3992,15 @@ object OpsOracles {
 
     "d04_minhash_lsh" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2)
-        |SELECT d1, d2,
-        |  round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
-        |FROM inter
-        |JOIN sizes sa ON d1 = sa.doc_id
-        |JOIN sizes sb ON d2 = sb.doc_id
-        |WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5
-        |ORDER BY d1, d2""".stripMargin,
+        |${lshInterCtes("inter")}
+        |$jaccardPairsSelect""".stripMargin,
 
     // d33: cross-source duplication matrix — d04's verified pairs
     // aggregated to (lang_keep, lang_lose) with pair and distinct-loser
     // counts (mirrors Dedup.crossSourceMatrix).
     "d33_cross_source_matrix" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5)
+        |$lshPairsCtes
         |SELECT ka.lang AS lang_keep, kb.lang AS lang_lose,
         |  CAST(count(*) AS BIGINT) AS pairs,
         |  CAST(count(DISTINCT p.d2) AS BIGINT) AS distinct_losers
@@ -4318,20 +4056,8 @@ object OpsOracles {
     // the shared 4dp-rounded jaccard.
     "d23_threshold_sweep" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2,
-        |    round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) AS jaccard
-        |  FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
+        |${lshInterCtes("inter")},
+        |${jaccardKeepCte("pairs", jaccardSelect)},
         |ts AS (SELECT i / 100.0 AS threshold FROM range(50, 100, 5) r(i))
         |SELECT threshold, count(*) AS pairs,
         |  count(DISTINCT d2) AS losers
@@ -4418,10 +4144,7 @@ object OpsOracles {
     // instead of the rank window (τ = 0.25, exactly binary-representable,
     // compared on the 6dp-rounded score in both engines).
     "s26_range_search" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id")},
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
         |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
@@ -4438,10 +4161,7 @@ object OpsOracles {
     // asc). sel1 is pool rnk=1 because 0.7·rel is monotone in rel with
     // the identical tie-break.
     "s27_mmr_rerank" ->
-      """WITH n AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id")},
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
         |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
@@ -4563,62 +4283,22 @@ object OpsOracles {
     // 16 sign bits -> 2x8-bit bands -> bucket-min candidates -> exact
     // cosine verify, top-20 (mirrors Similarity.srpNearDupOf).
     "d18_srp_neardup" ->
-      """WITH w0 AS (
-        |  SELECT b, d,
-        |    (instr('0123456789abcdef', substr(m, 1, 1)) - 1) * 4096 +
-        |    (instr('0123456789abcdef', substr(m, 2, 1)) - 1) * 256 +
-        |    (instr('0123456789abcdef', substr(m, 3, 1)) - 1) * 16 +
-        |    (instr('0123456789abcdef', substr(m, 4, 1)) - 1) - 32768 AS w
-        |  FROM (SELECT b, d,
-        |          md5('srp|' || CAST(b AS VARCHAR) || '|' || CAST(d AS VARCHAR)) AS m
-        |        FROM range(16) t1(b), range(64) t2(d))),
-        |wl AS (SELECT b, list(w ORDER BY d) AS wv FROM w0 GROUP BY b),
-        |n AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
-        |dots AS (
-        |  SELECT vec_id, b,
-        |    list_sum(list_transform(range(64), i -> v[i+1] * wv[i+1])) AS dot
-        |  FROM n CROSS JOIN wl),
-        |codes AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN dot > 0 THEN 1 << b ELSE 0 END) AS BIGINT) AS code
-        |  FROM dots GROUP BY vec_id),
-        |bands AS (
-        |  SELECT vec_id, 0 AS band, code % 256 AS bkey FROM codes
-        |  UNION ALL SELECT vec_id, 1, code // 256 FROM codes),
-        |bmin AS (SELECT band, bkey, min(vec_id) AS v1 FROM bands GROUP BY 1, 2),
-        |cand AS (
-        |  SELECT DISTINCT bmin.v1, b.vec_id AS v2
-        |  FROM bands b JOIN bmin USING (band, bkey)
-        |  WHERE b.vec_id > bmin.v1),
-        |scored AS (
-        |  SELECT cand.v1, cand.v2,
-        |    round(list_sum(list_transform(range(64), i -> a.v[i+1] * c.v[i+1]))
-        |          / (a.norm * c.norm), 6) AS cosine
-        |  FROM cand JOIN n a ON cand.v1 = a.vec_id JOIN n c ON cand.v2 = c.vec_id)
+      s"""WITH ${srpPlanesCtes(64)},
+        |${normedCte("vec_id")},
+        |${srpScoredCtes(64, "n")}
         |SELECT v1, v2, cosine FROM scored
         |ORDER BY cosine DESC, v1 ASC, v2 ASC
         |LIMIT 20""".stripMargin,
 
     "s02_ann_ivf" ->
-      """WITH n AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id, label")},
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
         |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
         |          / (q.norm * c.norm), 6) AS cosine
         |  FROM n q JOIN n c ON q.label = c.label
         |  WHERE q.vec_id < 10 AND c.vec_id >= 10)
-        |SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY cosine DESC, cand_id ASC) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+        |$cosineTop3""".stripMargin,
 
     "m05_media_features" ->
       """WITH b AS (SELECT doc_id, octet_length(encode(text)) AS bytes FROM documents)
@@ -4709,31 +4389,10 @@ object OpsOracles {
     // gray L%256 over 3+L%6 × 3+L%4 one-band pixels). Other rows keep
     // the documented stub arithmetic (px_sum 0).
     "m01_decoded_meta" ->
-      """WITH b AS (
-        |  SELECT doc_id, octet_length(encode(text)) AS L,
-        |    (doc_id % 3 = 0 AND octet_length(encode(text)) >= 200) AS is_bmp,
-        |    (doc_id % 6 = 2 AND octet_length(encode(text)) >= 280) AS is_png,
-        |    (doc_id % 12 = 5 AND octet_length(encode(text)) >= 200) AS is_jpeg,
-        |    (doc_id % 12 = 11 AND octet_length(encode(text)) >= 64) AS is_webp
-        |  FROM documents),
+      s"""WITH $imageClassCte,
         |d AS (
         |  SELECT doc_id, L AS bytes,
-        |    CASE WHEN is_bmp THEN 4 + L % 5
-        |         WHEN is_png THEN 4 + L % 6
-        |         WHEN is_jpeg THEN 3 + L % 6
-        |         WHEN is_webp THEN 5 + L % 9
-        |         ELSE 64 + L % 512 END AS width,
-        |    CASE WHEN is_bmp THEN 4 + L % 3
-        |         WHEN is_png THEN 4 + L % 4
-        |         WHEN is_jpeg THEN 3 + L % 4
-        |         WHEN is_webp THEN 4 + L % 7
-        |         ELSE 64 + (L * 7) % 512 END AS height,
-        |    CASE WHEN is_bmp THEN 'bmp'
-        |      WHEN is_png THEN 'png'
-        |      WHEN is_jpeg THEN 'jpeg'
-        |      WHEN is_webp THEN 'webp'
-        |      ELSE CASE L % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
-        |           ELSE 'webp' END END AS format,
+        |    $imageDimCols,
         |    CASE WHEN is_bmp THEN
         |      CAST(4 + L % 3 AS BIGINT) *
         |        ((3 * (4 + L % 5)) // 16 * 120 +
@@ -4906,23 +4565,7 @@ object OpsOracles {
     // not). All µs arithmetic exact-integer; sid sum cast BIGINT to match
     // Spark's long running sum.
     "j05_interval_join" ->
-      """WITH ev AS (
-        |  SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type
-        |  FROM events),
-        |s0 AS (SELECT user_id, ts_us, event_id,
-        |  lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-        |    AS prev
-        |  FROM ev),
-        |s1 AS (SELECT user_id, ts_us, event_id,
-        |  CASE WHEN prev IS NULL OR ts_us - prev > 1800000000
-        |    THEN 1 ELSE 0 END AS brk FROM s0),
-        |s2 AS (SELECT user_id, ts_us,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        |  FROM s1),
-        |sess AS (SELECT user_id, sid, min(ts_us) AS s_start,
-        |  max(ts_us) AS s_end, count(*) AS n_events
-        |  FROM s2 GROUP BY 1, 2),
+      s"""WITH $sessionCtes,
         |errs AS (SELECT event_id AS err_id, ts_us - 300000000 AS w_start,
         |  ts_us + 300000000 AS w_end
         |  FROM ev WHERE event_type = 'error')
@@ -4937,23 +4580,7 @@ object OpsOracles {
     // overlapping NO incident window (NOT EXISTS is the brute-force
     // complement of the engine's bucket-decomposed anti form).
     "j07_interval_anti_join" ->
-      """WITH ev AS (
-        |  SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type
-        |  FROM events),
-        |s0 AS (SELECT user_id, ts_us, event_id,
-        |  lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)
-        |    AS prev
-        |  FROM ev),
-        |s1 AS (SELECT user_id, ts_us, event_id,
-        |  CASE WHEN prev IS NULL OR ts_us - prev > 1800000000
-        |    THEN 1 ELSE 0 END AS brk FROM s0),
-        |s2 AS (SELECT user_id, ts_us,
-        |  CAST(sum(brk) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS sid
-        |  FROM s1),
-        |sess AS (SELECT user_id, sid, min(ts_us) AS s_start,
-        |  max(ts_us) AS s_end, count(*) AS n_events
-        |  FROM s2 GROUP BY 1, 2),
+      s"""WITH $sessionCtes,
         |errs AS (SELECT ts_us - 300000000 AS w_start,
         |  ts_us + 300000000 AS w_end
         |  FROM ev WHERE event_type = 'error')
@@ -5112,19 +4739,7 @@ object OpsOracles {
     // exactly). After the pre-agg, two candidates can only tie on abs gap
     // from OPPOSITE directions, so the two-term ordering is total.
     "j04_nearest_join" ->
-      """WITH p AS (
-        |  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS p_us
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS c_us, max(event_id) AS click_id
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, epoch_us(ts)),
-        |ranked AS (
-        |  SELECT p.purchase_id, p.user_id, c.click_id,
-        |    c.c_us - p.p_us AS gap_us,
-        |    row_number() OVER (PARTITION BY p.purchase_id ORDER BY
-        |      abs(c.c_us - p.p_us) ASC,
-        |      CASE WHEN c.c_us <= p.p_us THEN 0 ELSE 1 END ASC) AS rk
-        |  FROM p LEFT JOIN c ON p.user_id = c.user_id)
+      s"""WITH ${nearestClickCtes("LEFT JOIN")}
         |SELECT purchase_id, user_id, click_id, CAST(gap_us AS BIGINT) AS gap_us
         |FROM ranked WHERE rk = 1
         |ORDER BY purchase_id""".stripMargin,
@@ -5172,19 +4787,7 @@ object OpsOracles {
     // |gap| ties); the oracle brute-forces the per-user candidate space
     // the engine reaches via the rank-position bucket composition.
     "j06_knn_time_join" ->
-      """WITH p AS (
-        |  SELECT event_id AS purchase_id, user_id, epoch_us(ts) AS p_us
-        |  FROM events WHERE event_type = 'purchase'),
-        |c AS (
-        |  SELECT user_id, epoch_us(ts) AS c_us, max(event_id) AS click_id
-        |  FROM events WHERE event_type = 'click' GROUP BY user_id, epoch_us(ts)),
-        |ranked AS (
-        |  SELECT p.purchase_id, p.user_id, c.click_id,
-        |    c.c_us - p.p_us AS gap_us,
-        |    row_number() OVER (PARTITION BY p.purchase_id ORDER BY
-        |      abs(c.c_us - p.p_us) ASC,
-        |      CASE WHEN c.c_us <= p.p_us THEN 0 ELSE 1 END ASC) AS rk
-        |  FROM p JOIN c ON p.user_id = c.user_id)
+      s"""WITH ${nearestClickCtes("JOIN")}
         |SELECT purchase_id, user_id, CAST(rk AS INT) AS rank, click_id,
         |  CAST(gap_us AS BIGINT) AS gap_us
         |FROM ranked WHERE rk <= 2
@@ -5261,21 +4864,16 @@ object OpsOracles {
     // mirrors TextAnalysis.rollingFingerprint: explicit left-to-right fold,
     // prepended zero makes list_reduce start from acc = 0 like Spark's
     // aggregate; every intermediate < 2^37 so BIGINT arithmetic is exact
-    "t10_rolling_fingerprint" -> {
-      val decode = (0 until 8).map { i =>
-        val mult = 1L << (4 * (7 - i))
-        s"(strpos('0123456789abcdef', m[${i + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
+    "t10_rolling_fingerprint" ->
       s"""WITH toks AS (
         |  SELECT doc_id, list_transform(string_split(text, ' '), t -> md5(t)) AS ms
         |  FROM documents),
-        |hs AS (SELECT doc_id, list_transform(ms, m -> $decode) AS hl FROM toks)
+        |hs AS (SELECT doc_id, list_transform(ms, m -> ${hexToBigint("m")}) AS hl FROM toks)
         |SELECT doc_id,
         |  list_reduce([CAST(0 AS BIGINT)] || hl,
         |              (acc, h) -> (acc * 31 + h) % 2147483647) AS rfp
         |FROM hs
-        |ORDER BY doc_id""".stripMargin
-    },
+        |ORDER BY doc_id""".stripMargin,
 
     // pair-grain attribution join (the batch anchor of the stream-stream
     // join; StreamingSpec proves the streamed form emits the same pairs)
@@ -5381,31 +4979,10 @@ object OpsOracles {
     // class; the 'png' and 'jpeg' classes pool real rows with the stub
     // rows whose length-derived format label matches).
     "m02_format_summary" ->
-      """WITH b AS (
-        |  SELECT doc_id, octet_length(encode(text)) AS L,
-        |    (doc_id % 3 = 0 AND octet_length(encode(text)) >= 200) AS is_bmp,
-        |    (doc_id % 6 = 2 AND octet_length(encode(text)) >= 280) AS is_png,
-        |    (doc_id % 12 = 5 AND octet_length(encode(text)) >= 200) AS is_jpeg,
-        |    (doc_id % 12 = 11 AND octet_length(encode(text)) >= 64) AS is_webp
-        |  FROM documents),
+      s"""WITH $imageClassCte,
         |m AS (
         |  SELECT L AS bytes,
-        |    CASE WHEN is_bmp THEN 4 + L % 5
-        |         WHEN is_png THEN 4 + L % 6
-        |         WHEN is_jpeg THEN 3 + L % 6
-        |         WHEN is_webp THEN 5 + L % 9
-        |         ELSE 64 + L % 512 END AS width,
-        |    CASE WHEN is_bmp THEN 4 + L % 3
-        |         WHEN is_png THEN 4 + L % 4
-        |         WHEN is_jpeg THEN 3 + L % 4
-        |         WHEN is_webp THEN 4 + L % 7
-        |         ELSE 64 + (L * 7) % 512 END AS height,
-        |    CASE WHEN is_bmp THEN 'bmp'
-        |      WHEN is_png THEN 'png'
-        |      WHEN is_jpeg THEN 'jpeg'
-        |      WHEN is_webp THEN 'webp'
-        |      ELSE CASE L % 3 WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png'
-        |           ELSE 'webp' END END AS format
+        |    $imageDimCols
         |  FROM b)
         |SELECT format, count(*) AS images,
         |  round(avg(bytes), 4) AS avg_bytes,
@@ -5461,45 +5038,9 @@ object OpsOracles {
     // vectors pushed through the s23 SQ encode/decode/score pattern
     // (stats trained on the candidate side, squared-L2 ranking)
     "m09_media_sq_search" ->
-      """WITH b0 AS (SELECT doc_id, octet_length(encode(text)) AS bytes FROM documents),
-        |n AS (
-        |  SELECT doc_id AS vec_id,
-        |    [CAST(bytes AS DOUBLE), CAST(64 + bytes % 512 AS DOUBLE),
-        |     CAST(64 + (bytes * 7) % 512 AS DOUBLE), CAST(bytes % 3 AS DOUBLE),
-        |     CAST(bytes // 1024 + 1 AS DOUBLE), CAST(bytes % 997 AS DOUBLE),
-        |     CAST(bytes % 499 AS DOUBLE), CAST(bytes % 251 AS DOUBLE)] AS v
-        |  FROM b0),
-        |st AS (
-        |  SELECT CAST(t.d AS INT) AS dim, min(v[t.d + 1]) AS mn,
-        |    max(v[t.d + 1]) AS mx
-        |  FROM n, unnest(range(len(v))) AS t(d)
-        |  WHERE vec_id >= 10
-        |  GROUP BY 1),
-        |sa AS (
-        |  SELECT list(mn ORDER BY dim) AS mns, list(mx ORDER BY dim) AS mxs
-        |  FROM st),
-        |xh AS (
-        |  SELECT vec_id,
-        |    list_transform(range(len(v)), d ->
-        |      CASE WHEN mxs[d + 1] = mns[d + 1] THEN mns[d + 1]
-        |      ELSE mns[d + 1] + least(255, greatest(0,
-        |        floor((v[d + 1] - mns[d + 1]) * 255 / (mxs[d + 1] - mns[d + 1]) + 0.5)))
-        |        * (mxs[d + 1] - mns[d + 1]) / 255 END) AS xhat
-        |  FROM n CROSS JOIN sa
-        |  WHERE vec_id >= 10),
-        |scored AS (
-        |  SELECT q.vec_id AS query_id, x.vec_id AS cand_id,
-        |    round(list_sum(list_transform(range(len(q.v)),
-        |      i -> (q.v[i + 1] - x.xhat[i + 1]) * (q.v[i + 1] - x.xhat[i + 1]))), 6)
-        |      AS sqdist
-        |  FROM n q CROSS JOIN xh x
-        |  WHERE q.vec_id < 10)
-        |SELECT query_id, cand_id, sqdist, CAST(rnk AS INT) AS rnk FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY query_id ORDER BY sqdist ASC, cand_id ASC) AS rnk
-        |  FROM scored)
-        |WHERE rnk <= 3
-        |ORDER BY query_id, rnk""".stripMargin,
+      s"""WITH $mediaFeatureCtes,
+        |${sq8ScoredCtes("scored")}
+        |$sqdistTop3""".stripMargin,
 
     "t25_bpe_encode" -> bpeEncodeOracleSql,
 
@@ -5594,18 +5135,7 @@ object OpsOracles {
     // pair contributes two), leaked_docs = distinct docs per class.
     "t41_split_leakage" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |inter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
-        |pairs AS (
-        |  SELECT d1, d2 FROM inter
-        |  JOIN sizes sa ON d1 = sa.doc_id
-        |  JOIN sizes sb ON d2 = sb.doc_id
-        |  WHERE round(c / CAST(sa.n + sb.n - c AS DOUBLE), 4) >= 0.5),
+        |$lshPairsCtes,
         |sp AS (SELECT d1, d2,
         |  CASE WHEN substring(md5(CAST(d1 AS VARCHAR)), 1, 1) BETWEEN '0' AND 'b'
         |         THEN 'train'
@@ -5748,11 +5278,7 @@ object OpsOracles {
     // for target (lang='en') vs raw; per-bucket log-ratio of add-one
     // smoothed rates as ONE ln of an exact-integer ratio rounded 6dp;
     // per-doc Σ n_b·lr as exact DECIMAL. List indexing is 1-based.
-    "t48_dsir_weights" -> {
-      val decode = (0 until 8).map { i =>
-        val mult = 1L << (4 * (7 - i))
-        s"(strpos('0123456789abcdef', m[${i + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
+    "t48_dsir_weights" ->
       s"""WITH t AS (
         |  SELECT doc_id, lang, str_split(text, ' ') AS ts FROM documents),
         |bg0 AS (
@@ -5764,7 +5290,7 @@ object OpsOracles {
         |    md5(ts[CAST(i + 1 AS BIGINT)] || ' ' || ts[CAST(i + 2 AS BIGINT)]) AS m
         |  FROM bg0),
         |pdb AS (
-        |  SELECT doc_id, lang, CAST(($decode) % 256 AS INT) AS b,
+        |  SELECT doc_id, lang, CAST((${hexToBigint("m")}) % 256 AS INT) AS b,
         |    CAST(count(*) AS BIGINT) AS n
         |  FROM bg GROUP BY 1, 2, 3),
         |cr AS (SELECT b, CAST(sum(n) AS BIGINT) AS cr FROM pdb GROUP BY b),
@@ -5782,8 +5308,7 @@ object OpsOracles {
         |  CAST(round(sum(n * CAST(lr AS DECIMAL(18,6))), 4) AS DOUBLE) AS weight
         |FROM pdb JOIN lr USING (b)
         |GROUP BY doc_id, lang
-        |ORDER BY doc_id""".stripMargin
-    },
+        |ORDER BY doc_id""".stripMargin,
 
     // t50: distilled quality filter — t49 labels (minStopwords=1), the
     // md5-'f' holdout, t48's exact likelihood-ratio algebra over 64
@@ -5906,15 +5431,11 @@ object OpsOracles {
         |FROM scd GROUP BY 1, 2 ORDER BY predicted, lang""".stripMargin
     },
 
-    "t44_cdc_chunks" -> {
-      val decode = (0 until 8).map { i =>
-        val mult = 1L << (4 * (7 - i))
-        s"(strpos('0123456789abcdef', m[${i + 1}]) - 1) * CAST($mult AS BIGINT)"
-      }.mkString(" + ")
+    "t44_cdc_chunks" ->
       s"""WITH dd AS (
         |  SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
         |hs AS (SELECT doc_id, lang, toks, len(toks) AS n,
-        |  list_transform(list_transform(toks, t -> md5(t)), m -> $decode) AS hl
+        |  list_transform(list_transform(toks, t -> md5(t)), m -> ${hexToBigint("m")}) AS hl
         |  FROM dd),
         |cu AS (SELECT *, list_transform(hl,
         |    h -> CASE WHEN h % 16 = 0 THEN 1 ELSE 0 END) AS cut FROM hs),
@@ -5934,8 +5455,7 @@ object OpsOracles {
         |        / CAST(count(*) AS DOUBLE), 4) AS dup_share,
         |  round(sum(len(string_split(chunk, ' ')))
         |        / CAST(count(*) AS DOUBLE), 4) AS avg_chunk_toks
-        |FROM ex GROUP BY lang ORDER BY lang""".stripMargin
-    },
+        |FROM ex GROUP BY lang ORDER BY lang""".stripMargin,
 
     // t43: Gopher-style repetition gate. Per-doc fractions are one
     // int/int double division rounded to 6dp → DECIMAL(18,6) (exact
@@ -5996,10 +5516,7 @@ object OpsOracles {
     // s31: hard negatives — s01's brute scoring with the query-dependent
     // anti-label pair predicate (q.label <> c.label), k=5.
     "s31_hard_negatives" ->
-      """WITH n AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id, label")},
         |scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neg_id, c.label AS neg_label,
         |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
@@ -6016,10 +5533,7 @@ object OpsOracles {
     // s32: triplet assembly — same-label top-1 positive × anti-label
     // top-3 negatives; margins and the semi-hard band in exact DECIMAL.
     "s32_triplet_margins" ->
-      """WITH n AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS v,
-        |    sqrt(list_sum(list_transform(embedding::DOUBLE[], x -> x * x))) AS norm
-        |  FROM embeddings),
+      s"""WITH ${normedCte("vec_id, label")},
         |ps AS (
         |  SELECT q.vec_id AS anchor_id, c.vec_id AS pos_id,
         |    round(list_sum(list_transform(range(len(q.v)), i -> q.v[i+1] * c.v[i+1]))
@@ -6057,13 +5571,7 @@ object OpsOracles {
     // the two detector bundles by construction).
     "d31_detector_agreement" ->
       s"""WITH $shingleCte,
-        |$lshCandCte,
-        |sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        |linter AS (
-        |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS c
-        |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        |  JOIN cand ON a.doc_id = cand.d1 AND b.doc_id = cand.d2
-        |  GROUP BY 1, 2),
+        |${lshInterCtes("linter")},
         |mh AS (
         |  SELECT d1, d2 FROM linter
         |  JOIN sizes sa ON d1 = sa.doc_id JOIN sizes sb ON d2 = sb.doc_id
@@ -6085,17 +5593,11 @@ object OpsOracles {
     // t49: Gopher rules — every threshold in integer cross-multiplied
     // form, mirroring the Spark side bit-for-bit (no float boundaries).
     "t49_gopher_rules" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, text, string_split(text, ' ') AS toks FROM documents),
         |m AS (
         |  SELECT doc_id,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(toks, w -> length(w))) AS BIGINT) AS word_chars,
-        |    CAST(len(regexp_extract_all(text, '#'))
-        |       + len(regexp_extract_all(text, '\.\.\.')) AS BIGINT) AS sym_hits,
-        |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-        |    CAST(len(list_intersect(list_distinct(toks),
-        |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_distinct
+        |    $gopherCountCols
         |  FROM t),
         |r AS (
         |  SELECT doc_id, n_words, word_chars,
@@ -6178,29 +5680,7 @@ object OpsOracles {
     // reference profile. The stream side only accumulates monoid counts,
     // so the oracle is the batch rollup verbatim.
     "w18_stream_gate_drift" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, text, string_split(text, ' ') AS toks FROM documents),
-        |m AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(toks, w -> length(w))) AS BIGINT) AS word_chars,
-        |    CAST(len(regexp_extract_all(text, '#'))
-        |       + len(regexp_extract_all(text, '\.\.\.')) AS BIGINT) AS sym_hits,
-        |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-        |    CAST(len(list_intersect(list_distinct(toks),
-        |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_distinct
-        |  FROM t),
-        |v AS (
-        |  SELECT lang,
-        |    CASE
-        |      WHEN NOT (n_words BETWEEN 50 AND 100000) THEN 'too_few_words'
-        |      WHEN NOT (3 * n_words <= word_chars AND word_chars <= 10 * n_words)
-        |        THEN 'word_length'
-        |      WHEN NOT (10 * sym_hits <= n_words) THEN 'symbol_heavy'
-        |      WHEN NOT (5 * alpha_words >= 4 * n_words) THEN 'non_alpha'
-        |      WHEN NOT (stop_distinct >= 1) THEN 'no_stopwords'
-        |      ELSE 'ok' END AS reason
-        |  FROM m),
+      s"""WITH ${gopherReasonCtes("lang")},
         |kept AS (
         |  SELECT lang, CAST(count(*) AS BIGINT) AS kept_n
         |  FROM v WHERE reason = 'ok' GROUP BY 1),
@@ -6228,29 +5708,7 @@ object OpsOracles {
         |FROM tt ORDER BY lang""".stripMargin,
 
     "w16_stream_quality_gate" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, text, string_split(text, ' ') AS toks FROM documents),
-        |m AS (
-        |  SELECT doc_id, lang,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(toks, w -> length(w))) AS BIGINT) AS word_chars,
-        |    CAST(len(regexp_extract_all(text, '#'))
-        |       + len(regexp_extract_all(text, '\.\.\.')) AS BIGINT) AS sym_hits,
-        |    CAST(len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS alpha_words,
-        |    CAST(len(list_intersect(list_distinct(toks),
-        |      ['the','be','to','of','and','that','have','with'])) AS BIGINT) AS stop_distinct
-        |  FROM t),
-        |v AS (
-        |  SELECT lang, n_words,
-        |    CASE
-        |      WHEN NOT (n_words BETWEEN 50 AND 100000) THEN 'too_few_words'
-        |      WHEN NOT (3 * n_words <= word_chars AND word_chars <= 10 * n_words)
-        |        THEN 'word_length'
-        |      WHEN NOT (10 * sym_hits <= n_words) THEN 'symbol_heavy'
-        |      WHEN NOT (5 * alpha_words >= 4 * n_words) THEN 'non_alpha'
-        |      WHEN NOT (stop_distinct >= 1) THEN 'no_stopwords'
-        |      ELSE 'ok' END AS reason
-        |  FROM m)
+      s"""WITH ${gopherReasonCtes("lang, n_words")}
         |SELECT reason, lang, CAST(count(*) AS BIGINT) AS n_docs,
         |  CAST(sum(n_words) AS BIGINT) AS words_sum
         |FROM v GROUP BY reason, lang

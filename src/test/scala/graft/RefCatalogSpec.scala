@@ -52,7 +52,7 @@ class RefCatalogSpec extends AnyFunSuite {
   }
 
   test("ref_mv_kpi_channel sees a transactions CSV rewritten under a live session") {
-    val raw = Files.createTempDirectory("graft_ref_rewrite").resolve("reference/data/raw")
+    val raw = TempDir("graft_ref_rewrite").resolve("reference/data/raw")
     Files.createDirectories(raw)
     Files.list(java.nio.file.Paths.get(RefFixture.rawDir)).iterator().asScala
       .foreach(f => Files.copy(f, raw.resolve(f.getFileName)))

@@ -28,7 +28,7 @@ class TsDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("WARN")
     // re-land the same events with ts as int64 NANOSECONDS (the legacy
     // physical form the driver shipped before round 5)
-    nsDir = java.nio.file.Files.createTempDirectory("graft_tsdrift").toString
+    nsDir = TempDir("graft_tsdrift").toString
     val ev = spark.read.parquet(s"$dir/events.parquet")
     ev.withColumn("ts",
         (unix_micros(col("ts").cast("timestamp")) * 1000L).cast("long"))

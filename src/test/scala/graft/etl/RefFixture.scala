@@ -64,8 +64,7 @@ object RefFixture {
   private val PromoCsv = "promotion_reference.csv"
 
   lazy val rawDir: String = {
-    val root = Files.createTempDirectory("graft_ref_fixture")
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+    val root = graft.TempDir("graft_ref_fixture")
     val raw = Files.createDirectories(root.resolve("reference/data/raw"))
     write(raw)
     raw.toString

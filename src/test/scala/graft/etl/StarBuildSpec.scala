@@ -81,7 +81,7 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    raw = Files.createTempDirectory("graft_star_raw")
+    raw = graft.TempDir("graft_star_raw")
     writeRaw(baseTx)
     sessionThreads = nonDaemonThreads
   }
@@ -161,7 +161,7 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("WarehouseSink.write of a landed star spends one job per table") {
     val star = Pipeline.run(spark, raw.toString)
-    val out = Files.createTempDirectory("graft_star_wh")
+    val out = graft.TempDir("graft_star_wh")
     val jobs = new graft.Profile.Collector(spark.sparkContext)
     try {
       WarehouseSink.write(star, out.toString)
@@ -201,7 +201,7 @@ class StarBuildSpec extends AnyFunSuite with BeforeAndAfterAll {
     "fact_sales" -> star.factSales, "fact_spend" -> star.factSpend)
 
   test("a missing spend CSV fails the build with Spark's own path error") {
-    val partial = Files.createTempDirectory("graft_star_partial")
+    val partial = graft.TempDir("graft_star_partial")
     try {
       Files.copy(raw.resolve("ecom_mens_streetwear_10000.csv"),
         partial.resolve("ecom_mens_streetwear_10000.csv"))

@@ -1785,7 +1785,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import scala.jdk.CollectionConverters._
     // a private copy of the corpus: a plan no earlier test has cached
-    val copy = java.nio.file.Files.createTempDirectory("graft_assign_race")
+    val copy = graft.TempDir("graft_assign_race")
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
       copy.resolve("embeddings.parquet"))
     val fresh = spark.newSession()

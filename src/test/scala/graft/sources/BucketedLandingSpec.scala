@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +13,7 @@ class BucketedLandingSpec extends AnyFunSuite {
 
   test("f03 in two sequential sessions leaves the shared warehouse dir " +
        "empty and returns the unbucketed join's rows") {
-    val warehouse = Files.createTempDirectory("graft_f03_warehouse").toFile
+    val warehouse = graft.TempDir("graft_f03_warehouse").toFile
     try {
       for (run <- 1 to 2) {
         val spark = SparkSession.builder()

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -19,7 +18,7 @@ class BucketingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_buckets").toString)
+        graft.TempDir("graft_buckets").toString)
       // force the planner to prove co-location, not broadcast its way out
       .config("spark.sql.autoBroadcastJoinThreshold", "-1")
       .config("spark.ui.enabled", "false")

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.etl.{AnalyticsQueries, Pipeline, RefFixture, Warehouse}
-import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,7 +19,7 @@ class WarehouseSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    outDir = Files.createTempDirectory("graft_wh").toString
+    outDir = graft.TempDir("graft_wh").toString
     WarehouseSink.write(Pipeline.run(spark, RefFixture.rawDir), outDir)
   }
 

@@ -47,7 +47,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("checkpoint recovery: a restarted stream processes ONLY the new " +
        "files and converges to the batch result") {
     import java.nio.file.{Files, Paths}
-    val base = Files.createTempDirectory("graft_ckpt_spec").toString
+    val base = graft.TempDir("graft_ckpt_spec").toString
     val src = s"$base/events"; val ckpt = s"$base/checkpoint"; val out = s"$base/out"
     Files.createDirectories(Paths.get(src))
     val all = spark.read.parquet(s"$dir/events.parquet")
@@ -199,8 +199,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def mins(df: org.apache.spark.sql.DataFrame) =
       EventStream.bandKeysOf(df).groupBy("band", "bkey").agg(min("doc_id").as("bmin"))
-    val gen = java.nio.file.Files
-      .createTempDirectory("graft_band_gen_spec").toString + "/gen"
+    val gen = graft.TempDir("graft_band_gen_spec").toString + "/gen"
     def bytesUnder(p: String): Long = {
       def walk(f: java.io.File): Long =
         if (f.isDirectory)
@@ -551,8 +550,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val before = baseArtifacts
     // drive the per-batch core with ONE-PARENT slices — the finest
     // slicing a file stream could ever deliver
-    val gen = java.nio.file.Files
-      .createTempDirectory("w20slices").toString + "/gen"
+    val gen = graft.TempDir("w20slices").toString + "/gen"
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     (10L to 14L).foreach { p =>
       EventStream.ingestAttachBatch(
