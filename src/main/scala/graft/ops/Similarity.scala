@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.Tables
+import graft.sources.ArtifactStore
+import graft.sources.ArtifactStore.AnnStore
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,23 +162,6 @@ object Similarity {
       .agg(round(avg(col("v").cast("double")), 6).as("centroid"))
       .orderBy("label", "dim")
 
-  /** Trained-IVF ANN: a genuine coarse quantizer instead of [[annIvf]]'s
-    * label shortcut. Train = [[labelCentroids]] (per-cell mean vectors —
-    * one Lloyd assignment step seeded from the labels); index = assign
-    * EVERY vector to its nearest centroid by squared-L2 (its cell may
-    * differ from its label); search = score the query only against its own
-    * cell's candidates.
-    *
-    * Scale shape: the centroid table is cells×dims (corpus-independent) and
-    * broadcasts; assignment is a narrow per-row pass over the corpus (8
-    * distances per vector, no shuffle; the per-vector window ranks 8 rows);
-    * the search join is a co-partitioned equi-join on cell id — shuffle
-    * O(rows), the same 100 TB contract as [[annIvf]], with nprobe=1.
-    * Centroids are rounded to 6dp (as in s05) BEFORE distances, which makes
-    * assignment reproducible across engines: a raw double avg is
-    * accumulation-order-dependent, the rounded value is not (at this data's
-    * margins), and distances are then fixed-order left-to-right folds over
-    * exact float-to-double inputs. */
   /** Materialize a CENTROID-SIZED frame (≤ k ≤ 256 rows by construction
     * — never a corpus-sized one) into a LocalRelation. Lloyd-style
     * training loops otherwise nest each iteration's plan inside the next
@@ -192,46 +177,8 @@ object Similarity {
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** The ANN artifact store — lifecycle machinery shared with every
-    * other standing-artifact family since r14 (VERDICT r13 item 7):
-    * fingerprint-keyed paths, `_SOURCE` provenance sidecars, atomic
-    * publication, the policy-based (never age) sweep, generation-keyed
-    * relation caching, and the manifest retry all live in
-    * [[graft.sources.ArtifactStore]]; this file keeps thin aliases so
-    * the 20+ trainer call sites read unchanged. Version stays "r13" —
-    * artifact SEMANTICS are unchanged, so r13-built artifacts remain
-    * current and are reused. */
-  private val AnnStore = graft.sources.ArtifactStore.AnnStore
-
-  /** The store's keep policy, exposed for the lifecycle spec. */
-  private[graft] def artifactCurrent(d: java.io.File): Boolean =
-    graft.sources.ArtifactStore.keepEntry(AnnStore)(d)
-
-  /** DISK-backed memo — [[graft.SessionMemo]]'s build-once/consume-many
-    * contract extended ACROSS PROCESSES, which is the real production
-    * shape of an index artifact: the ingest job trains and ships parquet (s15's
-    * write half), and every query node — including a fresh JVM like the
-    * driver's cold bench — READS the artifact instead of retraining
-    * (VERDICT r6 items 3/5). Lifecycle contract: [[graft.sources.ArtifactStore]].
-    * Correctness backstop: every gate run re-hashes the downstream
-    * queries against the DuckDB oracle, so a poisoned artifact fails
-    * loudly rather than silently. */
-  private def diskMemo(spark: SparkSession, dir: String, tag: String)
-                      (build: => DataFrame): DataFrame =
-    spark.read.parquet(diskMemoDir(spark, dir, tag)(build))
-
-  /** [[diskMemo]]'s ensure-built half, returning the artifact PATH so
-    * callers can construct PRUNED reads over it (partition filters +
-    * id pushdown — the walk fetchers), not just the full-table read.
-    * `partitionCols` writes a hive-layout artifact (one directory per
-    * value): the layout half of the scan-avoidant serve path. */
-  private def diskMemoDir(spark: SparkSession, dir: String, tag: String,
-                          partitionCols: Seq[String] = Nil)
-                         (build: => DataFrame): String =
-    graft.sources.ArtifactStore.landDf(AnnStore, dir, tag, partitionCols)(build)
-
   private[ops] def centroidVectors(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "cents") {
+    AnnStore.landRead(spark, dir, "cents") {
       localized(labelCentroids(spark, dir)
         .groupBy(col("label").as("cell"))
         .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), s -> s.centroid)")
@@ -326,6 +273,23 @@ object Similarity {
       .orderBy("query_id", "rnk")
   }
 
+  /** Trained-IVF ANN: a genuine coarse quantizer instead of [[annIvf]]'s
+    * label shortcut. Train = [[labelCentroids]] (per-cell mean vectors —
+    * one Lloyd assignment step seeded from the labels); index = assign
+    * EVERY vector to its nearest centroid by squared-L2 (its cell may
+    * differ from its label); search = score the query only against its own
+    * cell's candidates.
+    *
+    * Scale shape: the centroid table is cells×dims (corpus-independent) and
+    * broadcasts; assignment is a narrow per-row pass over the corpus (8
+    * distances per vector, no shuffle; the per-vector window ranks 8 rows);
+    * the search join is a co-partitioned equi-join on cell id — shuffle
+    * O(rows), the same 100 TB contract as [[annIvf]], with nprobe=1.
+    * Centroids are rounded to 6dp (as in s05) BEFORE distances, which makes
+    * assignment reproducible across engines: a raw double avg is
+    * accumulation-order-dependent, the rounded value is not (at this data's
+    * margins), and distances are then fixed-order left-to-right folds over
+    * exact float-to-double inputs. */
   def annIvfTrained(spark: SparkSession, dir: String): DataFrame = {
     val assigned = trainedAssignment(spark, dir)
     val q = assigned.filter(col("vec_id") < 10)
@@ -407,7 +371,7 @@ object Similarity {
     // persisted once per (corpus fingerprint, k, iters), so repeat
     // trainings — including a fresh process — are parquet reads
     // (VERDICT r6 item 5); the artifact is tiny (k×dims rows)
-    diskMemo(spark, dir, s"kmeans${k}x$iters") {
+    AnnStore.landRead(spark, dir, s"kmeans${k}x$iters") {
       kmeansTrainLoop(spark, dir, k, iters)
     }.orderBy("cid", "dim")
 
@@ -874,36 +838,6 @@ object Similarity {
       .orderBy("nprobe")
   }
 
-  /** GRAPH-BASED ANN, HNSW-LITE (s29) — the serving-index family the
-    * IVF/PQ/SQ chain lacked: graph indexes (HNSW, Malkov & Yashunin
-    * 2018; DiskANN, Subramanya et al. 2019) are the industry default
-    * because a greedy walk over a k-NN graph touches O(beam · hops · m)
-    * candidates regardless of corpus size. This is a bounded,
-    * deterministic form of that idea in the house style:
-    *
-    *  - INDEX = a k-NN GRAPH: each candidate's `m` nearest same-cell
-    *    candidates by rounded cosine (the d13 celled pair join with a
-    *    per-node top-m instead of a global top-k — pair volume stays
-    *    celled, never corpus-quadratic), disk-memoized like every other
-    *    index artifact (s15 discipline), plus one MEDOID per cell — the
-    *    candidate nearest its cell centroid, DiskANN's entry-point rule.
-    *  - SEARCH = a fixed-depth BEAM WALK (g06's bounded-superstep
-    *    discipline): start at the query's cell medoid, then `hops`
-    *    rounds of expand-neighbors → score → keep the best `beam`
-    *    (ties by cand_id). The beam is MONOTONE — beam_t is a subset of
-    *    hop t+1's candidate pool, so the best-so-far never degrades —
-    *    and carries no visited set, which keeps the walk replayable as
-    *    plain SQL (the full HNSW visited-list refinement changes cost,
-    *    not the determinism contract).
-    *
-    * Scale shape: the graph build is one celled pair join (co-partitioned
-    * on cell id) + a per-node window — O(Σ|cell|²) pairs ONCE at build
-    * time, amortized across every search; each hop is ONE broadcast join
-    * of the beam (queries × beam rows — broadcast-sized by definition)
-    * against the disk-backed graph and ONE against the candidate
-    * vectors: the corpus is never re-scanned wider than the beam's
-    * adjacency. Everything rounds to 6dp with full tie-breaks, so the
-    * DuckDB oracle replays the identical walk hop by hop. */
   /** s29 defaults, shared with the oracle template so engine and SQL
     * can never walk different graphs. Sized on the clustered spec
     * corpus: m=8/beam=8/hops=4 reaches recall@3 = 1.0 there (m=4/
@@ -925,25 +859,9 @@ object Similarity {
     * size ≥ width/32 while hop-1 expansion stays O(probes·entryDeg). */
   val GraphAnnEntryDegree = 32
 
-  /** The s29/s30 shared core: disk-memoized k-NN graph + medoid entry
-    * points, then `hops` rounds of expand → score → keep-beam. Returns
-    * each hop's SCORED EXPANSION (hop, query_id, node, cosine, rnk) —
-    * graphAnn reads the last hop's rank-≤k prefix (beam ≥ k makes
-    * "top-k of the beam" ≡ "top-k of the expansion"), the sweep reads
-    * every hop's.
-    *
-    * Cells come from the CORPUS-SIZED quantizer ([[semDedupAssignment]],
-    * k = max(8, ⌈N/200⌉)), not the fixed-k search quantizer: the graph
-    * build's pair join is O(Σ|cell|²), so fixed-k cells would make the
-    * INDEX BUILD quadratic at scale — the same trap the d29 θ-graph had.
-    * With the sized quantizer the build stays O(N · targetCell), the
-    * property a build-once serving index actually needs. */
   /** Nodes per layout bucket of the walk artifacts (the knn graph, the
-    * walk's vector table, the walk's PQ codes): each artifact is written
-    * hive-partitioned by `pb = id div WalkBucketWidth`, so a hop's fetch
-    * prunes to the beam's buckets at PLANNING time (directory-level — the
-    * guarantee holds at any corpus size) and pushes the id list into the
-    * parquet reader for row-group/page skipping within them. A hop then
+    * walk's vector table, the walk's PQ codes), each landed in the
+    * store's bucketed layout under bucket `id div WalkBucketWidth`. A hop
     * reads O(beam·(1+m)) buckets of WalkBucketWidth rows instead of
     * streaming the corpus-sized frame (VERDICT r11's one `weak`). 64 keeps
     * buckets observable at test SFs; a production deployment sizes the
@@ -951,40 +869,18 @@ object Similarity {
     * per-hop read stays O(beam) buckets either way, never O(N). */
   private[graft] val WalkBucketWidth = 64L
 
-  private def walkBucket(id: Long): Int = (id / WalkBucketWidth).toInt
+  /** The walk artifacts' bucket id of an id column (class doc above). */
+  private def walkBucketOf(idCol: String): Column =
+    expr(s"cast($idCol div $WalkBucketWidth as int)")
 
-  /** One relation per (session, artifact path, generation), listed
-    * ONCE: a pb-partitioned artifact at replica scale holds thousands of
-    * bucket directories, and re-listing them per fetch would put an
-    * O(#buckets) driver cost on every hop (measured: 50 s/walk at the
-    * 500k-vector replica). Loading the file index once and planning
-    * every pruned read against it is exactly DiskANN's split — the
-    * MANIFEST lives in RAM, the vectors stay on disk. Generation keying
-    * and the manifest retry are the shared store's
-    * ([[graft.sources.ArtifactStore]]). */
-  private def artifactRelation(spark: SparkSession, path: String): DataFrame =
-    graft.sources.ArtifactStore.relation(spark, path)
-
-  /** Alias of [[graft.sources.ArtifactStore.withManifestRetry]] (kept
-    * for the 10+ walk call sites and the lifecycle spec). */
-  private[graft] def withManifestRetry[A](spark: SparkSession)(run: => A): A =
-    graft.sources.ArtifactStore.withManifestRetry(spark)(run)
-
-  /** Partition-pruned point-fetch over a pb-partitioned artifact: the
-    * DiskANN SSD-read, expressed as a lakehouse scan. `pb IN buckets`
-    * prunes directories at planning time (against the memoized file
-    * index); `id IN ids` reaches the parquet reader as a pushed filter
-    * (PlanSpec pins both). */
+  /** Pruned point-fetch over a walk artifact: the DiskANN SSD-read,
+    * expressed as a bucket fetch ([[ArtifactStore.fetchBuckets]]) with
+    * `id IN ids` pushed to the parquet reader (PlanSpec pins both). */
   private def prunedFetch(spark: SparkSession, path: String,
                           idCol: String, ids: Seq[Long]): DataFrame = {
-    val df = artifactRelation(spark, path)
-    if (ids.isEmpty) df.filter(lit(false)).drop("pb")
-    else {
-      val sorted = ids.distinct.sorted
-      df.filter(col("pb").isin(sorted.map(walkBucket).distinct: _*) &&
-                col(idCol).isin(sorted: _*))
-        .drop("pb")
-    }
+    val sorted = ids.distinct.sorted
+    ArtifactStore.fetchBuckets(spark, path,
+      sorted.map(i => (i / WalkBucketWidth).toInt), col(idCol).isin(sorted: _*))
   }
 
   /** The walk's storage interface: given the beam's node-id set (driver-
@@ -1005,10 +901,10 @@ object Similarity {
       spark: SparkSession, cand: DataFrame, medoid: DataFrame,
       graphPath: String, vecPath: String) {
     def graph: DataFrame =
-      artifactRelation(spark, graphPath).select("src", "dst")
+      ArtifactStore.relation(spark, graphPath).select("src", "dst")
     /** Scoreable node table (node, cv2, cnorm) — the walk's vector side. */
     def vecs: DataFrame =
-      artifactRelation(spark, vecPath).select("node", "cv2", "cnorm")
+      ArtifactStore.relation(spark, vecPath).select("node", "cv2", "cnorm")
     def fetch: WalkFetch = WalkFetch(
       ids => prunedFetch(spark, graphPath, "src", ids).select("src", "dst"),
       ids => prunedFetch(spark, vecPath, "node", ids)
@@ -1027,7 +923,7 @@ object Similarity {
     * monolithic build elects). */
   private def graphMedoid(spark: SparkSession, dir: String,
                           cand: DataFrame): DataFrame =
-    diskMemo(spark, dir, "knnmedoidv2") {
+    AnnStore.landRead(spark, dir, "knnmedoidv2") {
       val w = Window.partitionBy("cell").orderBy(col("cdist").asc, col("cand_id").asc)
       cand.join(broadcast(semDedupCentroids(spark, dir)), Seq("cell"))
         .withColumn("cdist", round(
@@ -1041,11 +937,9 @@ object Similarity {
     * graph-independent, shared by every serve path over this corpus. */
   private def walkVecPath(spark: SparkSession, dir: String,
                           cand: DataFrame): String =
-    diskMemoDir(spark, dir, s"walkvecw$WalkBucketWidth", Seq("pb")) {
+    AnnStore.landBucketed(dir, s"walkvecw$WalkBucketWidth",
+        walkBucketOf("node"), "node") {
       cand.select(col("cand_id").as("node"), col("cv2"), col("cnorm"))
-        .withColumn("pb", expr(s"cast(node div $WalkBucketWidth as int)"))
-        .repartition(col("pb"))
-        .sortWithinPartitions("node")
     }
 
   private[graft] def graphAnnIndex(spark: SparkSession, dir: String,
@@ -1063,8 +957,9 @@ object Similarity {
     // near edges descend. Both layers read ONE scored pair frame.
     // the tag carries BOTH edge-policy parameters AND the bucket layout:
     // a policy change must never silently reuse a stale artifact
-    val graphPath = diskMemoDir(spark, dir,
-        s"knngraph${m}e${GraphAnnEntryDegree}w$WalkBucketWidth", Seq("pb")) {
+    val graphPath = AnnStore.landBucketed(dir,
+        s"knngraph${m}e${GraphAnnEntryDegree}w$WalkBucketWidth",
+        walkBucketOf("src"), "src") {
       val a = cand.select(col("cand_id").as("src"), col("cell"),
         col("cv2").as("sv"), col("cnorm").as("sn"))
       val b = cand.select(col("cand_id").as("dst"), col("cell"),
@@ -1087,9 +982,6 @@ object Similarity {
         .filter(pmod(col("fk") - 1, expr(s"(cnt + ${ed - 1}) div $ed")) === 0)
         .select("src", "dst")
       near.unionByName(far).distinct()
-        .withColumn("pb", expr(s"cast(src div $WalkBucketWidth as int)"))
-        .repartition(col("pb"))
-        .sortWithinPartitions("src")
     }
     // the walk's vector side as its own bucketed artifact: the hop fetch
     // reads O(beam) buckets of it, never the corpus-sized frame
@@ -1195,7 +1087,7 @@ object Similarity {
       val beamIds = beams.flatMap(b => beamPairsBy(b).map(_._2))
         .distinct.sorted
       // pruned point-read 1: the union frontier's adjacency lists
-      val nbrs = withManifestRetry(spark)(fetch.adj(beamIds).collect())
+      val nbrs = ArtifactStore.withManifestRetry(spark)(fetch.adj(beamIds).collect())
         .map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).map { case (s, xs) => (s, xs.map(_._2)) }
       val expandedBy: Map[Int, Seq[(Long, Long)]] = beams.map { b =>
@@ -1208,7 +1100,7 @@ object Similarity {
       // pruned point-read 2: the union expansion's vectors, scored
       // in-plan (the 6dp cosine stays Spark-computed for oracle
       // bit-parity) — one fetch serves every width
-      val cosineOf = withManifestRetry(spark)(
+      val cosineOf = ArtifactStore.withManifestRetry(spark)(
         fetch.vec(unionExpanded.map(_._2).distinct)
           .join(broadcast(unionExpanded.toDF("query_id", "node")), Seq("node"))
           .join(qSide, Seq("query_id"))
@@ -1249,6 +1141,19 @@ object Similarity {
     beams.map(b => b -> (framesBy(b): Seq[DataFrame])).toMap
   }
 
+  /** The s29/s30 shared core: disk-memoized k-NN graph + medoid entry
+    * points, then `hops` rounds of expand → score → keep-beam. Returns
+    * each hop's SCORED EXPANSION (hop, query_id, node, cosine, rnk) —
+    * graphAnn reads the last hop's rank-≤k prefix (beam ≥ k makes
+    * "top-k of the beam" ≡ "top-k of the expansion"), the sweep reads
+    * every hop's.
+    *
+    * Cells come from the CORPUS-SIZED quantizer ([[semDedupAssignment]],
+    * k = max(8, ⌈N/200⌉)), not the fixed-k search quantizer: the graph
+    * build's pair join is O(Σ|cell|²), so fixed-k cells would make the
+    * INDEX BUILD quadratic at scale — the same trap the d29 θ-graph had.
+    * With the sized quantizer the build stays O(N · targetCell), the
+    * property a build-once serving index actually needs. */
   private def beamWalkScored(spark: SparkSession, dir: String,
                              m: Int, beam: Int, hops: Int): Seq[DataFrame] =
     beamWalkScoredMulti(spark, dir, m, Seq(beam), hops)(beam)
@@ -1263,6 +1168,36 @@ object Similarity {
     beamWalkOverMulti(spark, dir, idx.fetch, idx.medoid, q, beams, hops)
   }
 
+  /** GRAPH-BASED ANN, HNSW-LITE (s29) — the serving-index family the
+    * IVF/PQ/SQ chain lacked: graph indexes (HNSW, Malkov & Yashunin
+    * 2018; DiskANN, Subramanya et al. 2019) are the industry default
+    * because a greedy walk over a k-NN graph touches O(beam · hops · m)
+    * candidates regardless of corpus size. This is a bounded,
+    * deterministic form of that idea in the house style:
+    *
+    *  - INDEX = a k-NN GRAPH: each candidate's `m` nearest same-cell
+    *    candidates by rounded cosine (the d13 celled pair join with a
+    *    per-node top-m instead of a global top-k — pair volume stays
+    *    celled, never corpus-quadratic), disk-memoized like every other
+    *    index artifact (s15 discipline), plus one MEDOID per cell — the
+    *    candidate nearest its cell centroid, DiskANN's entry-point rule.
+    *  - SEARCH = a fixed-depth BEAM WALK (g06's bounded-superstep
+    *    discipline): start at the query's cell medoid, then `hops`
+    *    rounds of expand-neighbors → score → keep the best `beam`
+    *    (ties by cand_id). The beam is MONOTONE — beam_t is a subset of
+    *    hop t+1's candidate pool, so the best-so-far never degrades —
+    *    and carries no visited set, which keeps the walk replayable as
+    *    plain SQL (the full HNSW visited-list refinement changes cost,
+    *    not the determinism contract).
+    *
+    * Scale shape: the graph build is one celled pair join (co-partitioned
+    * on cell id) + a per-node window — O(Σ|cell|²) pairs ONCE at build
+    * time, amortized across every search; each hop is ONE broadcast join
+    * of the beam (queries × beam rows — broadcast-sized by definition)
+    * against the disk-backed graph and ONE against the candidate
+    * vectors: the corpus is never re-scanned wider than the beam's
+    * adjacency. Everything rounds to 6dp with full tie-breaks, so the
+    * DuckDB oracle replays the identical walk hop by hop. */
   def graphAnn(spark: SparkSession, dir: String, k: Int = 3,
                m: Int = GraphAnnM, beam: Int = GraphAnnBeam,
                hops: Int = GraphAnnHops): DataFrame =
@@ -1437,8 +1372,9 @@ object Similarity {
                                     parity: Int,
                                     m: Int = GraphAnnM): String = {
     val cand = graphCand(spark, dir)
-    diskMemoDir(spark, dir,
-        s"knngraphshard${parity}m${m}w$WalkBucketWidth", Seq("pb")) {
+    AnnStore.landBucketed(dir,
+        s"knngraphshard${parity}m${m}w$WalkBucketWidth",
+        walkBucketOf("src"), "src") {
       val sc = cand.filter(pmod(col("cand_id"), lit(2)) === parity)
       val a = sc.select(col("cand_id").as("src"), col("cell"),
         col("cv2").as("sv"), col("cnorm").as("sn"))
@@ -1453,9 +1389,6 @@ object Similarity {
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= m)
         .select("src", "dst")
-        .withColumn("pb", expr(s"cast(src div $WalkBucketWidth as int)"))
-        .repartition(col("pb"))
-        .sortWithinPartitions("src")
     }
   }
 
@@ -1465,9 +1398,9 @@ object Similarity {
     val medoid = graphMedoid(spark, dir, cand)
     val pA = shardGraphPath(spark, dir, 0, m)
     val pB = shardGraphPath(spark, dir, 1, m)
-    diskMemoDir(spark, dir,
+    AnnStore.landBucketed(dir,
         s"knngraphmergedm${m}e${GraphAnnEntryDegree}w$WalkBucketWidth",
-        Seq("pb")) {
+        walkBucketOf("src"), "src") {
       val cSrc = cand.select(col("cand_id").as("src"), col("cell"),
         col("cv2").as("sv"), col("cnorm").as("sn"))
       val cDst = cand.select(col("cand_id").as("dst"), col("cell"),
@@ -1477,8 +1410,8 @@ object Similarity {
           / (col("sn") * col("dn")), 6)
       // (1) shard near-layers rescored EDGE-LINEARLY (≤ N·m rows joined
       // to their endpoint vectors — never a pair join)
-      val rescored = artifactRelation(spark, pA).select("src", "dst")
-        .unionByName(artifactRelation(spark, pB).select("src", "dst"))
+      val rescored = ArtifactStore.relation(spark, pA).select("src", "dst")
+        .unionByName(ArtifactStore.relation(spark, pB).select("src", "dst"))
         .join(cSrc.drop("cell"), Seq("src"))
         .join(cDst.drop("cell"), Seq("dst"))
         .withColumn("gcos", gcos)
@@ -1514,9 +1447,6 @@ object Similarity {
         .filter(pmod(col("fk") - 1, expr(s"(cnt + ${ed - 1}) div $ed")) === 0)
         .select("src", "dst")
       near.unionByName(far).distinct()
-        .withColumn("pb", expr(s"cast(src div $WalkBucketWidth as int)"))
-        .repartition(col("pb"))
-        .sortWithinPartitions("src")
     }
   }
 
@@ -1528,17 +1458,12 @@ object Similarity {
   def mergedShardAnn(spark: SparkSession, dir: String,
                      k: Int = 3): DataFrame = {
     val cand = graphCand(spark, dir)
-    val medoid = graphMedoid(spark, dir, cand)
-    val graphPath = mergedGraphPath(spark, dir)
-    val vecPath = walkVecPath(spark, dir, cand)
-    val fetch = WalkFetch(
-      ids => prunedFetch(spark, graphPath, "src", ids).select("src", "dst"),
-      ids => prunedFetch(spark, vecPath, "node", ids)
-        .select("node", "cv2", "cnorm"))
+    val idx = GraphAnnIndex(spark, cand, graphMedoid(spark, dir, cand),
+      mergedGraphPath(spark, dir), walkVecPath(spark, dir, cand))
     val q = semDedupAssignment(spark, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"),
         col("v").as("qv"), col("norm").as("qnorm"))
-    beamWalkOver(spark, dir, fetch, medoid, q,
+    beamWalkOver(spark, dir, idx.fetch, idx.medoid, q,
         GraphAnnBeam, GraphAnnHops).last
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("node").as("cand_id"), col("cosine"),
@@ -1595,26 +1520,23 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("s"),
         col("cid").as("code"), col("d")))
     // the walk's code table, bucketed for the per-hop point-read
-    val codesPath = diskMemoDir(spark, dir, s"walkcodesw$WalkBucketWidth",
-        Seq("pb")) {
+    val codesPath = AnnStore.landBucketed(dir, s"walkcodesw$WalkBucketWidth",
+        walkBucketOf("cand_id"), "cand_id") {
       pqCandidateCodes(spark, dir)
-        .withColumn("pb", expr(s"cast(cand_id div $WalkBucketWidth as int)"))
-        .repartition(col("pb"))
-        .sortWithinPartitions("cand_id")
     }
     var beamPairs: Seq[(Long, Long)] =
       walkEntryBeam(spark, dir, idx.medoid, queries)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
     (1 to hops).foreach { _ =>
       val beamIds = beamPairs.map(_._2).distinct.sorted
-      val nbrs = withManifestRetry(spark)(idx.fetch.adj(beamIds).collect())
+      val nbrs = ArtifactStore.withManifestRetry(spark)(idx.fetch.adj(beamIds).collect())
         .map(r => (r.getLong(0), r.getLong(1)))
         .groupBy(_._1).map { case (s, xs) => (s, xs.map(_._2)) }
       val expanded = (beamPairs ++ beamPairs.flatMap { case (q, n) =>
         nbrs.getOrElse(n, Array.empty[Long]).map(d => (q, d)) })
         .distinct.sorted
       // ADC scoring: pruned 8-byte code fetch folded against the LUT
-      val scored = withManifestRetry(spark)(
+      val scored = ArtifactStore.withManifestRetry(spark)(
         prunedFetch(spark, codesPath, "cand_id",
             expanded.map(_._2).distinct)
           .join(broadcast(expanded.toDF("query_id", "node")),
@@ -1753,14 +1675,6 @@ object Similarity {
     * corpus vec_id at any gated SF or replica. */
   private[graft] val InsertIdBase = 100000L
 
-  /** Deterministic ARRIVALS for the graph-insert path: five new vectors
-    * jittered off parents 10–14 (per-dim additive noise
-    * (md5-nibble − 7.5)/1000, 6dp-rounded — the ScaledReplica
-    * hash-seeded-jitter discipline, replayable in the oracle from its
-    * own md5()). Jittered copies are exactly the production arrival
-    * shape for a serving index — near-duplicates of in-index content —
-    * and make findability MEASURABLE: each parent must retrieve its
-    * arrival after the insert (s34). Shape: (query_id, qv, qnorm). */
   /** The arrival jitter over EXPLICIT (vec_id, v) parent rows — the
     * batch-shaped core [[insertArrivals]] adapts; the streaming ingest
     * (w20) runs it per micro-batch with whatever parent slice arrived. */
@@ -1773,6 +1687,14 @@ object Similarity {
       .select((col("vec_id") + lit(InsertIdBase)).as("query_id"), col("qv"))
       .withColumn("qnorm", sqrt(expr("aggregate(qv, 0D, (acc, x) -> acc + x * x)")))
 
+  /** Deterministic ARRIVALS for the graph-insert path: five new vectors
+    * jittered off parents 10–14 (per-dim additive noise
+    * (md5-nibble − 7.5)/1000, 6dp-rounded — the ScaledReplica
+    * hash-seeded-jitter discipline, replayable in the oracle from its
+    * own md5()). Jittered copies are exactly the production arrival
+    * shape for a serving index — near-duplicates of in-index content —
+    * and make findability MEASURABLE: each parent must retrieve its
+    * arrival after the insert (s34). Shape: (query_id, qv, qnorm). */
   private[graft] def insertArrivals(spark: SparkSession, dir: String): DataFrame =
     insertArrivalsOf(vectors(spark, dir)
       .filter(col("vec_id").between(10, 14))
@@ -1832,7 +1754,7 @@ object Similarity {
     * frozen (OpsSpec asserts the insert rewrites none of them); arrivals
     * accumulate as an append-side delta the serve unions in. */
   def graphAnnAttachLog(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "knnattach") { graphAnnInsert(spark, dir) }
+    AnnStore.landRead(spark, dir, "knnattach") { graphAnnInsert(spark, dir) }
 
   /** POST-INSERT SERVING (s34) — the proof the insert is an insert:
     * search the MERGED graph (base edges ∪ s33's attach edges ∪ their
@@ -2050,11 +1972,6 @@ object Similarity {
   private def pqAssign(sub: DataFrame, cents: DataFrame): DataFrame =
     nearestCell(sub, cents, Seq("s"), "cid", "sv", "cid")
 
-  /** Per-subspace k-means codebooks (k=PqK, 2 Lloyd iterations, seeds =
-    * the first k vectors' subvectors, centroids rounded to 6dp each
-    * iteration — [[kmeansCentroids]]'s determinism discipline, so the
-    * DuckDB oracle replays training exactly). The subspace is DATA, not
-    * code: one grouped aggregation trains all 8 codebooks at once. */
   /** The shared 2-iteration Lloyd refinement over per-subspace seeds. */
   private def pqLloyd(sub: DataFrame, seed: DataFrame): DataFrame = {
     // each iteration's m×k centroid table goes through localized() so
@@ -2071,20 +1988,25 @@ object Similarity {
     cents
   }
 
+  /** Per-subspace k-means codebooks (k=PqK, 2 Lloyd iterations, seeds =
+    * the first k vectors' subvectors, centroids rounded to 6dp each
+    * iteration — [[kmeansCentroids]]'s determinism discipline, so the
+    * DuckDB oracle replays training exactly). The subspace is DATA, not
+    * code: one grouped aggregation trains all 8 codebooks at once. */
   private def pqCodebooksOf(sub: DataFrame): DataFrame =
     pqLloyd(sub,
       sub.filter(col("vec_id") < PqK)
         .select(col("s"), col("vec_id").cast("int").as("cid"), col("sv").as("cv")))
 
   /** Raw-embedding PQ index, trained/encoded ONCE per (session, dir):
-    * [[diskMemo]] makes the build-index/query-index split real — s10/s11/s12
-    * and repeated bench reps share one training pass and one encode pass
-    * instead of re-running Lloyd per call. */
+    * `AnnStore.landRead` makes the build-index/query-index split real —
+    * s10/s11/s12 and repeated bench reps share one training pass and one
+    * encode pass instead of re-running Lloyd per call. */
   private[ops] def pqCodebooks(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "pq-books") { pqCodebooksOf(subvectors(spark, dir)) }
+    AnnStore.landRead(spark, dir, "pq-books") { pqCodebooksOf(subvectors(spark, dir)) }
 
   private[ops] def pqCandidateCodes(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "pq-codes") {
+    AnnStore.landRead(spark, dir, "pq-codes") {
       pqAssign(subvectors(spark, dir).filter(col("vec_id") >= 10),
                pqCodebooks(spark, dir))
         .select(col("vec_id").as("cand_id"), col("s"), col("cid").as("code"))
@@ -2168,13 +2090,13 @@ object Similarity {
     * (session, dir) and shared by s13's search and s14's recall report
     * (which previously re-trained the index it was measuring). */
   private[ops] def residCodebooks(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "ivfpq-books") { pqCodebooksOf(residSubvectors(spark, dir)) }
+    AnnStore.landRead(spark, dir, "ivfpq-books") { pqCodebooksOf(residSubvectors(spark, dir)) }
 
   /** The encoded IVF-PQ candidate index: 8 byte-codes + coarse cell per
     * candidate vector — the persisted artifact a query-time probe joins
     * against. */
   private[ops] def residCandidateCodes(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "ivfpq-codes") {
+    AnnStore.landRead(spark, dir, "ivfpq-codes") {
       pqAssign(residSubvectors(spark, dir).filter(col("vec_id") >= 10),
                residCodebooks(spark, dir))
         .select(col("vec_id").as("cand_id"), col("s"), col("cid").as("code"))
@@ -2382,9 +2304,9 @@ object Similarity {
     // compaction OUTPUT = two versioned artifacts (patched graph,
     // re-elected medoids); both build from one tombstone walk — lazy, so
     // a session finding both artifacts on disk runs no walk at all
-    val pgraphPath = diskMemoDir(spark, dir,
+    val pgraphPath = AnnStore.landBucketed(dir,
         s"knncompact${m}e${GraphAnnEntryDegree}w$WalkBucketWidth",
-        Seq("pb")) {
+        walkBucketOf("src"), "src") {
       val g = idx.graph
       val live = g.join(broadcast(tomb.select(col("node").as("src"))),
         Seq("src"), "left_anti")
@@ -2414,11 +2336,8 @@ object Similarity {
         .select("src", "dst")
       retained.join(broadcast(adjSrc), Seq("src"), "left_anti")
         .unionByName(patchedAdj)
-        .withColumn("pb", expr(s"cast(src div $WalkBucketWidth as int)"))
-        .repartition(col("pb"))
-        .sortWithinPartitions("src")
     }
-    val med2 = diskMemo(spark, dir,
+    val med2 = AnnStore.landRead(spark, dir,
         s"knncompactmed${m}e$GraphAnnEntryDegree") {
       val medW = Window.partitionBy("cell").orderBy(col("cdist").asc, col("cand_id").asc)
       idx.cand
@@ -2430,13 +2349,10 @@ object Similarity {
         .filter(col("rk") === 1)
         .select(col("cell"), col("cand_id").as("entry"))
     }
-    val fetch = WalkFetch(
-      ids => prunedFetch(spark, pgraphPath, "src", ids).select("src", "dst"),
-      idx.fetch.vec)
     val q = semDedupAssignment(spark, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"),
         col("v").as("qv"), col("norm").as("qnorm"))
-    beamWalkOver(spark, dir, fetch, med2, q,
+    beamWalkOver(spark, dir, idx.copy(graphPath = pgraphPath).fetch, med2, q,
         GraphAnnBeam, GraphAnnHops).last
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("node").as("cand_id"), col("cosine"),
@@ -2682,7 +2598,7 @@ object Similarity {
     def cand = vectors(spark, dir).filter(col("vec_id") >= 10)
     // build-time coarse centroids: per-label means over the INDEX only —
     // memoized like every other index artifact (build once, query many)
-    val cents = diskMemo(spark, dir, "incr-cents") {
+    val cents = AnnStore.landRead(spark, dir, "incr-cents") {
       localized(cand.filter(!delta(col("vec_id")))
         .select(col("label").as("cell"), posexplode(col("v")).as(Seq("dim", "vv")))
         .groupBy("cell", "dim").agg(round(avg("vv"), 6).as("c"))
@@ -2708,7 +2624,7 @@ object Similarity {
     // frozen residual codebooks: trained on index residuals, seeded by
     // the 16 smallest index ids (subset-safe — vec_id<16 are all queries
     // or possibly delta here)
-    val books = diskMemo(spark, dir, "incr-books") {
+    val books = AnnStore.landRead(spark, dir, "incr-books") {
       val rsubIdx = rsubAll.filter(!delta(col("vec_id")))
       val seeds = rsubIdx.select("vec_id").distinct().orderBy("vec_id").limit(16)
       pqLloyd(rsubIdx,
@@ -2716,7 +2632,7 @@ object Similarity {
           .select(col("s"), col("vec_id").cast("int").as("cid"), col("sv").as("cv")))
     }
     // delta encoding = the same assignment pass the index paid at build
-    val codes = diskMemo(spark, dir, "incr-codes") {
+    val codes = AnnStore.landRead(spark, dir, "incr-codes") {
       pqAssign(rsubAll, books)
         .select(col("vec_id").as("cand_id"), col("s"), col("cid").as("code"))
         .join(assigned.select(col("vec_id").as("cand_id"), col("cell")), Seq("cand_id"))
@@ -2757,7 +2673,7 @@ object Similarity {
     * dims rows). min/max of doubles is exact, so no rounding discipline
     * is needed for cross-engine parity. */
   private[ops] def sqStats(spark: SparkSession, dir: String): DataFrame =
-    diskMemo(spark, dir, "sq-stats") {
+    AnnStore.landRead(spark, dir, "sq-stats") {
       localized(vectors(spark, dir).filter(col("vec_id") >= 10)
         .select(posexplode(col("v")).as(Seq("dim", "x")))
         .groupBy("dim")
@@ -2790,18 +2706,6 @@ object Similarity {
   private def sqStatsRow(spark: SparkSession, dir: String): DataFrame =
     sqStatsRowOf(sqStats(spark, dir))
 
-  /** SQ8 ANN (s23) — asymmetric search: the query keeps its exact
-    * floats; every candidate is RECONSTRUCTED from its byte code by the
-    * affine map mn + code·(mx−mn)/255, and ranked by squared L2 to the
-    * query. Encode and decode are fused into one expression here (the
-    * byte code is floor((x−mn)·255/(mx−mn) + 0.5) clamped to [0,255]) —
-    * a persisted deployment stores the byte arrays and pays only the
-    * decode half per query; fusing changes no value. floor() is the
-    * cross-engine rounding primitive (both engines floor doubles
-    * identically; round() half-rule differs), distances round to 6dp
-    * before ranking with a cand_id tie-break ([[cosineTopK]]'s
-    * discipline). Constant dimensions (mx = mn) reconstruct to mn
-    * exactly. */
   /** The fused SQ encode/decode of column `v` against broadcast
     * (mns, mxs) arrays — shared by flat SQ8 (s23), media SQ (m09), and
     * residual IVF-SQ (s24). */
@@ -2831,6 +2735,18 @@ object Similarity {
       .orderBy("query_id", "rnk")
   }
 
+  /** SQ8 ANN (s23) — asymmetric search: the query keeps its exact
+    * floats; every candidate is RECONSTRUCTED from its byte code by the
+    * affine map mn + code·(mx−mn)/255, and ranked by squared L2 to the
+    * query. Encode and decode are fused into one expression here (the
+    * byte code is floor((x−mn)·255/(mx−mn) + 0.5) clamped to [0,255]) —
+    * a persisted deployment stores the byte arrays and pays only the
+    * decode half per query; fusing changes no value. floor() is the
+    * cross-engine rounding primitive (both engines floor doubles
+    * identically; round() half-rule differs), distances round to 6dp
+    * before ranking with a cand_id tie-break ([[cosineTopK]]'s
+    * discipline). Constant dimensions (mx = mn) reconstruct to mn
+    * exactly. */
   def sqAnn(spark: SparkSession, dir: String, k: Int = 3): DataFrame =
     sqSearch(
       vectors(spark, dir).filter(col("vec_id") < 10)
@@ -2866,7 +2782,7 @@ object Similarity {
       .join(broadcast(cents), Seq("cell"))
       .select(col("vec_id"), col("cell"),
         expr("zip_with(v, cv, (x, c) -> x - c)").as("v"))
-    val statsRow = sqStatsRowOf(diskMemo(spark, dir, "ivfsq-stats") {
+    val statsRow = sqStatsRowOf(AnnStore.landRead(spark, dir, "ivfsq-stats") {
       sqStatsOfVecs(resid.filter(col("vec_id") >= 10))
     })
     val xh = resid.filter(col("vec_id") >= 10)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sources.ArtifactStore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -442,24 +443,16 @@ object EventStream {
   }
 
   /** The band-min index as a PERSISTED, PROBE-PRUNABLE artifact (VERDICT
-    * r12 item 4): [[indexBandMins]] hive-partitioned by [[bandBucket]] —
-    * the f18 bucketed point-lookup layout applied to the ingest line's
-    * standing signature table. At 100 TB this is written once at ingest
-    * (the docstring's claim, now an actual artifact); w08's stream-static
+    * r12 item 4): [[indexBandMins]] in the store's bucketed layout under
+    * [[bandBucket]]. At 100 TB this is written once at ingest (the
+    * docstring's claim, now an actual artifact); w08's stream-static
     * join reads it instead of re-deriving corpus signatures per run, and
     * w19's per-batch probe prunes to the batch's buckets. */
   def bandIndexPath(spark: SparkSession, dir: String): String =
-    graft.sources.PointLookup.landIndex(spark, "bandindex", dir,
-        "documents.parquet", Seq("pb")) {
+    ArtifactStore.IndexStore.landBucketed(dir, "bandindex",
+        bandBucket(col("band"), col("bkey")), "band", "bkey") {
       indexBandMins(spark, dir)
-        .withColumn("pb", bandBucket(col("band"), col("bkey")))
-        .repartition(col("pb"))
-        .sortWithinPartitions("band", "bkey")
     }
-
-  def bandIndexRelation(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.PointLookup.indexRelation(spark, dir,
-      "documents.parquet", bandIndexPath(spark, dir))
 
   /** Pruned point-probe of the band-min index — the serving access
     * pattern (an ingest node asking "which of these buckets hold an
@@ -468,19 +461,15 @@ object EventStream {
     * (PlanSpec pins files-read, like the s29/f18 pins). */
   def bandFetch(spark: SparkSession, dir: String,
                 keys: Seq[(Int, String)]): DataFrame = {
-    val rel = bandIndexRelation(spark, dir)
-    if (keys.isEmpty) rel.filter(lit(false)).drop("pb")
-    else {
-      val pbs = keys.map { case (b, k) => bandBucketOf(b, k) }.distinct.sorted
-      val ks = keys.map(_._2).distinct.sorted
-      val pairs = keys.map { case (b, k) => s"$b|$k" }.distinct.sorted
-      // bucket prune + bkey pushdown reach the scan; the exact (band,
-      // bkey) pair filter runs post-scan so a same-key-different-band
-      // row can never leak through
-      rel.filter(col("pb").isin(pbs: _*) && col("bkey").isin(ks: _*) &&
-          concat_ws("|", col("band"), col("bkey")).isin(pairs: _*))
-        .drop("pb")
-    }
+    val ks = keys.map(_._2).distinct.sorted
+    val pairs = keys.map { case (b, k) => s"$b|$k" }.distinct.sorted
+    // bucket prune + bkey pushdown reach the scan; the exact (band,
+    // bkey) pair filter runs post-scan so a same-key-different-band
+    // row can never leak through
+    ArtifactStore.fetchBuckets(spark, bandIndexPath(spark, dir),
+      keys.map { case (b, k) => bandBucketOf(b, k) },
+      col("bkey").isin(ks: _*) &&
+        concat_ws("|", col("band"), col("bkey")).isin(pairs: _*))
   }
 
   /** (doc_id, band, bkey) LSH band keys of every shingled document —
@@ -657,24 +646,6 @@ object EventStream {
     spark.read.parquet(gen).orderBy("arrival_id", "rnk")
   }
 
-  /** The in-flight dedup guard: each arriving document (md5 bucket 'f' —
-    * the same arrival line as d19/d22) computes its MinHash band keys as
-    * per-row expressions, and four stream-static hash joins probe the
-    * index band table; the row is dropped the moment ANY band's bucket
-    * holds an OLDER index doc. ZERO streaming state: no aggregation, no
-    * watermark, no dedup buffer — the decision is per-row against the
-    * static index, so the guard runs at line rate on an unbounded feed
-    * (StreamingSpec asserts the state-free progress). This is the
-    * recall-first gate: band collision without the exact-Jaccard verify
-    * may drop a non-duplicate (the LSH false-positive rate); the nightly
-    * batch pass (d22) is the exact form. Short docs (no shingles) carry
-    * null band keys and always pass. */
-  /** The guard as a frame-in/frame-out transform — identical plan for a
-    * streaming or batch `arrivals` frame (StreamingSpec proves the two
-    * agree row for row). */
-  /** The w08 probe chain with the 4 per-band index minima left-joined
-    * on (exposed so w19's ledger can read the SAME probe as flags
-    * instead of a filter). Keeps every arrival column. */
   /** The per-row half of the probe: arrival columns + sig + bk0..bk3.
     * Split out so w19's per-batch path can MATERIALIZE the keyed frame
     * once and share it between the bucket-list collects and the verdict
@@ -701,9 +672,15 @@ object EventStream {
     joined
   }
 
+  /** The w08 probe chain with the 4 per-band index minima left-joined
+    * on (exposed so w19's ledger can read the SAME probe as flags
+    * instead of a filter). Keeps every arrival column. */
   def bandProbeOf(arrivals: DataFrame, idx: DataFrame): DataFrame =
     bandProbeJoins(bandKeyed(arrivals), idx)
 
+  /** The guard as a frame-in/frame-out transform — identical plan for a
+    * streaming or batch `arrivals` frame (StreamingSpec proves the two
+    * agree row for row). */
   def ingestDedupOf(arrivals: DataFrame, idx: DataFrame): DataFrame =
     bandProbeOf(arrivals, idx)
       .filter((0 until 4)
@@ -711,6 +688,18 @@ object EventStream {
         .reduce(_ && _))
       .select("doc_id", "lang", "n_chars")
 
+  /** The in-flight dedup guard: each arriving document (md5 bucket 'f' —
+    * the same arrival line as d19/d22) computes its MinHash band keys as
+    * per-row expressions, and four stream-static hash joins probe the
+    * index band table; the row is dropped the moment ANY band's bucket
+    * holds an OLDER index doc. ZERO streaming state: no aggregation, no
+    * watermark, no dedup buffer — the decision is per-row against the
+    * static index, so the guard runs at line rate on an unbounded feed
+    * (StreamingSpec asserts the state-free progress). This is the
+    * recall-first gate: band collision without the exact-Jaccard verify
+    * may drop a non-duplicate (the LSH false-positive rate); the nightly
+    * batch pass (d22) is the exact form. Short docs (no shingles) carry
+    * null band keys and always pass. */
   def ingestDedupStream(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.MinHashSigs.register(spark)
     // static side = the PERSISTED band-min artifact (VERDICT r12 item 4):
@@ -719,7 +708,8 @@ object EventStream {
     ingestDedupOf(
       readDocuments(spark, dir)
         .filter(substring(md5(col("doc_id").cast("string")), 1, 1) === "f"),
-      bandIndexRelation(spark, dir).select("band", "bkey", "bmin"))
+      ArtifactStore.relation(spark, bandIndexPath(spark, dir))
+        .select("band", "bkey", "bmin"))
   }
 
   /** Run [[ingestDedupStream]] with AvailableNow into a memory sink.
@@ -1261,20 +1251,19 @@ object EventStream {
     * batch key. */
   def prunedIngestIndexes(spark: SparkSession, dir: String,
                           keyed: DataFrame): (DataFrame, DataFrame) = {
-    val fpPbs = keyed
-      .select(graft.ops.Dedup.fpBucket(col("fp")).as("pb"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val fpIdx = graft.sources.PointLookup.indexRelation(spark, dir,
-        "documents.parquet", graft.ops.Dedup.fpIndexPath(spark, dir))
-      .filter(col("pb").isin(fpPbs.toSeq: _*))
+    val fpBuckets = keyed
+      .select(graft.ops.Dedup.fpBucket(col("fp")))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val fpIdx = ArtifactStore.fetchBuckets(spark,
+        graft.ops.Dedup.fpIndexPath(spark, dir), fpBuckets, lit(true))
       .select("fp")
-    val bandPbs = keyed
+    val bandBuckets = keyed
       .selectExpr("stack(4, 0, bk0, 1, bk1, 2, bk2, 3, bk3) as (band, bkey)")
       .filter(col("bkey").isNotNull)
-      .select(bandBucket(col("band"), col("bkey")).as("pb"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    val bandIdx = bandIndexRelation(spark, dir)
-      .filter(col("pb").isin(bandPbs.toSeq: _*))
+      .select(bandBucket(col("band"), col("bkey")))
+      .distinct().collect().map(_.getInt(0)).toSeq
+    val bandIdx = ArtifactStore.fetchBuckets(spark,
+        bandIndexPath(spark, dir), bandBuckets, lit(true))
       .select("band", "bkey", "bmin")
     (fpIdx, bandIdx)
   }

@@ -826,6 +826,24 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         idxScans.head.toString.take(1500))
   }
 
+  test("an empty key list plans no file scan: each bucketed-index fetch " +
+       "returns 0 rows and the artifact's columns without the bucket column") {
+    graft.functions.MinHashSigs.register(spark)
+    val walkVecs = graft.ops.Similarity.graphAnnIndex(spark, dir).vecPath
+    Seq(
+      graft.sources.PointLookup.fetch(spark, dir, Nil) -> Seq("doc_id", "lang", "n_chars"),
+      graft.ops.Dedup.fpProbe(spark, dir, Nil) -> Seq("fp"),
+      graft.streaming.EventStream.bandFetch(spark, dir, Nil) -> Seq("band", "bkey", "bmin"),
+      graft.sources.ArtifactStore.fetchBuckets(spark, walkVecs, Nil,
+        org.apache.spark.sql.functions.lit(true)) -> Seq("node", "cv2", "cnorm")
+    ).foreach { case (fetched, cols) =>
+      assert(fetched.collect().isEmpty)
+      assert(fetched.columns.toSeq === cols)
+      assert(scanExecs(fetched).isEmpty,
+        fetched.queryExecution.executedPlan.toString.take(1500))
+    }
+  }
+
   test("s29 hop output is serving-sized: a hop frame is a LocalRelation " +
        "(beam-ranked on the driver, DiskANN-style) — the corpus enters " +
        "a hop only through the pruned bucket reads, never a stream") {

@@ -4,9 +4,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Ratchet on session and scratch setup in the main tree. [[GraftSession]]
   * is the one session factory (child sessions included), [[Profile]] the
-  * one diagnostic main and [[graft.sources.StaleOutputs]] the one owner of
-  * the scratch root; Bench and Verify keep their inline setup because
-  * benchmark harnesses read their stdout and timing. Like
+  * one diagnostic main, [[graft.sources.StaleOutputs]] the one owner of
+  * the scratch root and [[graft.sources.ArtifactStore]] the one owner of
+  * the bucketed index layout; Bench and Verify keep their inline setup
+  * because benchmark harnesses read their stdout and timing. Like
   * [[PrivateCacheSpec]], each test also fails when an allowed file no
   * longer does what it is allowed to, so the lists only shrink. */
 class SessionFactorySpec extends AnyFunSuite {
@@ -31,6 +32,10 @@ class SessionFactorySpec extends AnyFunSuite {
 
   test("no main-tree file other than StaleOutputs reads java.io.tmpdir") {
     assert(filesWhoseCode(_.contains("java.io.tmpdir")) === Set("StaleOutputs"))
+  }
+
+  test("no main-tree file other than ArtifactStore names the bucket column \"pb\"") {
+    assert(filesWhoseCode(_.contains("\"pb\"")) === Set("ArtifactStore"))
   }
 
   test("no main-tree file reads GRAFT_NO_REWRITE or GRAFT_STAGE_DETAIL") {

@@ -88,7 +88,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(f => f.isDirectory && !f.getName.startsWith("."))
       .foreach(backdate(_, old))
     // reader thread keeps fetching through the cached manifest while
-    // the main thread triggers builds (each diskMemoDir call sweeps)
+    // the main thread triggers builds (each AnnStore.landRead call sweeps)
     @volatile var readerFailure: Option[Throwable] = None
     val reader = new Thread(() => {
       try {
@@ -151,7 +151,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       wrongVerAged, wrongVerStale, srcGone, wrongFp, current, freshTmp,
       agedTmp)
     try {
-      // any diskMemoDir call runs the sweep with the real policy
+      // any AnnStore.landRead call runs the sweep with the real policy
       Similarity.pqCodebooks(spark, dir).collect()
       assert(noSidecarFresh.exists(),
         "fresh sidecar-less entry was swept inside its grace window")
@@ -196,7 +196,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("withManifestRetry retries exactly once on a manifest death and " +
        "propagates everything else") {
     var calls = 0
-    val out = Similarity.withManifestRetry(spark) {
+    val out = graft.sources.ArtifactStore.withManifestRetry(spark) {
       calls += 1
       if (calls == 1)
         throw new org.apache.spark.SparkException(
@@ -206,7 +206,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out === 42 && calls === 2)
     // the FAILED_READ_FILE error-class shape retries too
     var calls2 = 0
-    val out2 = Similarity.withManifestRetry(spark) {
+    val out2 = graft.sources.ArtifactStore.withManifestRetry(spark) {
       calls2 += 1
       if (calls2 == 1)
         throw new RuntimeException(
@@ -218,7 +218,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // just the cache)
     var calls3 = 0
     intercept[java.io.FileNotFoundException] {
-      Similarity.withManifestRetry(spark) {
+      graft.sources.ArtifactStore.withManifestRetry(spark) {
         calls3 += 1
         throw new java.io.FileNotFoundException("part-00000")
       }
@@ -227,7 +227,7 @@ class ArtifactStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a non-manifest failure never retries
     var calls4 = 0
     intercept[IllegalStateException] {
-      Similarity.withManifestRetry(spark) {
+      graft.sources.ArtifactStore.withManifestRetry(spark) {
         calls4 += 1
         throw new IllegalStateException("unrelated")
       }

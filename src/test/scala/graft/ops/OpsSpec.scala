@@ -1744,11 +1744,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("PQ index artifacts persist on disk: repeat calls read, never retrain") {
-    // build-index/query-index split, now CROSS-PROCESS (diskMemo): the
-    // first call trains and publishes a parquet artifact; every later
-    // call — this session or a fresh JVM — must read that artifact
-    // without rewriting it. Witness: the artifact tree's newest DATA
-    // mtime is unchanged across a repeat call (a retrain would
+    // build-index/query-index split, now CROSS-PROCESS
+    // (AnnStore.landRead): the first call trains and publishes a parquet
+    // artifact; every later call — this session or a fresh JVM — must
+    // read that artifact without rewriting it. Witness: the artifact
+    // tree's newest DATA mtime is unchanged across a repeat call (a retrain would
     // republish). `_SUCCESS` is excluded: reuse deliberately touches it
     // as the lease renewal (r13 lifecycle fix) — a lease touch is not a
     // republish, and the part files + `_SOURCE` generation marker must
